@@ -20,8 +20,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pipelinewise_spark.caching import release_caches  # noqa: E402
 from pipelinewise_spark.queries import ORACLES, QUERIES  # noqa: E402
+from pipelinewise_spark.session import RUNTIME_CONF  # noqa: E402
 
 
+_HADOOP_PREFIX = "spark.hadoop."
 _warned_conf_keys: set[str] = set()
 
 
@@ -58,60 +60,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             release_caches(spark)
-            # The driver runs these under a VANILLA session. Spark 4.1's
-            # checkpoint-file checksums leak their file-manager threads
-            # after every bounded stream run (session.py documents the
-            # measurement); disable before any streaming fixture starts
-            # so a 50-query sweep doesn't accumulate hundreds of dead
-            # threads. Runtime-settable SQL conf; harmless when unused.
-            try:
-                spark.conf.set(
-                    "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-                    "false",
-                )
-            except Exception:
-                pass  # older Spark without the conf
-            # Same-session equivalents of session.py's write/AQE
-            # optimization defaults (r13): size-first AQE coalescing so
-            # KB-scale shuffles stop scheduling core-count empty tasks,
-            # and the v2 output committer (single rename per task; the
-            # engine's snapshot dirs are published atomically by their
-            # own pointer/manifest write, so v1's double rename and the
-            # _SUCCESS marker buy nothing). All three are runtime- or
-            # hadoopConf-settable, value-neutral, and scale-adaptive
-            # (advisory size caps partition bytes; production raises it
-            # via SPARK_GRAFT_ADVISORY_MB).
-            # Each setting gets its own narrow guard so one unsupported
-            # key can't silently skip the rest (ADVICE r13); a skipped
-            # setting is logged once per process.
-            sql_confs = {
-                "spark.sql.adaptive.coalescePartitions."
-                "parallelismFirst": "false",
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes": (
-                    os.environ.get("SPARK_GRAFT_ADVISORY_MB", "8") + "m"
-                ),
-            }
-            for key, val in sql_confs.items():
+            # Callers may run these under a VANILLA session: apply the
+            # engine's runtime-settable defaults (session.py RUNTIME_CONF)
+            # before any streaming fixture starts. Each setting gets its
+            # own narrow guard so one unsupported key can't silently skip
+            # the rest; a skipped setting is logged once per process.
+            hadoop_conf = None
+            for key, val in RUNTIME_CONF.items():
                 try:
-                    spark.conf.set(key, val)
+                    if key.startswith(_HADOOP_PREFIX):
+                        if hadoop_conf is None:
+                            hadoop_conf = (
+                                spark.sparkContext._jsc.hadoopConfiguration()
+                            )
+                        hadoop_conf.set(key[len(_HADOOP_PREFIX):], val)
+                    else:
+                        spark.conf.set(key, val)
                 except Exception as exc:
                     _warn_conf_skip(key, exc)
-            try:
-                hc = spark.sparkContext._jsc.hadoopConfiguration()
-            except Exception as exc:
-                _warn_conf_skip("hadoopConfiguration", exc)
-            else:
-                for key, val in (
-                    ("mapreduce.fileoutputcommitter.algorithm.version", "2"),
-                    (
-                        "mapreduce.fileoutputcommitter.marksuccessfuljobs",
-                        "false",
-                    ),
-                ):
-                    try:
-                        hc.set(key, val)
-                    except Exception as exc:
-                        _warn_conf_skip(key, exc)
             return fn(spark, sf_dir)
 
         return run

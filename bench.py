@@ -387,7 +387,11 @@ def main() -> None:
     # state, listener backlog, and broadcast cleanup all live there, and a
     # GC-bound driver drags every query measured late in the run
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark("pipelinewise-spark-bench")
+    # no console progress bars: they interleave with the one-line JSON
+    spark = get_spark(
+        "pipelinewise-spark-bench",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     # session warm-up (untimed): JVM/codegen/scan-infra initialization and

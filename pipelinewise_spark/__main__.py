@@ -919,10 +919,7 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
     bm = BookmarkStore(args.state) if args.state else None
     pk_required = not args.no_pk_required
     if args.tail:
-        from pipelinewise_spark.operators.manifest_table import (
-            ManifestTable,
-        )
-        from pipelinewise_spark.operators.table import ParquetTable
+        from pipelinewise_spark.sources.singer import _table_class
         from pipelinewise_spark.streaming.singer import sync_capture_dir
 
         if not args.checkpoint:
@@ -934,10 +931,7 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
             primary_key_required=pk_required, bookmarks=bm,
             target_format=args.target_format,
         )
-        tbl = (
-            ManifestTable if args.target_format == "mor"
-            else ParquetTable
-        )
+        tbl = _table_class(args.target_format)
 
         def _count(stream: str) -> int:
             # a SCHEMA-only stream (no records yet) has no table

@@ -27,9 +27,9 @@ Both steps publish through the table's atomic snapshot swap, so readers
 see view versions consistent with base versions. Out-of-order protection:
 change batches are last-wins deduped on their own key before applying.
 
-Publish cost (the 100 TB concern): with a plain ParquetTable view, every
-batch rewrites the whole view (merge_upsert over the full view +
-overwrite) — batch-sized delta math, view-sized publish. Passing a
+Publish cost (the 100 TB concern): every step is one PK MERGE into the
+view; with a plain ParquetTable view that MERGE rewrites the whole view —
+batch-sized delta math, view-sized publish. Passing a
 ``ManifestTable`` view plus ``num_buckets`` switches publishing to the
 partition-pruned MERGE: the view is hash-bucketed on the fact PK
 (``__view_bucket = pmod(xxhash64(pk), num_buckets)``), every maintenance
@@ -48,7 +48,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
-from pipelinewise_spark.operators.merge import merge_upsert
 from pipelinewise_spark.operators.sdc import SDC_DELETED_AT
 from pipelinewise_spark.streaming.cdc import OP_COL, SEQ_COL
 
@@ -139,38 +138,23 @@ class IncrementalJoinView:
     ) -> None:
         """Apply one maintenance step: PK-keyed upserts + PK-keyed deletes.
 
-        ManifestTable + num_buckets: ONE partition-pruned MERGE — upsert
-        rows and tombstoned delete rows share a batch bucketed on the fact
-        PK, so only touched buckets are rewritten and untouched files carry
-        over by manifest reference (ManifestTable.merge). Fallback (plain
-        ParquetTable): full-view merge + anti-join + overwrite — correct,
-        but O(view) per batch; fine for small views and tests.
+        ONE MERGE: upsert rows and tombstoned delete rows share a batch, so
+        the view's ``merge(hard_delete=True)`` drops the deleted PKs. With
+        ``num_buckets`` the batch is bucketed on the fact PK, so only
+        touched buckets are rewritten and untouched files carry over by
+        manifest reference (ManifestTable.merge).
         """
-        if self._pruned_publish:
-            live = upserts.withColumn(
-                SDC_DELETED_AT, F.lit(None).cast("timestamp")
-            )
-            dead = delete_pks.select(self.fact_pk).withColumn(
-                SDC_DELETED_AT,
-                F.to_timestamp(F.lit("2000-01-01 00:00:00")),
-            )
-            batch = self._bucket(
-                live.unionByName(dead, allowMissingColumns=True)
-            )
-            self.view_table.merge(
-                spark, batch, [self.fact_pk], hard_delete=True
-            )
-            return
-        view = self.view_table.read(spark)
-        merged = merge_upsert(view, upserts, [self.fact_pk])
-        merged = merged.join(
-            F.broadcast(delete_pks.select(self.fact_pk)),
-            self.fact_pk,
-            "left_anti",
+        live = upserts.withColumn(
+            SDC_DELETED_AT, F.lit(None).cast("timestamp")
         )
-        # count-less PK repartition: AQE sizes the rewrite, so the view
-        # lands as few right-sized files per batch (write-shape rule)
-        self.view_table.overwrite(merged.repartition(F.col(self.fact_pk)))
+        dead = delete_pks.select(self.fact_pk).withColumn(
+            SDC_DELETED_AT,
+            F.to_timestamp(F.lit("2000-01-01 00:00:00")),
+        )
+        batch = live.unionByName(dead, allowMissingColumns=True)
+        if self._pruned_publish:
+            batch = self._bucket(batch)
+        self.view_table.merge(spark, batch, [self.fact_pk], hard_delete=True)
 
     # ------------------------------------------------------------- deltas
 

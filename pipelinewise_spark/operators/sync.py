@@ -107,18 +107,11 @@ def incremental_sync(
 
     if not table.exists():
         table.overwrite(batch)
-    elif spec.primary_keys and hasattr(table, "merge"):
-        # Scale path: a manifest/partitioned target merges only the
-        # partitions the batch touches — a 0.1 % batch must NOT read and
-        # rewrite 100 % of a 100 TB table. Untouched files carry over by
-        # reference in the new snapshot.
-        table.merge(spark, batch, spec.primary_keys, hard_delete=spec.hard_delete)
     elif spec.primary_keys:
-        merged = merge_upsert(
-            table.read(spark), batch, spec.primary_keys,
-            hard_delete=spec.hard_delete,
-        )
-        table.overwrite(merged)
+        # a manifest/partitioned target merges only the partitions the
+        # batch touches — a 0.1 % batch must NOT rewrite 100 % of a 100 TB
+        # table; a ParquetTable rewrites itself copy-on-write
+        table.merge(spark, batch, spec.primary_keys, hard_delete=spec.hard_delete)
     else:
         table.overwrite(append_only(table.read(spark), batch))
 
@@ -151,10 +144,10 @@ def partial_sync(
     if not key:
         raise ValueError(f"{spec.tap_stream_id}: partial sync needs replication_key")
     dtype = source_df.schema[key].dataType
-    cond = F.col(key) >= F.lit(start_value).cast(dtype)
+    in_range = F.col(key) >= F.lit(start_value).cast(dtype)
     if end_value is not None:
-        cond = cond & (F.col(key) <= F.lit(end_value).cast(dtype))
-    batch = prepare_batch(source_df.filter(cond), spec,
+        in_range = in_range & (F.col(key) <= F.lit(end_value).cast(dtype))
+    batch = prepare_batch(source_df.filter(in_range), spec,
                           extracted_at=extracted_at, batched_at=batched_at)
 
     if not table.exists():
@@ -162,22 +155,13 @@ def partial_sync(
         return table.read(spark)
 
     target = table.read(spark)
-    if spec.hard_delete:
-        # rows inside the range disappear unless re-asserted by the batch
-        tcond = F.col(key) >= F.lit(start_value).cast(dtype)
-        if end_value is not None:
-            tcond = tcond & (F.col(key) <= F.lit(end_value).cast(dtype))
-        target = target.filter(~tcond)
-        merged = append_only(target, batch)
-    elif spec.primary_keys:
+    if spec.primary_keys and not spec.hard_delete:
         merged = merge_upsert(target, batch, spec.primary_keys)
     else:
-        # PK-less stream: the range-resync contract still applies — replace
-        # the range wholesale (delete-range-then-append), same as hard_delete
-        # but without tombstone semantics.
-        tcond = F.col(key) >= F.lit(start_value).cast(dtype)
-        if end_value is not None:
-            tcond = tcond & (F.col(key) <= F.lit(end_value).cast(dtype))
-        merged = append_only(target.filter(~tcond), batch)
+        # hard_delete: rows inside the range disappear unless re-asserted
+        # by the batch. A PK-less stream keeps the range-resync contract
+        # the same way — replace the range wholesale (delete-range-then-
+        # append), without tombstone semantics.
+        merged = append_only(target.filter(~in_range), batch)
     table.overwrite(merged)
     return table.read(spark)

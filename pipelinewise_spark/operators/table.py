@@ -22,9 +22,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pipelinewise_spark.operators.merge import merge_upsert
 
 _VERSION_FILE = "_VERSION"
 
@@ -131,6 +135,27 @@ class ParquetTable:
         else:
             self._schema_cache = {snap: _as_nullable(df.schema)}
         return snap
+
+    def merge(
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        primary_keys: Sequence[str],
+        hard_delete: bool = False,
+        guard_col: str | None = None,
+    ) -> None:
+        """Copy-on-write PK MERGE (``ManifestTable.merge``'s contract):
+        the whole table is read, merged with the batch and republished.
+
+        The count-less PK repartition lets AQE size the rewrite by bytes,
+        so the table lands as few right-sized files per merge instead of
+        shuffle-partition-many tiny ones that every later merge re-lists
+        (the write-shape rule)."""
+        merged = merge_upsert(
+            self.read(spark), batch, primary_keys,
+            hard_delete=hard_delete, guard_col=guard_col,
+        )
+        self.overwrite(merged.repartition(*[F.col(c) for c in primary_keys]))
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop all but the newest ``keep`` snapshots (old readers beware)."""

@@ -10,16 +10,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Defaults chosen for a local[32] dev box; on a real cluster the same knobs
-#: scale by overriding via ``extra_conf`` (e.g. shuffle partitions ≈ 2-3× total
-#: cores, maxPartitionBytes 128-256 MB). AQE re-coalesces at runtime either way.
-_DEFAULT_CONF = {
-    # deterministic timestamps across engines (DuckDB oracle is tz-naive UTC)
-    "spark.sql.session.timeZone": "UTC",
-    # AQE: runtime shuffle-partition coalescing, skew-join splitting
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
+#: Defaults that are settable on a RUNNING session (SQL confs via
+#: ``spark.conf.set``; ``spark.hadoop.*`` keys, prefix stripped, via the
+#: Hadoop configuration). ``get_spark`` bakes them in at build time; a
+#: session built elsewhere (a plain ``SparkSession.builder`` session) gets
+#: the same values applied per query by ``__spark_entry__.py``. All are
+#: value-neutral.
+RUNTIME_CONF = {
     # Coalesce by TARGET SIZE, not core count (the Spark docs' own
     # production recommendation): with the default parallelismFirst=true
     # AQE refuses to coalesce below defaultParallelism, so every
@@ -35,16 +32,6 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": (
         os.environ.get("SPARK_GRAFT_ADVISORY_MB", "8") + "m"
     ),
-    # NOT set (r14, measured): excluding InferFiltersFromGenerate. The
-    # rule adds `size(e) > 0 AND isnotnull(e)` below explode(e) and
-    # pushdown substitutes the full expression into the scan filter,
-    # re-evaluating computed token/shingle arrays 2x per row at the scan.
-    # A plan-diff scan found 12 affected queries, but the interleaved A/B
-    # over all of them geomeaned 0.99 (0.89-1.08 both directions) — the
-    # duplicate evaluation parallelizes in wide scan stages and is noise
-    # at bench scale. The one confirmed blowup (a single-task scan stage
-    # BELOW the widening exchange) was extend_lsh_index, fixed locally by
-    # pinning the shingle frame (functions/dedup.py).
     # Output-commit cost: v1 commits rename every task's output TWICE
     # (task dir -> job attempt dir -> destination), serially on the
     # driver; v2 renames once at task commit. Engine writes land in
@@ -57,6 +44,38 @@ _DEFAULT_CONF = {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs":
         "false",
+    # Spark 4.1's checkpoint-file checksums leave their
+    # ChecksumCheckpointFileManager threads alive after a streaming query
+    # stops (~40 threads per bounded run, measured): a long multi-query
+    # session accumulates hundreds of dead-pool threads and every
+    # subsequent query slows ~2x under the scheduler/GC-root load. The
+    # checksums also add one sidecar write per checkpoint commit. Engine
+    # default is OFF — bounded fixture streams re-run from source on
+    # corruption; durability-critical deployments can re-enable per
+    # session (the sidecars are additive and ignored when off).
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+}
+
+#: Defaults chosen for a local[32] dev box; on a real cluster the same knobs
+#: scale by overriding via ``extra_conf`` (e.g. shuffle partitions ≈ 2-3× total
+#: cores, maxPartitionBytes 128-256 MB). AQE re-coalesces at runtime either way.
+_DEFAULT_CONF = {
+    # deterministic timestamps across engines (DuckDB oracle is tz-naive UTC)
+    "spark.sql.session.timeZone": "UTC",
+    # AQE: runtime shuffle-partition coalescing, skew-join splitting
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # NOT set (r14, measured): excluding InferFiltersFromGenerate. The
+    # rule adds `size(e) > 0 AND isnotnull(e)` below explode(e) and
+    # pushdown substitutes the full expression into the scan filter,
+    # re-evaluating computed token/shingle arrays 2x per row at the scan.
+    # A plan-diff scan found 12 affected queries, but the interleaved A/B
+    # over all of them geomeaned 0.99 (0.89-1.08 both directions) — the
+    # duplicate evaluation parallelizes in wide scan stages and is noise
+    # at bench scale. The one confirmed blowup (a single-task scan stage
+    # BELOW the widening exchange) was extend_lsh_index, fixed locally by
+    # pinning the shingle frame (functions/dedup.py).
     # a local[32] box: keep shuffles wide enough to parallelize, small enough
     # to avoid tiny-task overhead at sf<=0.1
     "spark.sql.shuffle.partitions": "32",
@@ -70,16 +89,7 @@ _DEFAULT_CONF = {
     # tolerate TIMESTAMP(NANOS) parquet (read as long; sources convert to µs)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # Spark 4.1's checkpoint-file checksums leave their
-    # ChecksumCheckpointFileManager threads alive after a streaming query
-    # stops (~40 threads per bounded run, measured): a long multi-query
-    # session accumulates hundreds of dead-pool threads and every
-    # subsequent query slows ~2x under the scheduler/GC-root load. The
-    # checksums also add one sidecar write per checkpoint commit. Engine
-    # default is OFF — bounded fixture streams re-run from source on
-    # corruption; durability-critical deployments can re-enable per
-    # session (the sidecars are additive and ignored when off).
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+    **RUNTIME_CONF,
     # quieter local runs
     "spark.ui.enabled": "false",
     # the status store tracks jobs/stages/executions even with the UI off;

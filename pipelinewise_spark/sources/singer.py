@@ -272,21 +272,68 @@ def _mor_aligned(spark, table, batch: DataFrame) -> DataFrame | None:
     return batch.select(*[f.name for f in live])
 
 
-def _merge_into(
+def _table_class(target_format: str) -> type:
+    """The table class a Singer face writes for ``target_format``:
+    ``"parquet"`` → ParquetTable (copy-on-write flushes), ``"mor"`` →
+    ManifestTable (merge-on-read flushes, see :func:`_write_pk_segment`)."""
+    if target_format == "parquet":
+        from pipelinewise_spark.operators.table import ParquetTable
+
+        return ParquetTable
+    if target_format == "mor":
+        from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+        return ManifestTable
+    raise ValueError(
+        f"unknown target_format {target_format!r} — "
+        "expected 'parquet' or 'mor'"
+    )
+
+
+def _is_mor(table) -> bool:
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+    return isinstance(table, ManifestTable)
+
+
+def _write_pk_segment(
     spark,
     table,
     batch: DataFrame,
     pks: list[str],
     version_suffix: str | None = None,
+    guard_col: str | None = None,
 ) -> None:
+    """Land one PK-deduped batch: create the table if missing; on a MOR
+    table whose live schema the batch matches, a merge-on-read delta
+    (superseded rows deletion-vectored, the batch appended as new
+    files); otherwise one copy-on-write MERGE over the
+    ``version_column``-evolved target. ``guard_col`` is the staleness
+    guard of both paths."""
     from pipelinewise_spark.operators.merge import merge_upsert
 
-    if table.exists():
-        target = _evolved_target(spark, table, batch, pks, version_suffix)
-        merged = merge_upsert(target, batch, pks)
+    if not table.exists():
+        table.overwrite(batch)
+        return
+    aligned = _mor_aligned(spark, table, batch) if _is_mor(table) else None
+    if aligned is not None:
+        table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
+        return
+    target = _evolved_target(spark, table, batch, pks, version_suffix)
+    table.overwrite(merge_upsert(target, batch, pks, guard_col=guard_col))
+
+
+def _purge_older_versions(spark, table, version: int) -> None:
+    """ACTIVATE_VERSION on a landed table: rows of older versions leave
+    it — an answer-sized ``delete_where`` on a MOR table, a copy-on-write
+    rewrite otherwise."""
+    if not table.exists():
+        return
+    if _is_mor(table):
+        v = F.col(SDC_TABLE_VERSION)
+        table.delete_where(spark, v.isNotNull() & (v < version))
     else:
-        merged = batch
-    table.overwrite(merged)
+        table.overwrite(_apply_activate(table.read(spark), version))
 
 
 def load_capture(
@@ -322,20 +369,9 @@ def load_capture(
     copy-on-write evolution rewrite, exactly like the replay and
     tail-follow faces.
     """
-    from pipelinewise_spark.operators.table import ParquetTable
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    if target_format not in ("parquet", "mor"):
-        raise ValueError(
-            f"unknown target_format {target_format!r} — "
-            "expected 'parquet' or 'mor'"
-        )
-    mor = target_format == "mor"
-    if mor:
-        from pipelinewise_spark.operators.manifest_table import (
-            ManifestTable,
-        )
-
+    table_cls = _table_class(target_format)
     # states="last": a CDC tap emits a STATE every few records — the
     # bulk load consumes only the final one, so the full STATE stream
     # never reaches the driver
@@ -359,14 +395,10 @@ def load_capture(
         batch = (
             _last_wins(recs, pks) if pks else recs
         ).drop("lineno")
-        table = (
-            ManifestTable(f"{target_root}/{stream}")
-            if mor
-            else ParquetTable(f"{target_root}/{stream}")
-        )
+        table = table_cls(f"{target_root}/{stream}")
         aligned = (
             _mor_aligned(spark, table, batch)
-            if mor and table.exists()
+            if _is_mor(table) and table.exists()
             else None
         )
         if aligned is not None:
@@ -377,11 +409,7 @@ def load_capture(
             else:
                 table.append(aligned)
             if stream in activations:
-                v = F.col(SDC_TABLE_VERSION)
-                table.delete_where(
-                    spark,
-                    v.isNotNull() & (v < activations[stream]),
-                )
+                _purge_older_versions(spark, table, activations[stream])
             out[stream] = table
             continue
         if pks:
@@ -665,26 +693,14 @@ def replay_capture(
     ``max_records=None`` to lift the refusal (memory stays bounded by
     the chunking either way).
     """
-    from pipelinewise_spark.operators.table import ParquetTable
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    if target_format not in ("parquet", "mor"):
-        raise ValueError(
-            f"unknown target_format {target_format!r} — "
-            "expected 'parquet' or 'mor'"
-        )
-    mor = target_format == "mor"
-    if mor:
-        from pipelinewise_spark.operators.manifest_table import (
-            ManifestTable,
-        )
+    table_cls = _table_class(target_format)
 
-    def _new_table(stream: str):
-        return (
-            ManifestTable(f"{target_root}/{stream}")
-            if mor
-            else ParquetTable(f"{target_root}/{stream}")
-        )
+    def _table(stream: str):
+        if stream not in tables:
+            tables[stream] = table_cls(f"{target_root}/{stream}")
+        return tables[stream]
 
     if max_records is not None:
         n_rec = (
@@ -765,24 +781,11 @@ def replay_capture(
             ),
             plan.key_properties[stream],
         ).drop("lineno")
-        table = tables.setdefault(stream, _new_table(stream))
-        aligned = (
-            _mor_aligned(spark, table, batch)
-            if mor and table.exists()
-            else None
+        # replay is ordered, so an unguarded MOR supersede IS last-wins
+        _write_pk_segment(
+            spark, _table(stream), batch, plan.key_properties[stream],
+            version_suffix,
         )
-        if aligned is not None:
-            # delta-bound flush: superseded rows deletion-vectored,
-            # the batch appended as new files — replay is ordered, so
-            # the unconditional supersede IS last-wins
-            table.merge_on_read(
-                spark, aligned, plan.key_properties[stream]
-            )
-        else:
-            _merge_into(
-                spark, table, batch, plan.key_properties[stream],
-                version_suffix,
-            )
         buffers[stream] = {}
         n_flushes += 1
         if final:
@@ -830,22 +833,9 @@ def replay_capture(
                 stream = payload["stream"]
                 if buffers.get(stream):
                     flush(stream, max(buffers[stream].values()))
-                table = tables.setdefault(stream, _new_table(stream))
-                if table.exists():
-                    if mor:
-                        v = F.col(SDC_TABLE_VERSION)
-                        table.delete_where(
-                            spark,
-                            v.isNotNull()
-                            & (v < int(payload["version"])),
-                        )
-                    else:
-                        table.overwrite(
-                            _apply_activate(
-                                table.read(spark),
-                                int(payload["version"]),
-                            )
-                        )
+                _purge_older_versions(
+                    spark, _table(stream), int(payload["version"])
+                )
         # EOF: flush every stream with pending rows, then adopt the
         # candidate state wholesale (__init__.py:330-337, 411-413)
         had_pending = pending_total() > 0

@@ -23,14 +23,12 @@ checkpoint-monotonic, so the merge is idempotent under replay.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
-from pipelinewise_spark.operators.merge import merge_upsert
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.sdc import (
     SDC_BATCHED_AT,
     SDC_DELETED_AT,
@@ -93,30 +91,37 @@ def prepare_change_batch(
 
 
 def apply_change_batch(
-    table: ParquetTable,
+    table: ParquetTable | ManifestTable,
     batch: DataFrame,
     spec: StreamSpec,
     prededuped: bool = False,
 ) -> None:
-    """Merge one micro-batch of change events into the target table."""
+    """Merge one micro-batch of change events into the target table.
+
+    ``spec.options["merge_strategy"] == "merge_on_read"`` lands the batch
+    as a merge-on-read delta (ManifestTable only); otherwise the table's
+    copy-on-write ``merge`` runs, guarded on the persisted sequence."""
     spark = batch.sparkSession
     prepared = prepare_change_batch(batch, spec, prededuped=prededuped)
-    # count-less PK repartition before full-table rewrites: AQE sizes the
-    # shuffle by bytes so the PK-sized state lands as few right-sized
-    # files per batch instead of shuffle-partition-many tiny ones that
-    # every later micro-batch re-lists (write-shape rule; scd.py twin)
-    pk = [F.col(c) for c in spec.primary_keys]
+    mor = spec.options.get("merge_strategy") == "merge_on_read"
+    if mor and not isinstance(table, ManifestTable):
+        raise ValueError(
+            f"{spec.tap_stream_id}: merge_strategy 'merge_on_read' needs a "
+            f"ManifestTable target, got {type(table).__name__}"
+        )
     if not table.exists():
-        merged = (
+        created = (
             prepared.filter(F.col(SDC_DELETED_AT).isNull())
             if spec.hard_delete
             else prepared
         )
-        table.overwrite(merged.repartition(*pk))
-    elif (
-        spec.options.get("merge_strategy") == "merge_on_read"
-        and hasattr(table, "merge_on_read")
-    ):
+        # count-less PK repartition: AQE sizes the shuffle by bytes, so the
+        # PK-sized state lands as few right-sized files instead of
+        # shuffle-partition-many tiny ones (write-shape rule; scd.py twin)
+        table.overwrite(
+            created.repartition(*[F.col(c) for c in spec.primary_keys])
+        )
+    elif mor:
         # Iceberg-v2 path: the micro-batch appends as new files and
         # supersedes old rows by position-delete sidecar — O(batch) write
         # cost even when the batch's keys touch every partition (the
@@ -126,8 +131,8 @@ def apply_change_batch(
             spark, prepared, spec.primary_keys,
             guard_col=SDC_SEQ_COL, hard_delete=spec.hard_delete,
         )
-    elif hasattr(table, "merge"):
-        # Scale path (ManifestTable): merge only the partitions this
+    else:
+        # A partitioned ManifestTable merges only the partitions this
         # micro-batch touches; untouched files carry over by reference.
         # Constraint: partition columns must be immutable per PK (an update
         # that moves a row across partitions would strand the old copy) —
@@ -136,12 +141,6 @@ def apply_change_batch(
             spark, prepared, spec.primary_keys,
             hard_delete=spec.hard_delete, guard_col=SDC_SEQ_COL,
         )
-    else:
-        merged = merge_upsert(
-            table.read(spark), prepared, spec.primary_keys,
-            hard_delete=spec.hard_delete, guard_col=SDC_SEQ_COL,
-        )
-        table.overwrite(merged.repartition(*pk))
 
 
 def run_cdc_stream(
@@ -149,7 +148,7 @@ def run_cdc_stream(
     events_path: str,
     payload_schema: T.StructType,
     spec: StreamSpec,
-    table: ParquetTable,
+    table: ParquetTable | ManifestTable,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     state=None,
@@ -172,36 +171,29 @@ def run_cdc_stream(
     stream = reader.load(events_path)
 
     def _on_batch(batch: DataFrame, epoch: int) -> None:
-        pinned = None
-        if rollup is not None and os.environ.get(
-            "PWS_CDC_SHARED_DEDUPE", "1"
-        ) != "0":
-            # with a rollup attached the batch feeds TWO consumers — the
-            # fold's publish action and the merge's write action — and each
-            # would re-run the source parse AND the last-wins window.
-            # Dedupe once, pin the batch-sized result for the epoch (the
-            # same batch-pin rule as ManifestTable.merge_on_read), consume
-            # it twice. Dedupe is idempotent, so results are unchanged.
-            batch = last_wins_dedupe(
+        if rollup is None:
+            apply_change_batch(table, batch, spec)
+        else:
+            # the batch feeds TWO consumers — the fold's publish action and
+            # the merge's write action — and each would re-run the source
+            # parse AND the last-wins window. Dedupe once, pin the
+            # batch-sized result for the epoch (the same batch-pin rule as
+            # ManifestTable.merge_on_read), consume it twice.
+            deduped = last_wins_dedupe(
                 batch, spec.primary_keys, SEQ_COL
             ).persist()
-            pinned = batch
-        try:
-            if rollup is not None:
-                # maintained aggregate folds the batch against the PRE-merge
-                # target state (streaming/mv.py) — must precede the merge;
-                # the epoch id makes the fold idempotent under checkpoint
-                # replay
+            try:
+                # maintained aggregate folds the batch against the
+                # PRE-merge target state (streaming/mv.py) — must precede
+                # the merge; the epoch id makes the fold idempotent under
+                # checkpoint replay
                 rollup.on_batch(
-                    spark, table, batch, spec.primary_keys, epoch=epoch,
-                    prededuped=pinned is not None,
+                    spark, table, deduped, spec.primary_keys, epoch=epoch,
+                    prededuped=True,
                 )
-            apply_change_batch(
-                table, batch, spec, prededuped=pinned is not None
-            )
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
+                apply_change_batch(table, deduped, spec, prededuped=True)
+            finally:
+                deduped.unpersist()
         if state is not None:
             # per-batch bookmark advance, write-throttled like the
             # reference's UPDATE_BOOKMARK_PERIOD / commit_interval_ms —

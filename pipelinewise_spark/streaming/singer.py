@@ -55,8 +55,12 @@ from pipelinewise_spark.sources.singer import (
     SDC_TABLE_VERSION,
     _apply_activate,
     _evolved_target,
+    _is_mor,
     _last_wins,
     _mor_aligned,
+    _purge_older_versions,
+    _table_class,
+    _write_pk_segment,
     record_payload_cols,
 )
 
@@ -183,21 +187,9 @@ def apply_capture_batch(
       ACTIVATE_VERSION purges via an answer-sized ``delete_where``;
       ``compact`` (the ManifestTable lever) converts accumulated read
       debt back into clean files on whatever cadence ops chooses."""
-    from pipelinewise_spark.operators.merge import merge_upsert
-    from pipelinewise_spark.operators.table import ParquetTable
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    if target_format not in ("parquet", "mor"):
-        raise ValueError(
-            f"unknown target_format {target_format!r} — "
-            "expected 'parquet' or 'mor'"
-        )
-    mor = target_format == "mor"
-    if mor:
-        from pipelinewise_spark.operators.manifest_table import (
-            ManifestTable,
-        )
-
+    table_cls = _table_class(target_format)
     lines = _sequenced_lines(batch).persist()
     try:
         ctl = (
@@ -306,11 +298,7 @@ def apply_capture_batch(
             boundaries.sort(key=lambda e: e[0])
             cur_schema = state.schemas.get(stream)
             cur_kp = state.key_properties.get(stream, [])
-            table = (
-                ManifestTable(f"{target_root}/{stream}")
-                if mor
-                else ParquetTable(f"{target_root}/{stream}")
-            )
+            table = table_cls(f"{target_root}/{stream}")
 
             def flush_segment(lo: str | None, hi: str | None) -> None:
                 if cur_schema is None:
@@ -321,77 +309,51 @@ def apply_capture_batch(
                     seg = _apply_activate(
                         seg, state.activations[stream]
                     )
-                pks = cur_kp
-                if pks:
-                    seg = _last_wins_by_seq(seg, pks)
-                    if seg.limit(1).count() == 0:
-                        return
-                    if not table.exists():
-                        table.overwrite(seg)
-                        return
-                    aligned = (
-                        _mor_aligned(spark, table, seg)
-                        if mor else None
+                if cur_kp:
+                    seg = _last_wins_by_seq(seg, cur_kp)
+                if seg.limit(1).count() == 0:
+                    return
+                if cur_kp:
+                    _write_pk_segment(
+                        spark, table, seg, cur_kp, version_suffix,
+                        guard_col=SDC_SEQUENCE,
                     )
-                    if aligned is not None:
-                        # delta-bound: superseded rows are deletion-
-                        # vectored, the batch appends as new files —
-                        # no partition rewrite, same sequence guard
-                        table.merge_on_read(
-                            spark, aligned, pks,
-                            guard_col=SDC_SEQUENCE,
+                    return
+                if not table.exists():
+                    table.overwrite(seg)
+                    return
+                aligned = (
+                    _mor_aligned(spark, table, seg)
+                    if _is_mor(table) else None
+                )
+                if aligned is not None:
+                    # idempotent append: anti-join on the batch's own
+                    # sequence window (footer stats prune the scan to
+                    # overlapping files)
+                    smin, smax = aligned.agg(
+                        F.min(SDC_SEQUENCE), F.max(SDC_SEQUENCE)
+                    ).first()
+                    prev = (
+                        table.read(spark)
+                        .select(SDC_SEQUENCE)
+                        .filter(
+                            (F.col(SDC_SEQUENCE) >= smin)
+                            & (F.col(SDC_SEQUENCE) <= smax)
                         )
-                        return
-                    target = _evolved_target(
-                        spark, table, seg, pks, version_suffix
                     )
-                    merged = merge_upsert(
-                        target, seg, pks, guard_col=SDC_SEQUENCE
-                    )
-                else:
-                    if seg.limit(1).count() == 0:
-                        return
-                    if not table.exists():
-                        table.overwrite(seg)
-                        return
-                    aligned = (
-                        _mor_aligned(spark, table, seg)
-                        if mor else None
-                    )
-                    if aligned is not None:
-                        # idempotent append: anti-join on the batch's
-                        # own sequence window (footer stats prune the
-                        # scan to overlapping files)
-                        seg = aligned
-                        smin, smax = seg.agg(
-                            F.min(SDC_SEQUENCE), F.max(SDC_SEQUENCE)
-                        ).first()
-                        prev = (
-                            table.read(spark)
-                            .select(SDC_SEQUENCE)
-                            .filter(
-                                (F.col(SDC_SEQUENCE) >= smin)
-                                & (F.col(SDC_SEQUENCE) <= smax)
-                            )
-                        )
-                        fresh = seg.join(
-                            prev, SDC_SEQUENCE, "left_anti"
-                        )
-                        if fresh.limit(1).count() > 0:
-                            table.append(fresh)
-                        return
-                    prev = _evolved_target(
-                        spark, table, seg, [], version_suffix
-                    )
-                    fresh = seg.join(
-                        prev.select(SDC_SEQUENCE),
-                        SDC_SEQUENCE,
-                        "left_anti",
-                    )
-                    merged = prev.unionByName(
-                        fresh, allowMissingColumns=True
-                    )
-                table.overwrite(merged)
+                    fresh = aligned.join(prev, SDC_SEQUENCE, "left_anti")
+                    if fresh.limit(1).count() > 0:
+                        table.append(fresh)
+                    return
+                prev = _evolved_target(
+                    spark, table, seg, [], version_suffix
+                )
+                fresh = seg.join(
+                    prev.select(SDC_SEQUENCE), SDC_SEQUENCE, "left_anti"
+                )
+                table.overwrite(
+                    prev.unionByName(fresh, allowMissingColumns=True)
+                )
 
             lo: str | None = None
             last_schema_seq: str | None = None
@@ -414,20 +376,7 @@ def apply_capture_batch(
                         # resurrect purged versions in later segments
                         continue
                     state.activations[stream] = v_new
-                    if table.exists():
-                        if mor:
-                            # answer-sized deletion vectors, no rewrite
-                            vc = F.col(SDC_TABLE_VERSION)
-                            table.delete_where(
-                                spark,
-                                vc.isNotNull() & (vc < v_new),
-                            )
-                        else:
-                            table.overwrite(
-                                _apply_activate(
-                                    table.read(spark), v_new
-                                )
-                            )
+                    _purge_older_versions(spark, table, v_new)
             flush_segment(lo, None)
             if cur_schema is not None:
                 # registry adoption is sequence-guarded (same rule as

@@ -1,16 +1,23 @@
 """ParquetTable: atomic publish, readers isolated from in-flight writes,
-vacuum, partition pruning."""
+vacuum, partition pruning; the ``merge`` contract both table classes
+share."""
 
 from __future__ import annotations
 
 import contextlib
+import datetime
 import io
 import os
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
+from pipelinewise_spark.operators.manifest_table import ManifestTable
+from pipelinewise_spark.operators.merge import merge_upsert
 from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.plans.spec import StreamSpec
+from pipelinewise_spark.streaming.cdc import apply_change_batch
 from pipelinewise_spark.sources.files import read_table
 
 
@@ -91,3 +98,78 @@ def test_schema_cache_partitioned_not_cached(spark, sf_dir, tmp_path):
         t.current_snapshot()
     ).schema
     assert t.read(spark).count() == 100
+
+
+# --------------------------------------------------------- merge contract
+_MERGE_SCHEMA = (
+    "id long, grp string, val double, _sdc_deleted_at timestamp, "
+    "_sdc_seq long"
+)
+_BASE = [
+    (1, "a", 1.0, None, 1), (2, "a", 2.0, None, 1),
+    (3, "b", 3.0, None, 1), (4, "b", 4.0, None, 5),
+]
+_GONE = datetime.datetime(2026, 1, 2)
+#: case -> (batch rows, merge kwargs, expected live (id, val) rows)
+_MERGE_CASES = {
+    "upsert": (
+        [(2, "a", 20.0, None, 2), (5, "b", 5.0, None, 2)], {},
+        [(1, 1.0), (2, 20.0), (3, 3.0), (4, 4.0), (5, 5.0)],
+    ),
+    "soft_delete": (
+        [(1, "a", 1.0, _GONE, 2)], {},
+        [(2, 2.0), (3, 3.0), (4, 4.0)],
+    ),
+    "hard_delete": (
+        [(1, "a", 1.0, _GONE, 2), (3, "b", 30.0, None, 2)],
+        {"hard_delete": True},
+        [(2, 2.0), (3, 30.0), (4, 4.0)],
+    ),
+    # id=4's target row is at seq 5: the seq-3 replay must not roll it back
+    "stale_replay": (
+        [(4, "b", -4.0, None, 3), (3, "b", 33.0, None, 3)],
+        {"guard_col": "_sdc_seq"},
+        [(1, 1.0), (2, 2.0), (3, 33.0), (4, 4.0)],
+    ),
+}
+_MERGE_TABLES = {
+    "parquet": ParquetTable,
+    "manifest": ManifestTable,
+    "manifest_partitioned": lambda root: ManifestTable(root, ["grp"]),
+}
+
+
+def _merge_rows(df):
+    cols = [f.name for f in T._parse_datatype_string(_MERGE_SCHEMA).fields]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("case", sorted(_MERGE_CASES))
+@pytest.mark.parametrize("kind", sorted(_MERGE_TABLES))
+def test_merge_contract_matches_merge_upsert(spark, tmp_path, kind, case):
+    """Both table classes expose one ``merge`` verb with one contract:
+    the published table equals ``merge_upsert`` over the same frames."""
+    rows, kwargs, live = _MERGE_CASES[case]
+    base = spark.createDataFrame(_BASE, _MERGE_SCHEMA)
+    batch = spark.createDataFrame(rows, _MERGE_SCHEMA)
+    t = _MERGE_TABLES[kind](os.path.join(str(tmp_path), "t"))
+    t.overwrite(base)
+    t.merge(spark, batch, ["id"], **kwargs)
+    got = _merge_rows(t.read(spark))
+    assert got == _merge_rows(merge_upsert(base, batch, ["id"], **kwargs))
+    assert sorted((r[0], r[2]) for r in got if r[3] is None) == live
+
+
+def test_merge_on_read_strategy_needs_manifest_table(spark, tmp_path):
+    spec = StreamSpec(
+        tap_stream_id="t", primary_keys=["id"],
+        options={"merge_strategy": "merge_on_read"},
+    )
+    batch = spark.createDataFrame(
+        [("c", 1, "2026-01-02", 1, 1.0)],
+        "_op string, _seq long, _event_ts string, id long, val double",
+    )
+    t = ParquetTable(os.path.join(str(tmp_path), "t"))
+    with pytest.raises(ValueError, match="merge_strategy"):
+        apply_change_batch(t, batch, spec)
+    assert not t.exists()

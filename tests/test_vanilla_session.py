@@ -157,3 +157,30 @@ def hostile_spark(spark):
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_query_exact_under_hostile_session_confs(hostile_spark, sf_dir, name):
     compare(hostile_spark, name, QUERIES[name], ORACLES[name], sf_dir)
+
+
+def test_entry_applies_runtime_conf(spark, monkeypatch):
+    """Every ``session.RUNTIME_CONF`` key reaches a session that did not
+    come from ``get_spark``: SQL confs through ``spark.conf``, the
+    ``spark.hadoop.*`` keys through the Hadoop configuration."""
+    import __spark_entry__ as entry
+    from pipelinewise_spark.session import RUNTIME_CONF
+
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    sql_keys = [k for k in RUNTIME_CONF if not k.startswith("spark.hadoop.")]
+    hadoop_keys = [
+        k[len("spark.hadoop."):] for k in RUNTIME_CONF
+        if k.startswith("spark.hadoop.")
+    ]
+    assert sql_keys and hadoop_keys
+    # flip every key away from the engine value, as a vanilla session has it
+    for k in sql_keys:
+        spark.conf.unset(k)
+    for k in hadoop_keys:
+        hadoop.unset(k)
+    monkeypatch.setattr(entry, "QUERIES", {"probe": lambda s, sf: s.range(1)})
+    entry.queries()["probe"](spark, "")
+    for k in sql_keys:
+        assert spark.conf.get(k) == RUNTIME_CONF[k], k
+    for k in hadoop_keys:
+        assert hadoop.get(k) == RUNTIME_CONF["spark.hadoop." + k], k
