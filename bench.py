@@ -24,270 +24,8 @@ from pipelinewise_spark.queries import QUERIES  # noqa: E402
 from pipelinewise_spark.queries import fixturetime  # noqa: E402
 from pipelinewise_spark.session import get_spark  # noqa: E402
 
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "events_topk_per_user",
-    "full_table_sync_lineitem",
-    "incremental_sync_orders",
-    "pk_dedupe_events",
-    "mask_transforms_customer",
-    "mask_conditional_orders",
-    "merge_soft_delete_orders",
-    "exact_dedup_documents",
-    "minhash_lsh_pairs_documents",
-    "minhash_incremental_batch_documents",
-    "simhash_documents",
-    "ngram_jaccard_pairs_documents",
-    "edit_distance_pairs_documents",
-    "embedding_cosine_topk",
-    "embedding_lsh_buckets",
-    "text_quality_documents",
-    "windowed_event_counts",
-    "sessionize_events",
-    "q12_priority_shipping",
-    "q14_promo_revenue",
-    "salted_agg_events_by_type",
-    "dedup_clusters_documents",
-    "validate_events",
-    "quarantine_events",
-    "partial_sync_orders",
-    "except_customers_both_segments",
-    "intersect_customers_both_statuses",
-    "rollup_order_revenue",
-    "timestamp_clamp_orders",
-    "flatten_events_props",
-    "archive_load_metadata_orders",
-    "csv_source_lineno_orders",
-    "cross_doc_line_dedup_documents",
-    "lang_percentile_filter_documents",
-    "curation_funnel_documents",
-    "stream_dedupe_events",
-    "embedding_incremental_batch",
-    "exact_quantiles_lineitem",
-    "group_quantiles_orders",
-    "jsonl_source_lineno_orders",
-    "orc_roundtrip_orders",
-    "manifest_time_travel_orders",
-    "snapshot_diff_orders",
-    "snapshot_drift_orders",
-    "incremental_mv_orders",
-    "incremental_mv_minmax_orders",
-    "zorder_pruned_read_orders",
-    "bloom_point_lookup_orders",
-    "dedup_keep_best_documents",
-    "cluster_aware_split_documents",
-    "pack_sequences_documents",
-    "salted_join_events_users",
-    "salted_topk_events_per_user",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "q20_excess_suppliers",
-    "q6_forecast_revenue",
-    "q13_customer_order_distribution",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    "q8_national_market_share",
-    "q9_product_type_profit",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "term_frequencies_documents",
-    "frequent_tokens_documents",
-    "asof_join_click_purchase",
-    "range_join_attribution",
-    "stratified_sample_documents",
-    "quality_filter_documents",
-    "shard_documents_by_tokens",
-    "gopher_quality_documents",
-    "pii_scrub_documents",
-    "decontaminate_documents",
-    "curation_pipeline_documents",
-    "boilerplate_strip_documents",
-    "chunk_documents_token_windows",
-    "intra_doc_line_dedup_documents",
-    "bm25_documents",
-    "q10_returned_items",
-    "q18_large_orders",
-    "semi_join_parts_shipped",
-    "anti_join_inactive_customers",
-    "profile_orders_columns",
-    "histogram_order_totals",
-    "pivot_user_event_counts",
-    "cube_order_revenue",
-    "median_order_price_by_priority",
-    "funnel_click_purchase",
-    "retention_cohorts_weekly",
-    "session_window_events",
-    "ntile_documents_by_length",
-    "monthly_revenue_moving_avg",
-    "cdc_stream_apply_orders",
-    "cdc_stream_mv_orders",
-    "stream_stream_join_attribution",
-    "kafka_protobuf_events",
-    "kafka_json_payload_events",
-    "mongo_documents_normalize",
-    "mongo_change_stream_apply",
-    "embedding_near_dup_pairs",
-    "embedding_mean_pool_by_label",
-    "embedding_quantized_topk",
-    "embedding_ann_bucket_top1",
-    "lang_id_documents",
-    "fingerprint_documents",
-    "winnowing_fingerprint_documents",
-    "ngram_lm_score_documents",
-    "bigram_lm_score_documents",
-    "hybrid_retrieval_documents",
-    "repeated_ngram_coverage_documents",
-    "incremental_lm_update_documents",
-    # round 6
-    "duplicated_span_coverage_documents",
-    "interpolated_quantiles_lineitem",
-    "token_budget_mixture_documents",
-    "excise_duplicated_spans_documents",
-    "group_interpolated_quantiles_orders",
-    "binary_file_source_documents",
-    "stream_curation_ingest_documents",
-    "incremental_join_view_orders",
-    "hll_distinct_users_by_type",
-    "bucketed_merge_orders",
-    "contamination_span_coverage_documents",
-    "winsorize_order_totals",
-    "robust_scale_order_totals",
-    # round 7
-    "export_roundtrip_orders",
-    "analyze_stats_orders",
-    "lsh_index_lifecycle_documents",
-    "ivf_index_lifecycle_embeddings",
-    "stream_ingest_dedup_index_documents",
-    "embedding_ivf_topk",
-    "approx_stats_lineitem",
-    "multimodal_features_stub",
-    "multimodal_frame_sample",
-    "ccnet_perplexity_buckets_documents",
-    "dsir_weights_documents",
-    "semantic_dedup_embeddings",
-    "temperature_sample_documents",
-    "mv_rewrite_orders",
-    "dv_delete_orders",
-    "update_where_orders",
-    "table_changes_orders",
-    "rollback_orders",
-    "cdf_incremental_mv_orders",
-    "time_travel_as_of_orders",
-    "merge_schema_drift_orders",
-    "cdf_follow_mv_orders",
-    "shuffle_shards_documents",
-    "medallion_cdc_gold_orders",
-    "histogram_quantile_orders",
-    "cdf_sketch_maintenance_orders",
-    "grouping_sets_revenue",
-    "unpivot_order_measures",
-    "phash_near_dup_media",
-    "merge_on_read_orders",
-    "cdc_stream_mor_orders",
-    "star_rollup_revenue_by_nation",
-    "epoch_upsample_documents",
-    "gap_fill_daily_revenue",
-    "scd2_customer_history",
-    "scd2_pit_revenue_by_segment",
-    "cdc_stream_scd2_customer",
-    "expectations_report_orders",
-    "wap_publish_orders",
-    "hidden_partition_prune_orders",
-    "nb_langid_documents",
-    "ingest_volume_anomaly_orders",
-    "semantic_decontaminate_embeddings",
-    "text_index_search_documents",
-    "fk_integrity_orders",
-    "source_reputation_filter_documents",
-    "hierarchy_rollup_parts",
-    "part_pairs_cooccurrence",
-    "ohlc_daily_events",
-    "triangle_count_parts",
-    "ewma_daily_events",
-    "chi2_priority_status",
-    "xml_source_orders",
-    "pagerank_copurchase_parts",
-    "stream_ohlc_bars_events",
-    "regression_price_by_brand",
-    "window_functions_orders",
-    "cms_user_frequency_events",
-    "item_recommendations_parts",
-    "key_skew_report_events",
-    "cdf_cms_maintenance_orders",
-    "stream_running_totals_events",
-    "rolling_7day_revenue",
-    "sliding_window_event_counts",
-    # r8: bench now covers the FULL registry (207) — the 11 entries below
-    # were registered but never timed (r7 record stopped at 196)
-    "bpe_merges_documents",
-    "bpe_encode_documents",
-    "schema_evolution_version_column",
-    "multimodal_binary_metadata",
-    "merge_hard_delete_orders",
-    "schema_evolution_add_column",
-    "multimodal_resize_images",
-    "weighted_sample_documents",
-    "kafka_records_events",
-    "mask_condition_field_path_events",
-    "mask_json_field_paths_events",
-    "kmeans_embeddings",
-    "embedding_pq_topk",
-    "mmr_diversified_topk_embeddings",
-    "seasonal_anomaly_daily_events",
-    "distribution_drift_orders",
-    "record_linkage_customer",
-    "pq_index_lifecycle_embeddings",
-    "reconcile_report_orders",
-    "reconcile_diff_orders",
-    "benford_audit_orders",
-    "freshness_report_events",
-    "holt_forecast_daily_events",
-    "mann_whitney_acctbal_segments",
-    "ks_test_price_priorities",
-    # r9
-    "ks_drift_by_segment_orders",
-    "reconcile_repair_orders",
-    "stream_drift_monitor_events",
-    "cardinality_drift_events",
-    "kmeans_assign_embeddings",
-    "mw_drift_by_segment_orders",
-    # r10
-    "quality_report_orders",
-    "cardinality_drift_hll_events",
-    "kmeans_model_lifecycle_embeddings",
-    "stream_drift_by_segment_events",
-    "k_anonymity_customer",
-    "event_transitions_events",
-    "rrf_fusion_documents",
-    "data_card_documents",
-    "frequent_event_paths",
-    "tfidf_keywords_documents",
-    "vocab_drift_documents",
-    "minhash_lsh_bounded_pairs_documents",
-    "domain_cap_documents",
-    "wap_privacy_gate_customer",
-    "stream_quality_report_events",
-    "retrieval_metrics_documents",
-    "embedding_bounded_near_dup_pairs",
-    "stream_domain_cap_documents",
-    "singer_stream_sync_orders",
-    "singer_activate_version_orders",
-    "stream_ks_drift_events",
-    "stream_mw_drift_events",
-    "singer_capture_roundtrip_orders",
-    # r13 registrations
-    "singer_schema_drift_orders",
-    "stream_singer_capture_orders",
-    "singer_multi_stream_capture",
-    "singer_rotated_tail_roundtrip",
-    "stream_singer_capture_mor_orders",
-]
+# every registered query, in registry order (the order harnesses see)
+BENCH_QUERIES = list(QUERIES)
 
 # The ~20 timings carried on the printed one-line JSON (the driver's capture
 # window is small); one representative per operator family. Full timings for

@@ -81,16 +81,21 @@ class PipelineRunner:
         fmt = stream.options.get(
             "table_format", self.spec.options.get("table_format", "parquet")
         )
-        if fmt == "manifest":
-            from pipelinewise_spark.operators.manifest_table import ManifestTable
-
-            partition_by = list(
-                stream.options.get("partition_by")
-                or self.spec.options.get("partition_by")
-                or []
+        if fmt == "parquet":
+            return ParquetTable(root)
+        if fmt != "manifest":
+            raise ValueError(
+                f"{stream.tap_stream_id}: unknown table_format {fmt!r} — "
+                "expected 'parquet' or 'manifest'"
             )
-            return ManifestTable(root, partition_by=partition_by)
-        return ParquetTable(root)
+        from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+        partition_by = list(
+            stream.options.get("partition_by")
+            or self.spec.options.get("partition_by")
+            or []
+        )
+        return ManifestTable(root, partition_by=partition_by)
 
     def run_stream(
         self, stream: StreamSpec, source_df: DataFrame,

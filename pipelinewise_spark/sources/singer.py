@@ -87,6 +87,26 @@ class CapturePlan:
     n_lines: int = 0
 
 
+def _control_message(line: str, primary_key_required: bool) -> dict:
+    """Parse one control (non-RECORD) capture line and validate it: a
+    known message type, and ``key_properties`` on a SCHEMA when
+    ``primary_key_required`` (the reference default — log-based and
+    incremental replication duplicate rows without a PK)."""
+    o = json.loads(line)
+    t = o.get("type")
+    if t is None:
+        raise ValueError(f"capture line missing 'type': {line[:200]}")
+    if t not in ("SCHEMA", "STATE", "ACTIVATE_VERSION"):
+        raise ValueError(f"unknown Singer message type {t!r}")
+    if t == "SCHEMA" and primary_key_required and not o.get("key_properties"):
+        raise ValueError(
+            f"SCHEMA for stream {o['stream']!r} has no key_properties "
+            "(primary_key_required) — pass "
+            "primary_key_required=False for append-only streams"
+        )
+    return o
+
+
 def scan_control_plane(
     spark: SparkSession,
     path: str,
@@ -96,9 +116,7 @@ def scan_control_plane(
     max_control_lines: int = 1_000_000,
 ) -> CapturePlan:
     """Collect the SCHEMA/STATE/ACTIVATE_VERSION lines (never RECORDs)
-    with their positions. Raises on a missing ``key_properties`` when
-    ``primary_key_required`` (the reference default — log-based and
-    incremental replication duplicate rows without a PK).
+    with their positions, each validated by :func:`_control_message`.
 
     Driver memory is BOUNDED: ``states="last"`` keeps only the final
     STATE line (all a bulk load consumes — CDC taps emit a STATE every
@@ -134,24 +152,11 @@ def scan_control_plane(
     keys: dict[str, list[str]] = {}
     messages: list[dict] = []
     for r in sorted(rows, key=lambda r: r["lineno"]):
-        o = json.loads(r["line"])
-        t = o.get("type")
-        if t is None:
-            raise ValueError(f"capture line missing 'type': {r['line'][:200]}")
+        o = _control_message(r["line"], primary_key_required)
         o["__lineno"] = r["lineno"]
-        if t == "SCHEMA":
-            stream = o["stream"]
-            schemas[stream] = o["schema"]
-            kp = o.get("key_properties")
-            if primary_key_required and not kp:
-                raise ValueError(
-                    f"SCHEMA for stream {stream!r} has no key_properties "
-                    "(primary_key_required) — pass "
-                    "primary_key_required=False for append-only streams"
-                )
-            keys[stream] = list(kp or [])
-        elif t not in ("STATE", "ACTIVATE_VERSION"):
-            raise ValueError(f"unknown Singer message type {t!r}")
+        if o["type"] == "SCHEMA":
+            schemas[o["stream"]] = o["schema"]
+            keys[o["stream"]] = list(o.get("key_properties") or [])
         messages.append(o)
     return CapturePlan(schemas=schemas, key_properties=keys,
                        messages=messages)
@@ -164,23 +169,26 @@ def stream_records(
     struct: T.StructType,
 ) -> DataFrame:
     """This stream's RECORD payloads, parsed distributed: (lineno,
+    _sdc_table_version, _sdc_extracted_at, <record columns>)."""
+    return record_rows(capture_lines(spark, path), stream, struct)
+
+
+def record_rows(
+    lines: DataFrame,
+    stream: str,
+    struct: T.StructType,
+    position: str = "lineno",
+) -> DataFrame:
+    """The RECORD-line projection shared by every Singer face: this
+    stream's records from a ``(line, <position>)`` frame as (position,
     _sdc_table_version, _sdc_extracted_at, <record columns>). The JSON
     stays executor-side end to end (get_json_object + from_json)."""
-    lines = capture_lines(spark, path)
     rec = lines.filter(
         (F.get_json_object("line", "$.type") == "RECORD")
         & (F.get_json_object("line", "$.stream") == stream)
     )
     return rec.select(
-        "lineno", *record_payload_cols(struct)
-    ).select("lineno", SDC_TABLE_VERSION, SDC_EXTRACTED_AT, "__r.*")
-
-
-def record_payload_cols(struct: T.StructType) -> list[F.Column]:
-    """The shared RECORD-line projection (batch and streaming faces
-    parse identically; only the position column differs): version,
-    time_extracted, and the ``from_json`` payload struct."""
-    return [
+        position,
         F.get_json_object("line", "$.version")
         .cast("long")
         .alias(SDC_TABLE_VERSION),
@@ -190,7 +198,7 @@ def record_payload_cols(struct: T.StructType) -> list[F.Column]:
         F.from_json(
             F.get_json_object("line", "$.record"), struct
         ).alias("__r"),
-    ]
+    ).select(position, SDC_TABLE_VERSION, SDC_EXTRACTED_AT, "__r.*")
 
 
 def _last_wins(
@@ -275,7 +283,7 @@ def _mor_aligned(spark, table, batch: DataFrame) -> DataFrame | None:
 def _table_class(target_format: str) -> type:
     """The table class a Singer face writes for ``target_format``:
     ``"parquet"`` → ParquetTable (copy-on-write flushes), ``"mor"`` →
-    ManifestTable (merge-on-read flushes, see :func:`_write_pk_segment`)."""
+    ManifestTable (merge-on-read flushes, see :func:`_write_segment`)."""
     if target_format == "parquet":
         from pipelinewise_spark.operators.table import ParquetTable
 
@@ -296,31 +304,69 @@ def _is_mor(table) -> bool:
     return isinstance(table, ManifestTable)
 
 
-def _write_pk_segment(
+def _write_segment(
     spark,
     table,
     batch: DataFrame,
     pks: list[str],
     version_suffix: str | None = None,
     guard_col: str | None = None,
+    activate: int | None = None,
 ) -> None:
-    """Land one PK-deduped batch: create the table if missing; on a MOR
-    table whose live schema the batch matches, a merge-on-read delta
-    (superseded rows deletion-vectored, the batch appended as new
-    files); otherwise one copy-on-write MERGE over the
-    ``version_column``-evolved target. ``guard_col`` is the staleness
-    guard of both paths."""
-    from pipelinewise_spark.operators.merge import merge_upsert
+    """Land one segment — the single write path of every Singer face,
+    the reference's ``load_file`` (MERGE with ``key_properties``, COPY
+    without; target_snowflake/db_sync.py:449-547). ``batch`` is already
+    PK-deduped when ``pks`` is set.
+
+    - A missing table is created from the batch.
+    - On a MOR table whose live schema the batch matches: a
+      merge-on-read delta with PKs; without, an append of the rows whose
+      ``guard_col`` is not in the table yet (a window-pruned anti-join;
+      nothing new, no commit). Then the ``activate`` purge.
+    - Otherwise one copy-on-write rewrite of the ``version_column``-
+      evolved target: MERGE (PKs) or append of the unseen rows, the
+      ``activate`` filter folded in, a single overwrite.
+
+    ``guard_col`` is the replay guard of every path: the MERGE's
+    staleness guard, the append's anti-join key."""
+    from pipelinewise_spark.operators.merge import append_only, merge_upsert
 
     if not table.exists():
         table.overwrite(batch)
         return
     aligned = _mor_aligned(spark, table, batch) if _is_mor(table) else None
     if aligned is not None:
-        table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
+        if pks:
+            table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
+        elif guard_col is None:
+            table.append(aligned)
+        else:
+            # footer stats prune the scan to files overlapping the
+            # batch's own guard window
+            lo, hi = aligned.agg(F.min(guard_col), F.max(guard_col)).first()
+            seen = (
+                table.read(spark)
+                .select(guard_col)
+                .filter(F.col(guard_col).between(lo, hi))
+            )
+            fresh = aligned.join(seen, guard_col, "left_anti")
+            if fresh.limit(1).count() > 0:
+                table.append(fresh)
+        if activate is not None:
+            _purge_older_versions(spark, table, activate)
         return
     target = _evolved_target(spark, table, batch, pks, version_suffix)
-    table.overwrite(merge_upsert(target, batch, pks, guard_col=guard_col))
+    if pks:
+        merged = merge_upsert(target, batch, pks, guard_col=guard_col)
+    else:
+        if guard_col is not None:
+            batch = batch.join(
+                target.select(guard_col), guard_col, "left_anti"
+            )
+        merged = append_only(target, batch)
+    if activate is not None:
+        merged = _apply_activate(merged, activate)
+    table.overwrite(merged)
 
 
 def _purge_older_versions(spark, table, version: int) -> None:
@@ -334,6 +380,18 @@ def _purge_older_versions(spark, table, version: int) -> None:
         table.delete_where(spark, v.isNotNull() & (v < version))
     else:
         table.overwrite(_apply_activate(table.read(spark), version))
+
+
+def _adopt_bookmarks(
+    bookmarks: Any | None, singer_state: dict | None
+) -> None:
+    """Persist a flushed Singer STATE's per-stream bookmarks into the
+    engine's BookmarkStore (a no-op without a store or a state)."""
+    if bookmarks is None or singer_state is None:
+        return
+    for stream, bm in (singer_state.get("bookmarks") or {}).items():
+        bookmarks.update(stream, dict(bm))
+    bookmarks.save()
 
 
 def load_capture(
@@ -395,54 +453,15 @@ def load_capture(
         batch = (
             _last_wins(recs, pks) if pks else recs
         ).drop("lineno")
-        table = table_cls(f"{target_root}/{stream}")
-        aligned = (
-            _mor_aligned(spark, table, batch)
-            if _is_mor(table) and table.exists()
-            else None
+        out[stream] = table_cls(f"{target_root}/{stream}")
+        # the whole capture is one ordered, last-wins batch (no guard
+        # needed); the activation also purges older-version rows the
+        # table already holds from earlier captures
+        _write_segment(
+            spark, out[stream], batch, pks, version_suffix,
+            activate=activations.get(stream),
         )
-        if aligned is not None:
-            if pks:
-                # the whole capture is one ordered batch, last-wins
-                # already applied — unconditional supersede is correct
-                table.merge_on_read(spark, aligned, pks)
-            else:
-                table.append(aligned)
-            if stream in activations:
-                _purge_older_versions(spark, table, activations[stream])
-            out[stream] = table
-            continue
-        if pks:
-            from pipelinewise_spark.operators.merge import merge_upsert
-
-            merged = (
-                merge_upsert(
-                    _evolved_target(spark, table, batch, pks,
-                                    version_suffix),
-                    batch, pks,
-                )
-                if table.exists() else batch
-            )
-        else:
-            from pipelinewise_spark.operators.merge import append_only
-
-            prev = (
-                _evolved_target(spark, table, batch, [], version_suffix)
-                if table.exists() else None
-            )
-            merged = append_only(prev, batch)
-        if stream in activations:
-            # the swap purges older-version rows ALREADY IN the target
-            # too (a pre-existing table from an earlier capture), not
-            # just the capture's own records — same semantics as the
-            # replay path's table rewrite
-            merged = _apply_activate(merged, activations[stream])
-        table.overwrite(merged)
-        out[stream] = table
-    if bookmarks is not None and final_state is not None:
-        for stream, bm in (final_state.get("bookmarks") or {}).items():
-            bookmarks.update(stream, dict(bm))
-        bookmarks.save()
+    _adopt_bookmarks(bookmarks, final_state)
     return out
 
 
@@ -782,7 +801,7 @@ def replay_capture(
             plan.key_properties[stream],
         ).drop("lineno")
         # replay is ordered, so an unguarded MOR supersede IS last-wins
-        _write_pk_segment(
+        _write_segment(
             spark, _table(stream), batch, plan.key_properties[stream],
             version_suffix,
         )
@@ -848,10 +867,7 @@ def replay_capture(
     if had_pending and state is not None:
         flushed_state = copy.deepcopy(state)
         emitted.append(copy.deepcopy(flushed_state))
-    if bookmarks is not None and flushed_state is not None:
-        for stream, bm in (flushed_state.get("bookmarks") or {}).items():
-            bookmarks.update(stream, dict(bm))
-        bookmarks.save()
+    _adopt_bookmarks(bookmarks, flushed_state)
     return ReplayResult(
         tables=tables,
         state=flushed_state,

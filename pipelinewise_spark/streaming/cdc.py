@@ -99,11 +99,19 @@ def apply_change_batch(
     """Merge one micro-batch of change events into the target table.
 
     ``spec.options["merge_strategy"] == "merge_on_read"`` lands the batch
-    as a merge-on-read delta (ManifestTable only); otherwise the table's
-    copy-on-write ``merge`` runs, guarded on the persisted sequence."""
+    as a merge-on-read delta (ManifestTable only); without the option the
+    table's copy-on-write ``merge`` runs, guarded on the persisted
+    sequence. Any other ``merge_strategy`` raises."""
     spark = batch.sparkSession
     prepared = prepare_change_batch(batch, spec, prededuped=prededuped)
-    mor = spec.options.get("merge_strategy") == "merge_on_read"
+    strategy = spec.options.get("merge_strategy")
+    if strategy not in (None, "merge_on_read"):
+        raise ValueError(
+            f"{spec.tap_stream_id}: unknown merge_strategy {strategy!r} — "
+            "expected 'merge_on_read' (or no merge_strategy for the "
+            "copy-on-write default)"
+        )
+    mor = strategy == "merge_on_read"
     if mor and not isinstance(table, ManifestTable):
         raise ValueError(
             f"{spec.tap_stream_id}: merge_strategy 'merge_on_read' needs a "

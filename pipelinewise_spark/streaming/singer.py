@@ -47,21 +47,17 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pipelinewise_spark.streaming.bounded import await_bounded
 from pipelinewise_spark.sources.singer import (
-    SDC_EXTRACTED_AT,
-    SDC_TABLE_VERSION,
+    _adopt_bookmarks,
     _apply_activate,
-    _evolved_target,
-    _is_mor,
+    _control_message,
     _last_wins,
-    _mor_aligned,
     _purge_older_versions,
     _table_class,
-    _write_pk_segment,
-    record_payload_cols,
+    _write_segment,
+    record_rows,
 )
 
 #: global capture position persisted into the target — the MERGE
@@ -107,9 +103,9 @@ class CaptureStreamState:
 
 
 def _sequenced_lines(batch: DataFrame) -> DataFrame:
-    """(line, __seq) for one micro-batch — the global capture position:
-    file basename (names sort in write order by contract) + the
-    physical line number inside the file, zero-padded so the string
+    """(line, _sdc_sequence) for one micro-batch — the global capture
+    position: file basename (names sort in write order by contract) +
+    the physical line number inside the file, zero-padded so the string
     order IS the numeric order."""
     fname = F.element_at(F.split(F.col("__file"), "/"), -1)
     w = Window.partitionBy("__file").orderBy(
@@ -120,35 +116,8 @@ def _sequenced_lines(batch: DataFrame) -> DataFrame:
         F.concat(
             fname, F.lit(":"),
             F.lpad(F.row_number().over(w).cast("string"), 12, "0"),
-        ).alias("__seq"),
+        ).alias(SDC_SEQUENCE),
     )
-
-
-def _segment_records(
-    lines: DataFrame,
-    stream: str,
-    struct: T.StructType,
-    lo: str | None,
-    hi: str | None,
-) -> DataFrame:
-    """This stream's RECORD payloads in the (lo, hi) sequence window,
-    parsed distributed — the streaming twin of
-    sources/singer.py:stream_records."""
-    cond = (F.get_json_object("line", "$.type") == "RECORD") & (
-        F.get_json_object("line", "$.stream") == stream
-    )
-    if lo is not None:
-        cond = cond & (F.col("__seq") > F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col("__seq") < F.lit(hi))
-    return lines.filter(cond).select(
-        F.col("__seq").alias(SDC_SEQUENCE),
-        *record_payload_cols(struct),
-    ).select(SDC_SEQUENCE, SDC_TABLE_VERSION, SDC_EXTRACTED_AT, "__r.*")
-
-
-def _last_wins_by_seq(df: DataFrame, pks: list[str]) -> DataFrame:
-    return _last_wins(df, pks, order_col=SDC_SEQUENCE)
 
 
 def apply_capture_batch(
@@ -194,12 +163,12 @@ def apply_capture_batch(
     try:
         ctl = (
             lines.select(
-                "__seq",
+                SDC_SEQUENCE,
                 F.get_json_object("line", "$.type").alias("t"),
                 "line",
             )
             .filter(F.col("t").isNull() | (F.col("t") != "RECORD"))
-            .orderBy("__seq")
+            .orderBy(SDC_SEQUENCE)
             .limit(max_control_lines + 1)
             .collect()
         )
@@ -209,17 +178,11 @@ def apply_capture_batch(
                 "(non-RECORD) lines — raise max_control_lines or shrink "
                 "maxFilesPerTrigger"
             )
-        events: list[tuple[str, str, dict]] = []
-        for r in ctl:
-            o = json.loads(r["line"])
-            t = o.get("type")
-            if t is None:
-                raise ValueError(
-                    f"capture line missing 'type': {r['line'][:200]}"
-                )
-            if t not in ("SCHEMA", "STATE", "ACTIVATE_VERSION"):
-                raise ValueError(f"unknown Singer message type {t!r}")
-            events.append((r["__seq"], t, o))
+        events = [
+            (r[SDC_SEQUENCE],
+             _control_message(r["line"], primary_key_required))
+            for r in ctl
+        ]
 
         # record streams present in this batch (to catch RECORD-before-
         # SCHEMA and to skip untouched streams below)
@@ -239,21 +202,10 @@ def apply_capture_batch(
         schema_events: dict[str, list[tuple[str, dict]]] = {}
         av_events: dict[str, list[tuple[str, int]]] = {}
         state_events: list[tuple[str, dict]] = []
-        for seq, t, o in events:
-            if t == "SCHEMA":
-                stream = o["stream"]
-                kp = o.get("key_properties")
-                if primary_key_required and not kp:
-                    raise ValueError(
-                        f"SCHEMA for stream {stream!r} has no "
-                        "key_properties (primary_key_required) — pass "
-                        "primary_key_required=False for append-only "
-                        "streams"
-                    )
-                schema_events.setdefault(stream, []).append(
-                    (seq, o)
-                )
-            elif t == "ACTIVATE_VERSION":
+        for seq, o in events:
+            if o["type"] == "SCHEMA":
+                schema_events.setdefault(o["stream"], []).append((seq, o))
+            elif o["type"] == "ACTIVATE_VERSION":
                 av_events.setdefault(o["stream"], []).append(
                     (seq, int(o["version"]))
                 )
@@ -278,7 +230,7 @@ def apply_capture_batch(
                             F.get_json_object("line", "$.stream")
                             == stream
                         )
-                        & (F.col("__seq") < F.lit(first_seq))
+                        & (F.col(SDC_SEQUENCE) < F.lit(first_seq))
                     )
                     .limit(1)
                     .collect()
@@ -304,55 +256,22 @@ def apply_capture_batch(
                 if cur_schema is None:
                     return
                 struct = json_schema_to_struct(cur_schema, float_compat)
-                seg = _segment_records(lines, stream, struct, lo, hi)
+                seg = record_rows(lines, stream, struct, SDC_SEQUENCE)
+                if lo is not None:
+                    seg = seg.filter(F.col(SDC_SEQUENCE) > F.lit(lo))
+                if hi is not None:
+                    seg = seg.filter(F.col(SDC_SEQUENCE) < F.lit(hi))
                 if stream in state.activations:
                     seg = _apply_activate(
                         seg, state.activations[stream]
                     )
                 if cur_kp:
-                    seg = _last_wins_by_seq(seg, cur_kp)
+                    seg = _last_wins(seg, cur_kp, order_col=SDC_SEQUENCE)
                 if seg.limit(1).count() == 0:
                     return
-                if cur_kp:
-                    _write_pk_segment(
-                        spark, table, seg, cur_kp, version_suffix,
-                        guard_col=SDC_SEQUENCE,
-                    )
-                    return
-                if not table.exists():
-                    table.overwrite(seg)
-                    return
-                aligned = (
-                    _mor_aligned(spark, table, seg)
-                    if _is_mor(table) else None
-                )
-                if aligned is not None:
-                    # idempotent append: anti-join on the batch's own
-                    # sequence window (footer stats prune the scan to
-                    # overlapping files)
-                    smin, smax = aligned.agg(
-                        F.min(SDC_SEQUENCE), F.max(SDC_SEQUENCE)
-                    ).first()
-                    prev = (
-                        table.read(spark)
-                        .select(SDC_SEQUENCE)
-                        .filter(
-                            (F.col(SDC_SEQUENCE) >= smin)
-                            & (F.col(SDC_SEQUENCE) <= smax)
-                        )
-                    )
-                    fresh = aligned.join(prev, SDC_SEQUENCE, "left_anti")
-                    if fresh.limit(1).count() > 0:
-                        table.append(fresh)
-                    return
-                prev = _evolved_target(
-                    spark, table, seg, [], version_suffix
-                )
-                fresh = seg.join(
-                    prev.select(SDC_SEQUENCE), SDC_SEQUENCE, "left_anti"
-                )
-                table.overwrite(
-                    prev.unionByName(fresh, allowMissingColumns=True)
+                _write_segment(
+                    spark, table, seg, cur_kp, version_suffix,
+                    guard_col=SDC_SEQUENCE,
                 )
 
             lo: str | None = None
@@ -488,12 +407,7 @@ def start_capture_stream(
                 if t.exists():
                     t.compact(spark, max_dead_ratio=0.2)
         state.save(checkpoint_dir)
-        if bookmarks is not None and state.bookmark is not None:
-            for stream, bm in (
-                state.bookmark.get("bookmarks") or {}
-            ).items():
-                bookmarks.update(stream, dict(bm))
-            bookmarks.save()
+        _adopt_bookmarks(bookmarks, state.bookmark)
 
     writer = src.writeStream.foreachBatch(_on_batch).option(
         "checkpointLocation", os.path.join(checkpoint_dir, "spark")

@@ -29,7 +29,6 @@ _SLOW_TESTS = {
     "test_cli_r7.py::test_cli_quality_verb",
     "test_advice_fixes_r7.py::test_cli_index_verbs_roundtrip",
     "test_cli_r6.py::test_vault_roundtrip_property",
-    "test_singer_stream.py::test_stream_append_only_idempotent",
 }
 
 

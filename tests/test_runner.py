@@ -145,6 +145,22 @@ def test_primary_key_required_guard(spark, sf_dir, tmp_path):
     assert r.rows_loaded == events.count()
 
 
+def test_table_for_rejects_unknown_table_format(spark, tmp_path):
+    import pytest
+    from pipelinewise_spark.plans.spec import PipelineSpec, StreamSpec
+
+    spec = PipelineSpec(
+        pipeline_id="p", target_path=str(tmp_path),
+        streams=[StreamSpec(tap_stream_id="nation",
+                            primary_keys=["n_nationkey"],
+                            options={"table_format": "manifests"})],
+    )
+    runner = PipelineRunner(spark, spec)
+    with pytest.raises(ValueError, match="table_format 'manifests'.*"
+                       "'parquet' or 'manifest'"):
+        runner.table_for(spec.stream("nation"))
+
+
 def test_selected_columns_projection(spark, sf_dir, tmp_path):
     from pipelinewise_spark.plans.spec import PipelineSpec, StreamSpec
 

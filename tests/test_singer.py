@@ -817,6 +817,46 @@ def test_load_capture_mor_activate_version_purges(spark, tmp_path):
     assert rows == {1: "a2"}
 
 
+@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+def test_load_capture_no_pk_day2_append_and_activate(
+    spark, tmp_path, target_format
+):
+    """A no-PK stream loaded into an existing table appends the day-2
+    rows; a later full-resync capture's ACTIVATE_VERSION removes every
+    older-version row already in the table."""
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
+    from pipelinewise_spark.operators.table import ParquetTable
+
+    def load(name, lines):
+        load_capture(
+            spark, _write(tmp_path, [_schema(keys=()), *lines], name=name),
+            str(tmp_path / "tgt"), primary_key_required=False,
+            target_format=target_format,
+        )
+
+    table = (ManifestTable if target_format == "mor" else ParquetTable)(
+        str(tmp_path / "tgt" / "t1")
+    )
+
+    def rows():
+        return sorted(
+            (r["id"], r["name"], r["amount"], r["_sdc_table_version"])
+            for r in table.read(spark).collect()
+        )
+
+    load("day1.ndjson", [_rec(1, "a", 1.0, version=1),
+                         _rec(2, "b", 2.0, version=1)])
+    load("day2.ndjson", [_rec(3, "c", 3.0, version=1),
+                         _rec(1, "a", 1.0, version=1)])
+    assert rows() == [
+        (1, "a", 1.0, 1), (1, "a", 1.0, 1), (2, "b", 2.0, 1),
+        (3, "c", 3.0, 1),
+    ]
+    load("resync.ndjson", [_rec(1, "a2", 10.0, version=2),
+                           _rec(4, "d", 4.0, version=2), _activate(2)])
+    assert rows() == [(1, "a2", 10.0, 2), (4, "d", 4.0, 2)]
+
+
 def test_write_capture_rotated_rejects_nonpositive_rotation(spark, tmp_path):
     from pipelinewise_spark.sources.singer import write_capture_rotated
 

@@ -250,35 +250,58 @@ def test_stream_record_before_schema_raises(spark, tmp_path):
         )
 
 
-def test_stream_append_only_idempotent(spark, tmp_path):
+def _append_batch(spark, path):
+    return spark.read.text(str(path)).select(
+        "value",
+        F.col("_metadata.file_path").alias("__file"),
+        F.col("_metadata.file_block_start").alias("__block"),
+    )
+
+
+@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+def test_stream_append_only_idempotent(spark, tmp_path, target_format):
     """No-PK streams append with a sequence anti-join: duplicates in
-    the DATA stay (two identical records are two rows), but a replayed
-    batch adds nothing."""
-    lines = [
-        json.dumps({"type": "SCHEMA", "stream": "t1",
-                    "schema": {"type": "object", "properties": PROPS},
-                    "key_properties": []}),
-        _rec(1, "a", 1.0), _rec(1, "a", 1.0),
-    ]
-    f = tmp_path / "cap-000001.ndjson"
-    f.write_text("\n".join(lines) + "\n")
-    batch = (
-        spark.read.text(str(f))
-        .select(
-            "value",
-            F.col("_metadata.file_path").alias("__file"),
-            F.col("_metadata.file_block_start").alias("__block"),
-        )
-    )
+    the DATA stay (two identical records are two rows), a replayed
+    batch adds nothing (and, on a MOR target, commits no version), and
+    a later batch's new records append."""
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+    schema = json.dumps({"type": "SCHEMA", "stream": "t1",
+                         "schema": {"type": "object", "properties": PROPS},
+                         "key_properties": []})
+    f1 = tmp_path / "cap-000001.ndjson"
+    f1.write_text("\n".join(
+        [schema, _rec(1, "a", 1.0), _rec(1, "a", 1.0)]) + "\n")
+    f2 = tmp_path / "cap-000002.ndjson"
+    f2.write_text("\n".join([_rec(2, "b", 2.0), _rec(3, "c", 3.0)]) + "\n")
     tgt = str(tmp_path / "tgt")
-    st = apply_capture_batch(
-        spark, batch, tgt, CaptureStreamState(),
-        primary_key_required=False,
+    table = (ManifestTable if target_format == "mor" else ParquetTable)(
+        f"{tgt}/t1"
     )
-    apply_capture_batch(
-        spark, batch, tgt, st, primary_key_required=False
-    )
-    assert ParquetTable(f"{tgt}/t1").read(spark).count() == 2
+
+    def apply(path, st):
+        return apply_capture_batch(
+            spark, _append_batch(spark, path), tgt, st,
+            primary_key_required=False, target_format=target_format,
+        )
+
+    def rows():
+        return sorted(
+            (r["id"], r["name"], r["amount"])
+            for r in table.read(spark).collect()
+        )
+
+    st = apply(f1, CaptureStreamState())
+    versions = table.versions() if target_format == "mor" else None
+    st = apply(f1, st)
+    assert rows() == [(1, "a", 1.0), (1, "a", 1.0)]
+    if target_format == "mor":
+        assert table.versions() == versions
+    st = apply(f2, st)
+    apply(f2, st)
+    assert rows() == [
+        (1, "a", 1.0), (1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)
+    ]
 
 
 def test_import_capture_cli_tail(spark, tmp_path, capsys):

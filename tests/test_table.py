@@ -173,3 +173,18 @@ def test_merge_on_read_strategy_needs_manifest_table(spark, tmp_path):
     with pytest.raises(ValueError, match="merge_strategy"):
         apply_change_batch(t, batch, spec)
     assert not t.exists()
+
+
+def test_unknown_merge_strategy_raises(spark, tmp_path):
+    spec = StreamSpec(
+        tap_stream_id="t", primary_keys=["id"],
+        options={"merge_strategy": "merge-on-read"},
+    )
+    batch = spark.createDataFrame(
+        [("c", 1, "2026-01-02", 1, 1.0)],
+        "_op string, _seq long, _event_ts string, id long, val double",
+    )
+    t = ManifestTable(os.path.join(str(tmp_path), "t"))
+    with pytest.raises(ValueError, match="unknown merge_strategy"):
+        apply_change_batch(t, batch, spec)
+    assert not t.exists()
