@@ -43,6 +43,14 @@ Two entry points, one contract:
   emit a STATE per record). Each flush is a distributed range filter
   + window dedupe + MERGE. Use replay to resume interrupted tap runs
   with exact state semantics; use load_capture for bulk backfills.
+  Replay reads and numbers the capture ONCE: one cached
+  ``(lineno, type, stream, line)`` frame (MEMORY_AND_DISK, so it
+  spills rather than OOMs) feeds the control-plane collect, the
+  guards, the record index and every per-epoch parse. The frame is
+  ONE partition — the per-file lineno window already puts every row
+  there, and AQE does not coalesce a cached plan, so a cache that kept
+  the window's shuffle partitions would launch an empty task per
+  partition in every later job.
 
 A capture is ONE NDJSON file (a single tap run's stdout); line order
 is the file's physical order (per-file block-ordered row_number, same
@@ -74,6 +82,33 @@ def capture_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path).select(
         F.col("value").alias("line"),
         F.row_number().over(w).alias("lineno"),
+    )
+
+
+def _typed_lines(spark: SparkSession, path: str) -> DataFrame:
+    """(lineno, type, stream, line): :func:`capture_lines` plus the two
+    envelope fields every control-plane pass filters or groups on."""
+    return capture_lines(spark, path).select(
+        "lineno",
+        F.get_json_object("line", "$.type").alias("type"),
+        F.get_json_object("line", "$.stream").alias("stream"),
+        "line",
+    )
+
+
+def _cached_lines(spark: SparkSession, path: str) -> DataFrame:
+    """:func:`_typed_lines` collapsed to one partition and persisted
+    (MEMORY_AND_DISK: spills, never OOMs), so a multi-pass reader reads
+    and numbers the capture once; the caller unpersists. One partition:
+    the per-file window already holds every row of the capture in one
+    of its shuffle partitions, and AQE does not coalesce a cached plan,
+    so the empty rest would cost one task each in every later job."""
+    from pyspark import StorageLevel
+
+    return (
+        _typed_lines(spark, path)
+        .coalesce(1)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 
@@ -114,6 +149,7 @@ def scan_control_plane(
     *,
     states: str = "all",
     max_control_lines: int = 1_000_000,
+    lines: DataFrame | None = None,
 ) -> CapturePlan:
     """Collect the SCHEMA/STATE/ACTIVATE_VERSION lines (never RECORDs)
     with their positions, each validated by :func:`_control_message`.
@@ -123,20 +159,22 @@ def scan_control_plane(
     few records, so the full STATE stream is O(records)); with
     ``states="all"`` (the faithful-replay walk needs every STATE's
     position) the collect is capped at ``max_control_lines`` and
-    refuses loudly beyond it."""
+    refuses loudly beyond it.
+
+    ``lines`` is an already-built ``(lineno, type, stream, line)``
+    frame of ``path`` (a multi-pass caller's cached one); without it
+    the capture is read here."""
     if states not in ("all", "last"):
         raise ValueError(f"states must be 'all' or 'last', got {states!r}")
-    lines = capture_lines(spark, path)
-    ctl = lines.select(
-        "lineno",
-        F.get_json_object("line", "$.type").alias("t"),
-        "line",
-    ).filter(F.col("t").isNull() | (F.col("t") != "RECORD"))
+    if lines is None:
+        lines = _typed_lines(spark, path)
+    t = F.col("type")
+    ctl = lines.select("lineno", "type", "line").filter(
+        t.isNull() | (t != "RECORD")
+    )
     if states == "last":
-        ctl = ctl.filter(
-            F.col("t").isNull() | (F.col("t") != "STATE")
-        ).unionByName(
-            ctl.filter(F.col("t") == "STATE")
+        ctl = ctl.filter(t.isNull() | (t != "STATE")).unionByName(
+            ctl.filter(t == "STATE")
             .orderBy(F.col("lineno").desc())
             .limit(1)
         )
@@ -473,38 +511,7 @@ class ReplayResult:
     n_flushes: int
 
 
-def _check_record_streams(
-    spark: SparkSession, lines: DataFrame, plan: CapturePlan
-) -> None:
-    """Fail fast on RECORDs with no (or a not-yet-emitted) SCHEMA —
-    ONE grouped aggregate over the capture (min record lineno per
-    stream, compared driver-side against each stream's first SCHEMA
-    position), not a scan per stream."""
-    firsts = {}
-    for m in plan.messages:
-        if m["type"] == "SCHEMA":
-            firsts.setdefault(m["stream"], m["__lineno"])
-    mins = (
-        lines.filter(F.get_json_object("line", "$.type") == "RECORD")
-        .groupBy(F.get_json_object("line", "$.stream").alias("s"))
-        .agg(F.min("lineno").alias("first_rec"))
-        .collect()
-    )
-    for r in mins:
-        stream, first_rec = r["s"], r["first_rec"]
-        if stream not in firsts:
-            raise ValueError(
-                f"RECORD for stream {stream!r} before its SCHEMA "
-                "(no SCHEMA message for that stream in the capture)"
-            )
-        if first_rec < firsts[stream]:
-            raise ValueError(
-                f"RECORD for stream {stream!r} before its SCHEMA"
-            )
-
-
 def _records_meta(
-    spark: SparkSession,
     lines: DataFrame,
     plan: CapturePlan,
     float_compat: bool = False,
@@ -513,8 +520,8 @@ def _records_meta(
 ) -> list[tuple[int, str, str]]:
     """(lineno, stream, pk_string) for the RECORD lines in the
     ``[lo, hi]`` lineno window (the whole capture when unbounded) — a
-    distributed projection (payloads never collected; each tuple is
-    bytes).
+    distributed projection of the ``(lineno, type, stream, line)``
+    frame (payloads never collected; each tuple is bytes).
 
     The dedupe key is TYPED: PK components parse via ``from_json``
     against the PK subset of the stream's CURRENT schema (per SCHEMA
@@ -528,8 +535,8 @@ def _records_meta(
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     # SCHEMA epochs: each stream's records parse under the schema in
-    # force at their line (the same struct the flush's stream_records
-    # parse uses after the walk swaps it)
+    # force at their line (the same struct the flush's record parse
+    # uses after the walk swaps it)
     epochs: dict[str, list[tuple[int, dict]]] = {}
     for m in plan.messages:
         if m["type"] == "SCHEMA":
@@ -566,8 +573,8 @@ def _records_meta(
             if window is not None:
                 rng = rng & window
             rec = lines.filter(
-                (F.get_json_object("line", "$.type") == "RECORD")
-                & (F.get_json_object("line", "$.stream") == stream)
+                (F.col("type") == "RECORD")
+                & (F.col("stream") == stream)
                 & rng
             ).select(
                 "lineno",
@@ -608,23 +615,21 @@ def _records_meta(
     allrec = frames[0]
     for f in frames[1:]:
         allrec = allrec.unionByName(f)
-    if plan.key_properties and allrec.filter(F.col("__nullpk")).count() > 0:
+    rows = allrec.collect()
+    if plan.key_properties and any(r["__nullpk"] for r in rows):
         raise ValueError(
             "RECORD with NULL (or type-mismatched) primary-key component "
             "— refuse to replay (the reference would synthesize an RID; "
             "pass records a real PK or use load_capture with "
             "primary_key_required=False)"
         )
-    return sorted(
-        (r["lineno"], r["stream"], r["pk"])
-        for r in allrec.select("lineno", "stream", "pk").collect()
-    )
+    return sorted((r["lineno"], r["stream"], r["pk"]) for r in rows)
 
 
 def _iter_capture_events(
-    spark: SparkSession,
-    path: str,
+    lines: DataFrame,
     plan: CapturePlan,
+    n_lines: int,
     float_compat: bool = False,
     chunk_lines: int = 2_000_000,
 ):
@@ -634,22 +639,20 @@ def _iter_capture_events(
     ``chunk_lines``-sized lineno WINDOW at a time — the driver never
     holds more than one window of (lineno, stream, pk) tuples, so a
     faithful replay's memory no longer grows with the capture. The
-    trade is one distributed projection pass per window (O(n²/chunk)
-    scan work in the extreme); the per-flush MERGE cost still dominates
-    long before that matters, and load_capture remains the bulk path."""
-    lines = capture_lines(spark, path)
-    _check_record_streams(spark, lines, plan)
+    trade is one projection pass over the cached lines per window
+    (O(n²/chunk) scan work in the extreme); the per-flush MERGE cost
+    still dominates long before that matters, and load_capture remains
+    the bulk path."""
     ctl = sorted(
         (m["__lineno"], m["type"], m) for m in plan.messages
     )
-    n_lines = lines.agg(F.max("lineno")).first()[0] or 0
     lo = 1
     while lo <= n_lines:
         hi = min(lo + chunk_lines - 1, n_lines)
         chunk: list[tuple[int, str, Any]] = [
             (ln, "RECORD", (stream, pk))
             for ln, stream, pk in _records_meta(
-                spark, lines, plan, float_compat, lo=lo, hi=hi
+                lines, plan, float_compat, lo=lo, hi=hi
             )
         ]
         chunk.extend(c for c in ctl if lo <= c[0] <= hi)
@@ -699,6 +702,16 @@ def replay_capture(
     - ACTIVATE_VERSION flushes its stream, then drops rows of older
       table versions.
 
+    The capture is read and numbered ONCE, like the reference's single
+    pass over stdin: one cached, single-partition ``(lineno, type,
+    stream, line)`` frame (MEMORY_AND_DISK — it spills rather than
+    OOMs; one partition because AQE does not coalesce a cached plan's
+    shuffle partitions) feeds one grouped aggregate (RECORD count for
+    ``max_records``, line count, each stream's first RECORD for the
+    RECORD-before-SCHEMA check), the control-plane collect, the record
+    index and the per-(stream, SCHEMA epoch) parses. It and the parse
+    caches are released on every exit, error paths included.
+
     Every flush is DISTRIBUTED: the buffered linenos form a contiguous
     per-stream range since the last flush, so the batch is a range
     filter over the parsed records + the last-wins window + MERGE.
@@ -712,6 +725,8 @@ def replay_capture(
     ``max_records=None`` to lift the refusal (memory stays bounded by
     the chunking either way).
     """
+    from pyspark import StorageLevel
+
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     table_cls = _table_class(target_format)
@@ -720,36 +735,6 @@ def replay_capture(
         if stream not in tables:
             tables[stream] = table_cls(f"{target_root}/{stream}")
         return tables[stream]
-
-    if max_records is not None:
-        n_rec = (
-            capture_lines(spark, path)
-            .filter(F.get_json_object("line", "$.type") == "RECORD")
-            .limit(max_records + 1)
-            .count()
-        )
-        if n_rec > max_records:
-            raise ValueError(
-                f"capture has more than {max_records} RECORD lines — "
-                "faithful replay runs one MERGE per flush, which is "
-                "pointlessly slow at bulk-backfill size; use "
-                "load_capture (one distributed pass), or pass "
-                "max_records=None to lift the refusal (driver memory "
-                "stays bounded by chunk_lines either way)"
-            )
-    plan = scan_control_plane(spark, path, primary_key_required)
-    for stream, pks in plan.key_properties.items():
-        if not pks:
-            raise ValueError(
-                f"stream {stream!r} has no key_properties — replay's "
-                "buffered PK dedupe needs a PK; use load_capture for "
-                "append-only streams"
-            )
-    # one ordered walk over control messages + record tuples, the
-    # record index collected one bounded window at a time
-    events = _iter_capture_events(
-        spark, path, plan, float_compat, chunk_lines=chunk_lines
-    )
 
     structs: dict[str, T.StructType] = {}
     seen_schema: dict[str, dict] = {}
@@ -761,22 +746,20 @@ def replay_capture(
     emitted: list[dict | None] = []
     n_flushes = 0
 
-    # parsed-records cache: one text-scan + from_json per (stream,
-    # schema epoch), NOT per flush — flushes range-filter the persisted
-    # parse (MEMORY_AND_DISK: spills, never OOMs). Without this every
-    # flush re-reads the whole capture, making replay O(corpus) PER
-    # FLUSH; invalidated on a changed SCHEMA (new struct), released in
-    # the finally below.
-    from pyspark import StorageLevel
-
+    # parsed-records cache: one from_json per (stream, schema epoch),
+    # NOT per flush — flushes range-filter the persisted parse
+    # (MEMORY_AND_DISK: spills, never OOMs), itself a projection of the
+    # cached capture lines, so no flush or epoch re-reads the file and
+    # every cache is one partition; invalidated on a changed SCHEMA
+    # (new struct), released in the finally below.
     parsed: dict[str, DataFrame] = {}
 
     def parsed_records(stream: str) -> DataFrame:
         df = parsed.get(stream)
         if df is None:
-            df = stream_records(
-                spark, path, stream, structs[stream]
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            df = record_rows(lines, stream, structs[stream]).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             parsed[stream] = df
         return df
 
@@ -818,7 +801,64 @@ def replay_capture(
             )
         emitted.append(copy.deepcopy(flushed_state))
 
+    lines = _cached_lines(spark, path)
     try:
+        # one grouped aggregate for every whole-capture figure
+        is_rec = F.col("type") == "RECORD"
+        stats = (
+            lines.groupBy(
+                is_rec.alias("rec"),
+                F.when(is_rec, F.col("stream")).alias("stream"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("lineno").alias("first"),
+                F.max("lineno").alias("last"),
+            )
+            .collect()
+        )
+        n_lines = max((r["last"] for r in stats), default=0)
+        first_rec = {r["stream"]: r["first"] for r in stats if r["rec"]}
+        n_rec = sum(r["n"] for r in stats if r["rec"])
+        if max_records is not None and n_rec > max_records:
+            raise ValueError(
+                f"capture has more than {max_records} RECORD lines — "
+                "faithful replay runs one MERGE per flush, which is "
+                "pointlessly slow at bulk-backfill size; use "
+                "load_capture (one distributed pass), or pass "
+                "max_records=None to lift the refusal (driver memory "
+                "stays bounded by chunk_lines either way)"
+            )
+        plan = scan_control_plane(
+            spark, path, primary_key_required, lines=lines
+        )
+        for stream, pks in plan.key_properties.items():
+            if not pks:
+                raise ValueError(
+                    f"stream {stream!r} has no key_properties — replay's "
+                    "buffered PK dedupe needs a PK; use load_capture for "
+                    "append-only streams"
+                )
+        # fail fast on RECORDs with no (or a not-yet-emitted) SCHEMA
+        first_schema: dict[str, int] = {}
+        for m in plan.messages:
+            if m["type"] == "SCHEMA":
+                first_schema.setdefault(m["stream"], m["__lineno"])
+        for stream, first in first_rec.items():
+            if stream not in first_schema:
+                raise ValueError(
+                    f"RECORD for stream {stream!r} before its SCHEMA "
+                    "(no SCHEMA message for that stream in the capture)"
+                )
+            if first < first_schema[stream]:
+                raise ValueError(
+                    f"RECORD for stream {stream!r} before its SCHEMA"
+                )
+        # one ordered walk over control messages + record tuples, the
+        # record index collected one bounded window at a time
+        events = _iter_capture_events(
+            lines, plan, n_lines, float_compat, chunk_lines=chunk_lines
+        )
         for lineno, kind, payload in events:
             if kind == "RECORD":
                 stream, pk = payload
@@ -862,8 +902,12 @@ def replay_capture(
             if buffers[stream]:
                 flush(stream, max(buffers[stream].values()), final=True)
     finally:
+        # the parse caches first: each is a projection of the lines
+        # cache, and unpersisting the lines under a live dependent
+        # would rebuild the dependent's plan
         for stream in list(parsed):
             drop_parsed(stream)
+        lines.unpersist()
     if had_pending and state is not None:
         flushed_state = copy.deepcopy(state)
         emitted.append(copy.deepcopy(flushed_state))
@@ -1081,28 +1125,29 @@ def capture_status(
     ACTIVATE_VERSION, plus message-type totals and the final STATE.
     ONE distributed (type, stream)-grouped aggregate for every count —
     the full STATE stream of a CDC tap never reaches the driver — and
-    the capped control-plane scan for the schemas (``states="last"``).
-    The ops answer to "what is in this capture and is it loadable?"
-    before committing to a bulk load or replay."""
-    counts = (
-        capture_lines(spark, path)
-        .groupBy(
-            F.get_json_object("line", "$.type").alias("t"),
-            F.get_json_object("line", "$.stream").alias("s"),
+    the capped control-plane scan for the schemas (``states="last"``),
+    both over one cached read of the capture. The ops answer to "what
+    is in this capture and is it loadable?" before committing to a bulk
+    load or replay."""
+    lines = _cached_lines(spark, path)
+    try:
+        counts = (
+            lines.groupBy("type", "stream")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+        plan = scan_control_plane(
+            spark, path, primary_key_required, states="last", lines=lines
+        )
+    finally:
+        lines.unpersist()
     by_type: dict[str, int] = {}
     records: dict[str, int] = {}
     for r in counts:
-        t = r["t"] or "<missing type>"
+        t = r["type"] or "<missing type>"
         by_type[t] = by_type.get(t, 0) + r["n"]
         if t == "RECORD":
-            records[r["s"]] = r["n"]
-    plan = scan_control_plane(
-        spark, path, primary_key_required, states="last"
-    )
+            records[r["stream"]] = r["n"]
     epochs: dict[str, int] = {}
     last_version: dict[str, int] = {}
     final_state = None

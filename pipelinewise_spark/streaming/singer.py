@@ -159,7 +159,17 @@ def apply_capture_batch(
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     table_cls = _table_class(target_format)
-    lines = _sequenced_lines(batch).persist()
+    # no more partitions than the batch's input splits (one per capture
+    # file under the split size): the per-file window fills at most one
+    # of its shuffle partitions per file, and AQE does not coalesce a
+    # cached plan, so each later job would run every empty one. Splits,
+    # not files: a foreachBatch frame does not list its files
+    # (inputFiles() is empty), and counting them would cost a job.
+    lines = (
+        _sequenced_lines(batch)
+        .coalesce(max(1, batch.rdd.getNumPartitions()))
+        .persist()
+    )
     try:
         ctl = (
             lines.select(

@@ -633,6 +633,100 @@ def test_replay_chunked_record_index_same_result(spark, tmp_path):
     assert snap(small) == snap(big)
 
 
+_PK_AS_STRING = dict(SCHEMA_PROPS, id={"type": ["null", "string"]})
+
+_LEAK_CASES = {
+    "max_records": (
+        [_schema(), _rec(1, "a", 1.0), _rec(2, "b", 2.0),
+         _rec(3, "c", 3.0)],
+        {"max_records": 2}, "use load_capture",
+    ),
+    "record_before_schema": (
+        [_rec(1, "a", 1.0), _schema()], {}, "before its SCHEMA",
+    ),
+    "null_pk": (
+        [_schema(), _rec(1, "a", 1.0), _rec(None, "b", 2.0)], {},
+        "primary-key component",
+    ),
+    "no_key_properties": (
+        [_schema(keys=()), _rec(1, "a", 1.0)],
+        {"primary_key_required": False}, "has no key_properties",
+    ),
+    # refused inside a flush, mid-walk
+    "flush_error": (
+        [_schema(), _rec(1, "a", 1.0),
+         _schema(props=_PK_AS_STRING), _rec("one", "b", 2.0)],
+        {}, "primary-key column",
+    ),
+    "success": (
+        [_schema(), _rec(1, "a", 1.0), _rec(2, "b", 2.0),
+         _schema(props=dict(SCHEMA_PROPS, tag={"type": ["null", "string"]})),
+         _rec(2, "b2", 20.0, extra={"tag": "x"}),
+         _state({"t1": {"pos": 3}})],
+        {"batch_size_rows": 1}, None,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LEAK_CASES))
+def test_replay_releases_every_cache(spark, tmp_path, case):
+    """Replay persists the numbered capture lines and one parse per
+    (stream, SCHEMA epoch); every exit, each refusal included, releases
+    all of them."""
+    lines, kwargs, error = _LEAK_CASES[case]
+    cap = _write(tmp_path, lines)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    if error is None:
+        res = replay_capture(spark, cap, str(tmp_path / "tgt"), **kwargs)
+        assert res.n_flushes == 3
+        assert sorted(
+            tuple(r) for r in res.tables["t1"].read(spark)
+            .select("id", "name", "tag").collect()
+        ) == [(1, "a", None), (2, "b2", "x")]
+    else:
+        with pytest.raises(ValueError, match=error):
+            replay_capture(spark, cap, str(tmp_path / "tgt"), **kwargs)
+    assert persistent().size() == before
+
+
+def test_replay_numbers_the_capture_once(spark, tmp_path, monkeypatch):
+    """One replay reads and numbers the capture once, however many
+    streams, SCHEMA epochs and flushes it has: every pass derives from
+    the one cached lines frame."""
+    from pipelinewise_spark.sources import singer
+
+    calls = []
+    real = singer.capture_lines
+
+    def counting(spark_, path):
+        calls.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(singer, "capture_lines", counting)
+    props2 = dict(SCHEMA_PROPS, tag={"type": ["null", "string"]})
+    cap = _write(tmp_path, [
+        _schema(), _schema(stream="t2"),
+        _rec(1, "a", 1.0), _rec(1, "x", 9.0, stream="t2"),
+        _rec(2, "b", 2.0),
+        _state({"t1": {"pos": 2}, "t2": {"pos": 1}}),
+        _schema(props=props2),
+        _rec(1, "a2", 10.0, extra={"tag": "y"}),
+        _rec(2, "y", 8.0, stream="t2"),
+    ])
+    res = replay_capture(spark, cap, str(tmp_path / "tgt"), batch_size_rows=2)
+    assert calls == [cap]
+    assert res.n_flushes == 3
+    assert sorted(
+        tuple(r) for r in res.tables["t1"].read(spark)
+        .select("id", "name", "tag").collect()
+    ) == [(1, "a2", "y"), (2, "b", None)]
+    assert sorted(
+        tuple(r) for r in res.tables["t2"].read(spark)
+        .select("id", "name").collect()
+    ) == [(1, "x"), (2, "y")]
+
+
 # ------------------------------------------------------------ replay MOR
 
 
