@@ -65,6 +65,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # before any streaming fixture starts. Each setting gets its
             # own narrow guard so one unsupported key can't silently skip
             # the rest; a skipped setting is logged once per process.
+            # Static confs in session._DEFAULT_CONF (such as the sized
+            # codegen cache) are not applied here: Spark refuses to change
+            # a static conf on a running session, so a vanilla session
+            # keeps Spark's defaults for them.
             hadoop_conf = None
             for key, val in RUNTIME_CONF.items():
                 try:

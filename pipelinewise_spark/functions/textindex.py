@@ -40,6 +40,7 @@ from pipelinewise_spark.functions.retrieval import B, K1
 from pipelinewise_spark.functions.text import tokens
 from pipelinewise_spark.functions.indexlife import IndexLifecycle
 from pipelinewise_spark.partitioning import local_frame, spread
+from pipelinewise_spark.session import scoped_conf
 
 N_BUCKETS = 64
 _META = "_text_index.json"
@@ -176,10 +177,9 @@ def search_text_index(
     ]
     if not dirs:
         return local_frame(spark, [], "doc_id long, score double")
-    post = (
-        spark.read.parquet(*dirs)
-        .filter(F.col("term").isin(query_terms))
-    )
+    with scoped_conf(spark, mfs.known_paths_conf(spark, len(dirs))):
+        post = spark.read.parquet(*dirs)
+    post = post.filter(F.col("term").isin(query_terms))
     dfreq = post.groupBy("term").agg(
         F.countDistinct("doc_id").cast("double").alias("df")
     )

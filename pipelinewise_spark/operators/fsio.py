@@ -18,10 +18,18 @@ from __future__ import annotations
 
 import posixpath
 import uuid
+from typing import TYPE_CHECKING
 
 from pyarrow import fs as pafs
 
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
 _WARNED_NONCAS = False
+
+#: above this many paths in one read Spark lists them with a distributed
+#: job, one task per path
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 class MetaFS:
@@ -48,6 +56,24 @@ class MetaFS:
     def uri(self, *rel: str) -> str:
         """Spark-visible absolute path/URI for a root-relative path."""
         return posixpath.join(self.root_uri, *rel) if rel else self.root_uri
+
+    def known_paths_conf(
+        self, spark: SparkSession, n_paths: int
+    ) -> dict[str, str]:
+        """Conf (for ``session.scoped_conf``) under which Spark lists
+        ``n_paths`` paths under this root, which the engine already
+        knows, serially on the driver rather than with a distributed
+        listing job. Local filesystem only: there a path costs one
+        ``stat``, and serial listing beat the job at every count
+        measured (33 files: 0.07 s vs 0.37 s; 4,096: 0.91 s vs 18.0 s on
+        a 4-vCPU host), so no count is capped. Any other scheme keeps
+        Spark's threshold: on an object store each path is a network
+        round trip, which the parallel job can pay for."""
+        if not isinstance(self.fs, pafs.LocalFileSystem):
+            return {}
+        if n_paths <= int(spark.conf.get(LISTING_THRESHOLD)):
+            return {}
+        return {LISTING_THRESHOLD: str(n_paths)}
 
     # ---------------------------------------------------------------- io
     def exists(self, *rel: str) -> bool:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.fsio import MetaFS
+from pipelinewise_spark.session import scoped_conf
 
 _VERSION_FILE = "_VERSION"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -956,8 +957,16 @@ class ManifestTable:
         Partition values come from directory names; Spark's type inference
         would guess (e.g. '2026-01-01 00:00:00' -> timestamp) and break
         schema fidelity. Read them as strings and cast back to the types
-        recorded at write time. Discovery happens eagerly inside
-        reader.parquet(), so the conf toggle is scoped to this call.
+        recorded at write time.
+
+        The manifest already names every file, so planning must not pay
+        for a listing job: above
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+        paths, Spark lists them with a distributed job, one task per
+        path. On the local filesystem the files are listed serially on
+        the driver instead (``MetaFS.known_paths_conf``); other schemes
+        keep Spark's threshold. Listing happens eagerly inside
+        reader.parquet(), so both confs are scoped to this call.
 
         Entries carrying deletion vectors (``delete_where``) get their
         dead positions anti-joined out; ``keep_pos`` keeps the
@@ -966,13 +975,16 @@ class ManifestTable:
         """
         dv_files = sorted({p for e in entries for p in e.get("dv", [])})
         with_pos = keep_pos or bool(dv_files)
-        conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        try:
-            old_infer = spark.conf.get(conf_key)
-        except Exception:
-            old_infer = None
-        spark.conf.set(conf_key, "false")
-        try:
+        # group by write dir so hive partition cols reconstruct per base
+        by_base: dict[str, list[str]] = {}
+        for e in entries:
+            by_base.setdefault(e["base"], []).append(self.mfs.uri(e["path"]))
+        n_paths = max([len(dv_files), *map(len, by_base.values())])
+        conf = {
+            "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+            **self.mfs.known_paths_conf(spark, n_paths),
+        }
+        with scoped_conf(spark, conf):
             if not entries:
                 # empty slice (e.g. batch introduces a new partition value):
                 # derive the schema from any one live file + its partition cols
@@ -993,12 +1005,6 @@ class ManifestTable:
                         }
                     )
             else:
-                # group by write dir so hive partition cols reconstruct per base
-                by_base: dict[str, list[str]] = {}
-                for e in entries:
-                    by_base.setdefault(e["base"], []).append(
-                        self.mfs.uri(e["path"])
-                    )
                 dfs = []
                 for base, files in sorted(by_base.items()):
                     reader = spark.read.option(
@@ -1034,29 +1040,25 @@ class ManifestTable:
                 out = dfs[0]
                 for d in dfs[1:]:
                     out = out.unionByName(d, allowMissingColumns=True)
-        finally:
-            if old_infer is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, old_infer)
-        if dv_files:
-            # the sidecar schema is the DV CONTRACT (two fixed columns) —
-            # pass it explicitly so no poll/flush pays an inference job
-            dv = spark.read.schema(
-                "file_path string, row_index bigint"
-            ).parquet(*[self.mfs.uri(p) for p in dv_files])
-            # deletes are tiny relative to the table (the whole point of
-            # DVs); broadcast turns the anti-join into a map-side filter —
-            # the corpus never shuffles. Past the hint threshold Spark
-            # falls back to a shuffled anti-join on its own.
-            if sum(e.get("dv_rows", 0) for e in entries) <= 5_000_000:
-                dv = F.broadcast(dv)
-            out = out.join(
-                dv,
-                (F.col("__dv_path") == dv["file_path"])
-                & (F.col("__dv_pos") == dv["row_index"]),
-                "left_anti",
-            )
+            if dv_files:
+                # the sidecar schema is the DV CONTRACT (two fixed columns)
+                # — pass it explicitly so no poll/flush pays an inference job
+                dv = spark.read.schema(
+                    "file_path string, row_index bigint"
+                ).parquet(*[self.mfs.uri(p) for p in dv_files])
+                # deletes are tiny relative to the table (the whole point
+                # of DVs); broadcast turns the anti-join into a map-side
+                # filter — the corpus never shuffles. Past the hint
+                # threshold Spark falls back to a shuffled anti-join on
+                # its own.
+                if sum(e.get("dv_rows", 0) for e in entries) <= 5_000_000:
+                    dv = F.broadcast(dv)
+                out = out.join(
+                    dv,
+                    (F.col("__dv_path") == dv["file_path"])
+                    & (F.col("__dv_pos") == dv["row_index"]),
+                    "left_anti",
+                )
         if with_pos and not keep_pos:
             out = out.drop("__dv_path", "__dv_pos")
         hidden = [
@@ -2127,11 +2129,14 @@ class ManifestTable:
                 + [(s, es, m, "insert") for s, es in lost.items()]
             ):
                 rows = self._read_entries(spark, ents, as_of_m, keep_pos=True)
-                dv = F.broadcast(
-                    spark.read.schema(
-                        "file_path string, row_index bigint"
-                    ).parquet(*[self.mfs.uri(d) for d in dv_set])
-                )
+                with scoped_conf(
+                    spark, self.mfs.known_paths_conf(spark, len(dv_set))
+                ):
+                    dv = F.broadcast(
+                        spark.read.schema(
+                            "file_path string, row_index bigint"
+                        ).parquet(*[self.mfs.uri(d) for d in dv_set])
+                    )
                 hit = rows.join(
                     dv,
                     (F.col("__dv_path") == dv["file_path"])

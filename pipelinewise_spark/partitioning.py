@@ -15,6 +15,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipelinewise_spark.session import scoped_conf
+
 #: target bytes of streaming state per state store; each store is an
 #: open+checkpoint+commit of files EVERY micro-batch, so stores are a
 #: fixed per-batch cost, not parallelism
@@ -70,13 +72,8 @@ def state_sized_shuffle(spark: SparkSession, source_bytes: int | None = None):
             else (source_bytes + _STATE_STORE_BYTES - 1) // _STATE_STORE_BYTES
         )
         width = max(floor, per_state)
-    conf_key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, str(width))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         yield width
-    finally:
-        spark.conf.set(conf_key, old)
 
 
 def local_frame(

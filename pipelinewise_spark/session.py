@@ -7,6 +7,8 @@ and the driver contract all run identical plans.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -89,6 +91,13 @@ _DEFAULT_CONF = {
     # tolerate TIMESTAMP(NANOS) parquet (read as long; sources convert to µs)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # The generated-class cache is one LRU per JVM, 100 entries by
+    # default. One Singer replay compiles 103 classes, so every later
+    # replay in a long-lived process recompiled 35-72 of them (measured
+    # on a 4-vCPU host); at 2,000 a warm replay compiles none. Generated
+    # classes average 1.9 KB of bytecode, so a full cache is a few MB.
+    # Static: only session start can set it.
+    "spark.sql.codegen.cache.maxEntries": "2000",
     **RUNTIME_CONF,
     # quieter local runs
     "spark.ui.enabled": "false",
@@ -122,3 +131,21 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime confs for the ``with`` body only: every key gets its
+    prior value back on every exit, an exception included (a key that
+    was not set is unset again, so it keeps following Spark's default)."""
+    prior = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -446,7 +446,9 @@ def load_capture(
     ``target_root/<stream>``: per stream, records parse distributed,
     the last ACTIVATE_VERSION filters older versions, PK last-wins by
     capture position, and the result MERGEs into (or creates) the
-    table. The final STATE message becomes each stream's bookmark.
+    table. The final STATE message becomes each stream's bookmark. The
+    capture is read and numbered once: one cached lines frame feeds the
+    control-plane scan and every stream, and is released on every exit.
 
     Returns {stream: ParquetTable}. Captures with a mid-stream schema
     change load under the LAST schema (merge_upsert aligns columns);
@@ -468,37 +470,43 @@ def load_capture(
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     table_cls = _table_class(target_format)
-    # states="last": a CDC tap emits a STATE every few records — the
-    # bulk load consumes only the final one, so the full STATE stream
-    # never reaches the driver
-    plan = scan_control_plane(
-        spark, path, primary_key_required, states="last"
-    )
-    activations: dict[str, int] = {}
-    final_state: dict | None = None
-    for m in plan.messages:
-        if m["type"] == "ACTIVATE_VERSION":
-            activations[m["stream"]] = int(m["version"])
-        elif m["type"] == "STATE":
-            final_state = m["value"]
-    out: dict[str, Any] = {}
-    for stream, schema in plan.schemas.items():
-        struct = json_schema_to_struct(schema, float_compat)
-        recs = stream_records(spark, path, stream, struct)
-        if stream in activations:
-            recs = _apply_activate(recs, activations[stream])
-        pks = plan.key_properties[stream]
-        batch = (
-            _last_wins(recs, pks) if pks else recs
-        ).drop("lineno")
-        out[stream] = table_cls(f"{target_root}/{stream}")
-        # the whole capture is one ordered, last-wins batch (no guard
-        # needed); the activation also purges older-version rows the
-        # table already holds from earlier captures
-        _write_segment(
-            spark, out[stream], batch, pks, version_suffix,
-            activate=activations.get(stream),
+    # one cached read of the capture serves the control plane and every
+    # stream's records
+    lines = _cached_lines(spark, path)
+    try:
+        # states="last": a CDC tap emits a STATE every few records — the
+        # bulk load consumes only the final one, so the full STATE stream
+        # never reaches the driver
+        plan = scan_control_plane(
+            spark, path, primary_key_required, states="last", lines=lines
         )
+        activations: dict[str, int] = {}
+        final_state: dict | None = None
+        for m in plan.messages:
+            if m["type"] == "ACTIVATE_VERSION":
+                activations[m["stream"]] = int(m["version"])
+            elif m["type"] == "STATE":
+                final_state = m["value"]
+        out: dict[str, Any] = {}
+        for stream, schema in plan.schemas.items():
+            struct = json_schema_to_struct(schema, float_compat)
+            recs = record_rows(lines, stream, struct)
+            if stream in activations:
+                recs = _apply_activate(recs, activations[stream])
+            pks = plan.key_properties[stream]
+            batch = (
+                _last_wins(recs, pks) if pks else recs
+            ).drop("lineno")
+            out[stream] = table_cls(f"{target_root}/{stream}")
+            # the whole capture is one ordered, last-wins batch (no guard
+            # needed); the activation also purges older-version rows the
+            # table already holds from earlier captures
+            _write_segment(
+                spark, out[stream], batch, pks, version_suffix,
+                activate=activations.get(stream),
+            )
+    finally:
+        lines.unpersist()
     _adopt_bookmarks(bookmarks, final_state)
     return out
 

@@ -41,6 +41,7 @@ from pipelinewise_spark.operators.scd import (
 from pipelinewise_spark.operators.sdc import SDC_EXTRACTED_AT
 from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
+from pipelinewise_spark.session import scoped_conf
 from pipelinewise_spark.streaming.cdc import (
     envelope_schema,
     prepare_change_batch,
@@ -141,11 +142,12 @@ def read_closed_log(spark: SparkSession, closed_dir: str) -> DataFrame:
     ]
     if committed and len(committed) < len(epochs):
         paths = [mfs.uri(e) for e in committed]
-        return (
-            spark.read.option("basePath", closed_dir)
-            .parquet(*paths)
-            .drop("epoch")
-        )
+        with scoped_conf(spark, mfs.known_paths_conf(spark, len(paths))):
+            return (
+                spark.read.option("basePath", closed_dir)
+                .parquet(*paths)
+                .drop("epoch")
+            )
     # all epochs committed (the normal case: one listing, no per-epoch
     # paths in the plan) — or none are, where the whole-dir read keeps
     # the pre-r13 error surface for an empty/missing log

@@ -727,6 +727,90 @@ def test_replay_numbers_the_capture_once(spark, tmp_path, monkeypatch):
     ) == [(1, "x"), (2, "y")]
 
 
+@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+def test_load_capture_reads_the_capture_once(
+    spark, tmp_path, monkeypatch, target_format
+):
+    """A bulk load reads and numbers the capture once for its control
+    plane and every stream, and releases that cache."""
+    from pipelinewise_spark.sources import singer
+
+    calls = []
+    real = singer.capture_lines
+
+    def counting(spark_, path):
+        calls.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(singer, "capture_lines", counting)
+    cap = _write(tmp_path, [
+        _schema(), _schema(stream="t2"),
+        _rec(1, "a", 1.0, version=1), _rec(1, "x", 9.0, stream="t2"),
+        _rec(2, "b", 2.0, version=1), _rec(1, "a2", 10.0, version=2),
+        _state({"t1": {"pos": 2}}),
+        _rec(2, "y", 8.0, stream="t2"), _activate(2),
+        _state({"t1": {"pos": 3}, "t2": {"pos": 2}}),
+    ])
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    out = load_capture(
+        spark, cap, str(tmp_path / "tgt"), target_format=target_format
+    )
+    assert calls == [cap]
+    assert persistent().size() == before
+    assert sorted(
+        tuple(r) for r in out["t1"].read(spark)
+        .select("id", "name", "amount", "_sdc_table_version").collect()
+    ) == [(1, "a2", 10.0, 2)]
+    assert sorted(
+        tuple(r) for r in out["t2"].read(spark)
+        .select("id", "name", "amount").collect()
+    ) == [(1, "x", 9.0), (2, "y", 8.0)]
+
+
+def test_warm_replay_compiles_no_classes(spark, tmp_path):
+    """The session's generated-class cache holds a whole replay's
+    classes: a second replay of the same capture compiles none. This
+    three-stream capture with SCHEMA re-emits and 11 flushes compiles
+    over 140 classes, more than Spark's default cache of 100 entries,
+    under which the second replay recompiled 131 of them."""
+    props2 = dict(SCHEMA_PROPS, tag={"type": ["null", "string"]})
+    props3 = dict(
+        SCHEMA_PROPS, ok={"type": ["null", "boolean"]},
+        at={"type": ["null", "string"], "format": "date-time"},
+    )
+    lines = [_schema(), _schema(stream="t2"),
+             _schema(stream="t3", props=props3)]
+    for i in range(1, 13):
+        lines += [_rec(i, f"a{i}", float(i)),
+                  _rec(i, f"x{i}", 9.0 + i, stream="t2"),
+                  _rec(i, "n", 1.0, stream="t3")]
+        if i == 6:
+            lines += [_state({"t1": {"pos": i}}), _schema(props=props2),
+                      _schema(stream="t2", props=props2)]
+        if i % 4 == 0:
+            lines.append(_rec(i - 1, f"fix{i}", 0.5,
+                              extra={"tag": "f"} if i > 6 else None))
+    cap = _write(tmp_path, lines)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount
+
+    def replay(name):
+        res = replay_capture(
+            spark, cap, str(tmp_path / name), batch_size_rows=4
+        )
+        assert res.n_flushes == 11
+        return sorted(
+            tuple(r) for r in res.tables["t1"].read(spark)
+            .select("id", "name", "tag").collect()
+        )
+
+    first = replay("a")
+    before = compiled()
+    assert replay("b") == first
+    assert compiled() == before
+
+
 # ------------------------------------------------------------ replay MOR
 
 

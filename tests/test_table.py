@@ -188,3 +188,94 @@ def test_unknown_merge_strategy_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown merge_strategy"):
         apply_change_batch(t, batch, spec)
     assert not t.exists()
+
+
+_SCOPED_CONFS = (
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
+)
+
+
+def _jobs_started_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts. A sentinel job in a second
+    group runs after fn: the listener reports jobs in start order, so once
+    the sentinel shows, every job fn started has been counted."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, sentinel = (f"{n}-{uuid.uuid4().hex[:8]}" for n in ("fn", "sent"))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_known_paths_read_lists_on_the_driver(spark, tmp_path):
+    """A write dir holding more than Spark's parallel-listing threshold
+    (32 paths) of files is read without a listing job: the manifest names
+    every file, so a warm read (schema cached), with or without a
+    deletion vector, starts no Spark job at all. Both confs the read
+    scopes are back at their prior values after every read, a refused
+    one included."""
+
+    def confs():
+        # None: not set in the session, so Spark's default applies
+        return {k: spark.conf.get(k, None) for k in _SCOPED_CONFS}
+
+    prior = confs()
+    t = ManifestTable(os.path.join(str(tmp_path), "t"))
+    t.overwrite(
+        spark.range(200)
+        .select("id", (F.col("id") % 7).alias("v"))
+        .repartition(40)
+    )
+    entries, _ = t.select_entries()
+    assert len({e["base"] for e in entries}) == 1 and len(entries) > 32
+
+    def rows():
+        return sorted(tuple(r) for r in t.read(spark).collect())
+
+    assert rows() == [(i, i % 7) for i in range(200)]  # warms the schema
+    assert confs() == prior
+    assert _jobs_started_by(spark, lambda: t.read(spark)) == 0
+    assert confs() == prior
+
+    t.delete_where(spark, F.col("v") == 0)
+    assert any(e.get("dv") for e in t.select_entries()[0])
+    assert _jobs_started_by(spark, lambda: t.read(spark)) == 0
+    assert confs() == prior
+    assert rows() == [(i, i % 7) for i in range(200) if i % 7]
+
+    # a partitioned write of no rows publishes a manifest with no files
+    empty = ManifestTable(
+        os.path.join(str(tmp_path), "empty"), partition_by=["v"]
+    )
+    empty.overwrite(spark.createDataFrame([], "id long, v long"))
+    with pytest.raises(ValueError, match="empty manifest"):
+        empty.read(spark)
+    assert confs() == prior
+
+
+def test_known_paths_conf_is_local_only(spark, tmp_path):
+    """Serial listing is chosen only for local paths beyond Spark's
+    threshold; any other scheme keeps Spark's setting."""
+    from pipelinewise_spark.operators.fsio import LISTING_THRESHOLD, MetaFS
+
+    threshold = int(spark.conf.get(LISTING_THRESHOLD))
+    local = MetaFS(str(tmp_path))
+    assert local.known_paths_conf(spark, threshold) == {}
+    assert local.known_paths_conf(spark, threshold + 1) == {
+        LISTING_THRESHOLD: str(threshold + 1)
+    }
+    assert MetaFS("mock:///t").known_paths_conf(spark, 4096) == {}
