@@ -35,34 +35,6 @@ NUM_BANDS = 8  # rows per band = NUM_HASHES / NUM_BANDS = 2
 SIMHASH_BITS = 32
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of lower(trim(text))."""
-    toks = tokens(col)
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    gram = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    # guard: sequence() runs backwards when size < n — emit [] instead
-    return F.when(F.size(toks) >= n, F.array_distinct(gram)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def char_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of lower(trim(text))."""
-    t = F.lower(F.trim(col))
-    idx = F.sequence(F.lit(1), F.length(t) - (n - 1))
-    grams = F.array_distinct(
-        F.transform(idx, lambda i: F.substring(t, i, F.lit(n)))
-    )
-    return F.when(F.length(t) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group by canonical fingerprint; keep lowest id as survivor."""
     return (
@@ -681,14 +653,6 @@ def vacuum_lsh_index(path: str) -> list[str]:
     """Delete index data dirs no longer referenced by the meta pointer
     (shared IndexLifecycle.vacuum). Returns the removed dir names."""
     return _load_index_life(path).vacuum()
-
-
-def lsh_index_status(path: str) -> dict:
-    """Staleness/maintenance surface (metadata-only): the shared
-    lifecycle counters plus the live band-fragment file count — the
-    number an ingest daemon thresholds on to schedule
-    :func:`compact_lsh_index`."""
-    return _load_index_life(path).status(fragment_role="bands")
 
 
 def minhash_lsh_pairs_against_index(

@@ -49,7 +49,3 @@ def add_sdc_columns(
         .withColumn(SDC_BATCHED_AT, _ts(batched_at))
         .withColumn(SDC_DELETED_AT, deleted)
     )
-
-
-def drop_sdc_columns(df: DataFrame) -> DataFrame:
-    return df.drop(*[c for c in SDC_COLUMNS if c in df.columns])

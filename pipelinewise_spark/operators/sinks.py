@@ -33,19 +33,3 @@ def write_csv_target(
     if compression:
         writer = writer.option("compression", compression)
     writer.csv(path)
-
-
-def write_jsonl_target(
-    df: DataFrame,
-    path: str,
-    compression: str | None = "gzip",
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    writer = (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-    )
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)

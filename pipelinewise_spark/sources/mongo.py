@@ -20,7 +20,6 @@ taken as UTC (the engine pins UTC end-to-end) instead of tzlocal.
 
 from __future__ import annotations
 
-import base64 as _b64
 import datetime as _dt
 import json
 from typing import Any
@@ -189,8 +188,3 @@ def document_field(df: DataFrame, path: str, alias: str | None = None) -> DataFr
         alias or path.replace(".", "_"),
         F.get_json_object(F.col(DOC_COLUMN), "$." + path),
     )
-
-
-# compat: base64 helper referenced by tests for fixture building
-def b64(data: bytes) -> str:
-    return _b64.b64encode(data).decode("ascii")

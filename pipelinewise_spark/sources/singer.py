@@ -52,6 +52,10 @@ Two entry points, one contract:
   the window's shuffle partitions would launch an empty task per
   partition in every later job.
 
+Every face and :func:`capture_status` summarise a capture the same
+way: :func:`scan_control_plane`'s capped control-line collect plus
+:func:`capture_summary`'s one grouped aggregate.
+
 A capture is ONE NDJSON file (a single tap run's stdout); line order
 is the file's physical order (per-file block-ordered row_number, same
 mechanism as sources/files.py line numbering).
@@ -85,11 +89,11 @@ def capture_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _typed_lines(spark: SparkSession, path: str) -> DataFrame:
-    """(lineno, type, stream, line): :func:`capture_lines` plus the two
-    envelope fields every control-plane pass filters or groups on."""
-    return capture_lines(spark, path).select(
-        "lineno",
+def _typed(lines: DataFrame, position: str = "lineno") -> DataFrame:
+    """``(<position>, type, stream, line)``, the frame every Singer face
+    reads: numbered ``line``s plus the two envelope fields."""
+    return lines.select(
+        position,
         F.get_json_object("line", "$.type").alias("type"),
         F.get_json_object("line", "$.stream").alias("stream"),
         "line",
@@ -97,7 +101,7 @@ def _typed_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _cached_lines(spark: SparkSession, path: str) -> DataFrame:
-    """:func:`_typed_lines` collapsed to one partition and persisted
+    """The :func:`_typed` capture collapsed to one partition and persisted
     (MEMORY_AND_DISK: spills, never OOMs), so a multi-pass reader reads
     and numbers the capture once; the caller unpersists. One partition:
     the per-file window already holds every row of the capture in one
@@ -106,7 +110,7 @@ def _cached_lines(spark: SparkSession, path: str) -> DataFrame:
     from pyspark import StorageLevel
 
     return (
-        _typed_lines(spark, path)
+        _typed(capture_lines(spark, path))
         .coalesce(1)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -144,44 +148,48 @@ def _control_message(line: str, primary_key_required: bool) -> dict:
 
 def scan_control_plane(
     spark: SparkSession,
-    path: str,
+    path: str | None,
     primary_key_required: bool = True,
     *,
     states: str = "all",
     max_control_lines: int = 1_000_000,
     lines: DataFrame | None = None,
+    position: str = "lineno",
+    refusal: str | None = None,
 ) -> CapturePlan:
-    """Collect the SCHEMA/STATE/ACTIVATE_VERSION lines (never RECORDs)
-    with their positions, each validated by :func:`_control_message`.
+    """The capture summary's first driver pass: collect the
+    SCHEMA/STATE/ACTIVATE_VERSION lines (never RECORDs), each validated
+    by :func:`_control_message`, with its ``__position``.
 
     Driver memory is BOUNDED: ``states="last"`` keeps only the final
     STATE line (all a bulk load consumes — CDC taps emit a STATE every
     few records, so the full STATE stream is O(records)); with
     ``states="all"`` (the faithful-replay walk needs every STATE's
     position) the collect is capped at ``max_control_lines`` and
-    refuses loudly beyond it.
+    refuses loudly beyond it (``refusal`` replaces the message).
 
-    ``lines`` is an already-built ``(lineno, type, stream, line)``
-    frame of ``path`` (a multi-pass caller's cached one); without it
-    the capture is read here."""
+    ``lines`` is a multi-pass caller's :func:`_typed` frame, numbered
+    by ``position`` (``lineno``, or tail-follow's ``_sdc_sequence``);
+    without it ``path`` is read here."""
     if states not in ("all", "last"):
         raise ValueError(f"states must be 'all' or 'last', got {states!r}")
     if lines is None:
-        lines = _typed_lines(spark, path)
+        lines = _typed(capture_lines(spark, path))
     t = F.col("type")
-    ctl = lines.select("lineno", "type", "line").filter(
+    ctl = lines.select(position, "type", "line").filter(
         t.isNull() | (t != "RECORD")
     )
     if states == "last":
         ctl = ctl.filter(t.isNull() | (t != "STATE")).unionByName(
             ctl.filter(t == "STATE")
-            .orderBy(F.col("lineno").desc())
+            .orderBy(F.col(position).desc())
             .limit(1)
         )
     rows = ctl.limit(max_control_lines + 1).collect()
     if len(rows) > max_control_lines:
         raise ValueError(
-            f"capture has more than {max_control_lines} control "
+            refusal
+            or f"capture has more than {max_control_lines} control "
             "(non-RECORD) lines — collecting them would exhaust driver "
             "memory; use load_capture (which needs only the last STATE) "
             "or raise max_control_lines explicitly"
@@ -189,15 +197,80 @@ def scan_control_plane(
     schemas: dict[str, dict] = {}
     keys: dict[str, list[str]] = {}
     messages: list[dict] = []
-    for r in sorted(rows, key=lambda r: r["lineno"]):
+    for r in sorted(rows, key=lambda r: r[position]):
         o = _control_message(r["line"], primary_key_required)
-        o["__lineno"] = r["lineno"]
+        o["__position"] = r[position]
         if o["type"] == "SCHEMA":
             schemas[o["stream"]] = o["schema"]
             keys[o["stream"]] = list(o.get("key_properties") or [])
         messages.append(o)
     return CapturePlan(schemas=schemas, key_properties=keys,
                        messages=messages)
+
+
+def capture_summary(
+    lines: DataFrame,
+    position: str = "lineno",
+    boundaries: dict[str, list] | None = None,
+) -> list:
+    """The capture summary's second driver pass: ONE grouped aggregate
+    over a :func:`_typed` frame, a row per (type, stream, segment) with
+    ``n``, ``first``/``last`` position and, for RECORDs,
+    ``n_unversioned`` and ``max_version``. ``segment`` counts the
+    stream's ``boundaries`` (its SCHEMA/ACTIVATE_VERSION positions)
+    before the line: 0 without boundaries."""
+    pos = F.col(position)
+    marks = [
+        F.struct(F.lit(s).alias("s"), F.lit(p).alias("p"))
+        for s, ps in (boundaries or {}).items() for p in ps
+    ]
+    segment = F.size(F.filter(
+        F.array(*marks), lambda m: (m["s"] == F.col("stream")) & (m["p"] < pos)
+    )) if marks else F.lit(0)
+    version = F.when(
+        F.col("type") == "RECORD",
+        F.get_json_object("line", "$.version").try_cast("long"),
+    )
+    return (
+        lines.groupBy("type", "stream", segment.alias("segment"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(pos).alias("first"),
+            F.max(pos).alias("last"),
+            F.count_if(version.isNull()).alias("n_unversioned"),
+            F.max(version).alias("max_version"),
+        )
+        .collect()
+    )
+
+
+def _check_schema_first(
+    groups: list,
+    streams=None,
+    *,
+    ordered: bool = True,
+    missing: str = " (no SCHEMA message for that stream in the capture)",
+) -> None:
+    """``persist_lines``' refusal of a RECORD before its stream's SCHEMA,
+    from a :func:`capture_summary`: each of ``streams`` (default: all)
+    with records needs a SCHEMA line, before its first RECORD unless
+    ``ordered`` is off (the bulk face is order-insensitive)."""
+    first: dict = {}
+    for g in groups:
+        k = (g["type"], g["stream"])
+        first[k] = min(first.get(k, g["first"]), g["first"])
+    for stream in streams or [s for t, s in first if t == "RECORD"]:
+        rec, sch = first.get(("RECORD", stream)), first.get(("SCHEMA", stream))
+        if rec is None:
+            continue
+        if sch is None:
+            raise ValueError(
+                f"RECORD for stream {stream!r} before its SCHEMA{missing}"
+            )
+        if ordered and rec < sch:
+            raise ValueError(
+                f"RECORD for stream {stream!r} before its SCHEMA"
+            )
 
 
 def stream_records(
@@ -208,7 +281,7 @@ def stream_records(
 ) -> DataFrame:
     """This stream's RECORD payloads, parsed distributed: (lineno,
     _sdc_table_version, _sdc_extracted_at, <record columns>)."""
-    return record_rows(capture_lines(spark, path), stream, struct)
+    return record_rows(_typed(capture_lines(spark, path)), stream, struct)
 
 
 def record_rows(
@@ -218,12 +291,11 @@ def record_rows(
     position: str = "lineno",
 ) -> DataFrame:
     """The RECORD-line projection shared by every Singer face: this
-    stream's records from a ``(line, <position>)`` frame as (position,
+    stream's records from a :func:`_typed` frame as (position,
     _sdc_table_version, _sdc_extracted_at, <record columns>). The JSON
     stays executor-side end to end (get_json_object + from_json)."""
     rec = lines.filter(
-        (F.get_json_object("line", "$.type") == "RECORD")
-        & (F.get_json_object("line", "$.stream") == stream)
+        (F.col("type") == "RECORD") & (F.col("stream") == stream)
     )
     return rec.select(
         position,
@@ -480,6 +552,9 @@ def load_capture(
         plan = scan_control_plane(
             spark, path, primary_key_required, states="last", lines=lines
         )
+        # order-insensitive: a stream's records load under its SCHEMA
+        # wherever that sits, but records with none cannot load at all
+        _check_schema_first(capture_summary(lines), ordered=False)
         activations: dict[str, int] = {}
         final_state: dict | None = None
         for m in plan.messages:
@@ -549,7 +624,7 @@ def _records_meta(
     for m in plan.messages:
         if m["type"] == "SCHEMA":
             epochs.setdefault(m["stream"], []).append(
-                (m["__lineno"], m["schema"])
+                (m["__position"], m["schema"])
             )
     window = None
     if lo is not None:
@@ -652,7 +727,7 @@ def _iter_capture_events(
     still dominates long before that matters, and load_capture remains
     the bulk path."""
     ctl = sorted(
-        (m["__lineno"], m["type"], m) for m in plan.messages
+        (m["__position"], m["type"], m) for m in plan.messages
     )
     lo = 1
     while lo <= n_lines:
@@ -714,11 +789,11 @@ def replay_capture(
     pass over stdin: one cached, single-partition ``(lineno, type,
     stream, line)`` frame (MEMORY_AND_DISK — it spills rather than
     OOMs; one partition because AQE does not coalesce a cached plan's
-    shuffle partitions) feeds one grouped aggregate (RECORD count for
-    ``max_records``, line count, each stream's first RECORD for the
-    RECORD-before-SCHEMA check), the control-plane collect, the record
-    index and the per-(stream, SCHEMA epoch) parses. It and the parse
-    caches are released on every exit, error paths included.
+    shuffle partitions) feeds the summary every face runs — the
+    :func:`capture_summary` aggregate (counts for ``max_records``, first
+    RECORD and SCHEMA per stream) and the control-plane collect — then
+    the record index and the per-(stream, SCHEMA epoch) parses. It and
+    the parse caches are released on every exit, error paths included.
 
     Every flush is DISTRIBUTED: the buffered linenos form a contiguous
     per-stream range since the last flush, so the batch is a range
@@ -811,23 +886,9 @@ def replay_capture(
 
     lines = _cached_lines(spark, path)
     try:
-        # one grouped aggregate for every whole-capture figure
-        is_rec = F.col("type") == "RECORD"
-        stats = (
-            lines.groupBy(
-                is_rec.alias("rec"),
-                F.when(is_rec, F.col("stream")).alias("stream"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("lineno").alias("first"),
-                F.max("lineno").alias("last"),
-            )
-            .collect()
-        )
-        n_lines = max((r["last"] for r in stats), default=0)
-        first_rec = {r["stream"]: r["first"] for r in stats if r["rec"]}
-        n_rec = sum(r["n"] for r in stats if r["rec"])
+        groups = capture_summary(lines)
+        n_lines = max((g["last"] for g in groups), default=0)
+        n_rec = sum(g["n"] for g in groups if g["type"] == "RECORD")
         if max_records is not None and n_rec > max_records:
             raise ValueError(
                 f"capture has more than {max_records} RECORD lines — "
@@ -848,20 +909,7 @@ def replay_capture(
                     "append-only streams"
                 )
         # fail fast on RECORDs with no (or a not-yet-emitted) SCHEMA
-        first_schema: dict[str, int] = {}
-        for m in plan.messages:
-            if m["type"] == "SCHEMA":
-                first_schema.setdefault(m["stream"], m["__lineno"])
-        for stream, first in first_rec.items():
-            if stream not in first_schema:
-                raise ValueError(
-                    f"RECORD for stream {stream!r} before its SCHEMA "
-                    "(no SCHEMA message for that stream in the capture)"
-                )
-            if first < first_schema[stream]:
-                raise ValueError(
-                    f"RECORD for stream {stream!r} before its SCHEMA"
-                )
+        _check_schema_first(groups)
         # one ordered walk over control messages + record tuples, the
         # record index collected one bounded window at a time
         events = _iter_capture_events(
@@ -1131,19 +1179,16 @@ def capture_status(
     """Inspect a capture without loading it: per stream the RECORD
     count, SCHEMA epoch count, key_properties and last
     ACTIVATE_VERSION, plus message-type totals and the final STATE.
-    ONE distributed (type, stream)-grouped aggregate for every count —
-    the full STATE stream of a CDC tap never reaches the driver — and
-    the capped control-plane scan for the schemas (``states="last"``),
-    both over one cached read of the capture. The ops answer to "what
+    The summary every Singer face runs, over one cached read: the
+    :func:`capture_summary` aggregate for every count (a CDC tap's full
+    STATE stream never reaches the driver) and the capped control-plane
+    scan (``states="last"``) for keys, versions and the final STATE.
+    The ops answer to "what
     is in this capture and is it loadable?" before committing to a bulk
     load or replay."""
     lines = _cached_lines(spark, path)
     try:
-        counts = (
-            lines.groupBy("type", "stream")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
+        groups = capture_summary(lines)
         plan = scan_control_plane(
             spark, path, primary_key_required, states="last", lines=lines
         )
@@ -1151,18 +1196,18 @@ def capture_status(
         lines.unpersist()
     by_type: dict[str, int] = {}
     records: dict[str, int] = {}
-    for r in counts:
-        t = r["type"] or "<missing type>"
-        by_type[t] = by_type.get(t, 0) + r["n"]
-        if t == "RECORD":
-            records[r["stream"]] = r["n"]
     epochs: dict[str, int] = {}
+    for g in groups:
+        t = g["type"] or "<missing type>"
+        by_type[t] = by_type.get(t, 0) + g["n"]
+        if t == "RECORD":
+            records[g["stream"]] = g["n"]
+        elif t == "SCHEMA":
+            epochs[g["stream"]] = g["n"]
     last_version: dict[str, int] = {}
     final_state = None
     for m in plan.messages:
-        if m["type"] == "SCHEMA":
-            epochs[m["stream"]] = epochs.get(m["stream"], 0) + 1
-        elif m["type"] == "ACTIVATE_VERSION":
+        if m["type"] == "ACTIVATE_VERSION":
             last_version[m["stream"]] = int(m["version"])
         elif m["type"] == "STATE":
             final_state = m["value"]

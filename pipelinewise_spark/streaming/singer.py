@@ -31,10 +31,13 @@ micro-batch applies its slice with the same per-stream semantics:
   discipline (target_snowflake/__init__.py:323-416) at micro-batch
   granularity: a bookmark never runs ahead of unlanded records.
 
-Driver state is BOUNDED: per batch only the control lines (capped at
-``max_control_lines``) and the schema-registry sidecar; record payloads
-and sequence values stay executor-side end to end — the faithful batch
-replay's O(records) driver index does not exist on this path.
+Driver state is BOUNDED: per batch the capture summary every Singer
+face runs — the control lines (capped at ``max_control_lines``) and one
+grouped aggregate, a row per (type, stream, segment) — and the
+schema-registry sidecar; record payloads stay executor-side. Besides
+its writes and purges a micro-batch runs only those two passes: the
+RECORD-before-SCHEMA check and the skip of a segment with nothing to
+land are decided from the aggregate on the driver.
 """
 
 from __future__ import annotations
@@ -52,12 +55,15 @@ from pipelinewise_spark.streaming.bounded import await_bounded
 from pipelinewise_spark.sources.singer import (
     _adopt_bookmarks,
     _apply_activate,
-    _control_message,
+    _check_schema_first,
     _last_wins,
     _purge_older_versions,
     _table_class,
+    _typed,
     _write_segment,
+    capture_summary,
     record_rows,
+    scan_control_plane,
 )
 
 #: global capture position persisted into the target — the MERGE
@@ -103,21 +109,22 @@ class CaptureStreamState:
 
 
 def _sequenced_lines(batch: DataFrame) -> DataFrame:
-    """(line, _sdc_sequence) for one micro-batch — the global capture
-    position: file basename (names sort in write order by contract) +
-    the physical line number inside the file, zero-padded so the string
+    """(_sdc_sequence, type, stream, line) for one micro-batch — the
+    batch faces' frame shape, numbered by the global capture position:
+    file basename (names sort in write order by contract) + the
+    physical line number inside the file, zero-padded so the string
     order IS the numeric order."""
     fname = F.element_at(F.split(F.col("__file"), "/"), -1)
     w = Window.partitionBy("__file").orderBy(
         F.col("__block"), F.monotonically_increasing_id()
     )
-    return batch.select(
+    return _typed(batch.select(
         F.col("value").alias("line"),
         F.concat(
             fname, F.lit(":"),
             F.lpad(F.row_number().over(w).cast("string"), 12, "0"),
         ).alias(SDC_SEQUENCE),
-    )
+    ), SDC_SEQUENCE)
 
 
 def apply_capture_batch(
@@ -159,126 +166,77 @@ def apply_capture_batch(
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     table_cls = _table_class(target_format)
-    # no more partitions than the batch's input splits (one per capture
-    # file under the split size): the per-file window fills at most one
-    # of its shuffle partitions per file, and AQE does not coalesce a
-    # cached plan, so each later job would run every empty one. Splits,
-    # not files: a foreachBatch frame does not list its files
-    # (inputFiles() is empty), and counting them would cost a job.
+    # A one-split batch (one capture file under the split size) is
+    # numbered in place: one partition satisfies the per-file window
+    # and the summary's grouping, so neither shuffles. A larger batch
+    # shuffles by file and keeps no more partitions than its splits: the
+    # window fills at most one shuffle partition per file, and AQE does
+    # not coalesce a cached plan, so each later job would run every
+    # empty one. Splits, not files: a foreachBatch frame does not list
+    # its files (inputFiles() is empty), and counting them costs a job.
+    n_splits = batch.rdd.getNumPartitions()
     lines = (
-        _sequenced_lines(batch)
-        .coalesce(max(1, batch.rdd.getNumPartitions()))
+        _sequenced_lines(batch.coalesce(1) if n_splits <= 1 else batch)
+        .coalesce(max(1, n_splits))
         .persist()
     )
     try:
-        ctl = (
-            lines.select(
-                SDC_SEQUENCE,
-                F.get_json_object("line", "$.type").alias("t"),
-                "line",
-            )
-            .filter(F.col("t").isNull() | (F.col("t") != "RECORD"))
-            .orderBy(SDC_SEQUENCE)
-            .limit(max_control_lines + 1)
-            .collect()
+        plan = scan_control_plane(
+            spark, None, primary_key_required,
+            max_control_lines=max_control_lines, lines=lines,
+            position=SDC_SEQUENCE,
+            refusal=f"micro-batch has more than {max_control_lines} "
+            "control (non-RECORD) lines — raise max_control_lines or "
+            "shrink maxFilesPerTrigger",
         )
-        if len(ctl) > max_control_lines:
-            raise ValueError(
-                f"micro-batch has more than {max_control_lines} control "
-                "(non-RECORD) lines — raise max_control_lines or shrink "
-                "maxFilesPerTrigger"
-            )
-        events = [
-            (r[SDC_SEQUENCE],
-             _control_message(r["line"], primary_key_required))
-            for r in ctl
-        ]
 
-        # record streams present in this batch (to catch RECORD-before-
-        # SCHEMA and to skip untouched streams below)
-        rec_streams = {
-            r["s"]
-            for r in lines.filter(
-                F.get_json_object("line", "$.type") == "RECORD"
-            )
-            .select(
-                F.get_json_object("line", "$.stream").alias("s")
-            )
-            .distinct()
-            .collect()
+        # per-stream control timelines for this batch; SCHEMA and AV
+        # lines are the segment boundaries (an AV splits segments so its
+        # purge lands at its capture position)
+        boundaries: dict[str, list[tuple[str, str, Any]]] = {}
+        state_events: list[tuple[str, dict]] = []
+        for o in plan.messages:
+            seq = o["__position"]
+            if o["type"] == "STATE":
+                state_events.append((seq, o["value"]))
+            else:
+                boundaries.setdefault(o["stream"], []).append(
+                    (seq, o["type"], o)
+                )
+        # one grouped aggregate: each stream's records per segment
+        groups = capture_summary(lines, SDC_SEQUENCE, {
+            s: [seq for seq, _, _ in b] for s, b in boundaries.items()
+        })
+        segments = {
+            (g["stream"], g["segment"]): g
+            for g in groups if g["type"] == "RECORD"
         }
 
-        # per-stream control timelines for this batch
-        schema_events: dict[str, list[tuple[str, dict]]] = {}
-        av_events: dict[str, list[tuple[str, int]]] = {}
-        state_events: list[tuple[str, dict]] = []
-        for seq, o in events:
-            if o["type"] == "SCHEMA":
-                schema_events.setdefault(o["stream"], []).append((seq, o))
-            elif o["type"] == "ACTIVATE_VERSION":
-                av_events.setdefault(o["stream"], []).append(
-                    (seq, int(o["version"]))
-                )
-            else:
-                state_events.append((seq, o["value"]))
-
-        touched = sorted(
-            rec_streams | set(schema_events) | set(av_events)
-        )
-        for stream in touched:
-            sch = list(schema_events.get(stream, []))
+        for stream in sorted({s for s, _ in segments} | set(boundaries)):
             if stream not in state.schemas:
-                if not sch:
-                    raise ValueError(
-                        f"RECORD for stream {stream!r} before its SCHEMA"
-                    )
-                first_seq = sch[0][0]
-                early = (
-                    lines.filter(
-                        (F.get_json_object("line", "$.type") == "RECORD")
-                        & (
-                            F.get_json_object("line", "$.stream")
-                            == stream
-                        )
-                        & (F.col(SDC_SEQUENCE) < F.lit(first_seq))
-                    )
-                    .limit(1)
-                    .collect()
-                )
-                if early:
-                    raise ValueError(
-                        f"RECORD for stream {stream!r} before its SCHEMA"
-                    )
-            # epoch boundaries inside this batch: carry-in schema, then
-            # each SCHEMA line; AV events split segments too so the
-            # purge lands at its capture position
-            boundaries: list[tuple[str, str, Any]] = [
-                (seq, "SCHEMA", o) for seq, o in sch
-            ] + [
-                (seq, "AV", v) for seq, v in av_events.get(stream, [])
-            ]
-            boundaries.sort(key=lambda e: e[0])
+                _check_schema_first(groups, [stream], missing="")
             cur_schema = state.schemas.get(stream)
             cur_kp = state.key_properties.get(stream, [])
             table = table_cls(f"{target_root}/{stream}")
 
-            def flush_segment(lo: str | None, hi: str | None) -> None:
-                if cur_schema is None:
-                    return
+            def flush_segment(i: int, lo: str | None, hi: str | None):
+                g = segments.get((stream, i))
+                act = state.activations.get(stream)
+                if g is None or (
+                    act is not None and g["n_unversioned"] == 0
+                    and g["max_version"] < act
+                ):
+                    return  # _apply_activate would leave it empty
                 struct = json_schema_to_struct(cur_schema, float_compat)
                 seg = record_rows(lines, stream, struct, SDC_SEQUENCE)
                 if lo is not None:
                     seg = seg.filter(F.col(SDC_SEQUENCE) > F.lit(lo))
                 if hi is not None:
                     seg = seg.filter(F.col(SDC_SEQUENCE) < F.lit(hi))
-                if stream in state.activations:
-                    seg = _apply_activate(
-                        seg, state.activations[stream]
-                    )
+                if act is not None:
+                    seg = _apply_activate(seg, act)
                 if cur_kp:
                     seg = _last_wins(seg, cur_kp, order_col=SDC_SEQUENCE)
-                if seg.limit(1).count() == 0:
-                    return
                 _write_segment(
                     spark, table, seg, cur_kp, version_suffix,
                     guard_col=SDC_SEQUENCE,
@@ -286,8 +244,9 @@ def apply_capture_batch(
 
             lo: str | None = None
             last_schema_seq: str | None = None
-            for seq, kind, payload in boundaries:
-                flush_segment(lo, seq)
+            bounds = boundaries.get(stream, [])
+            for i, (seq, kind, payload) in enumerate(bounds):
+                flush_segment(i, lo, seq)
                 lo = seq
                 if kind == "SCHEMA":
                     # in-batch epoch swap: records after this boundary
@@ -297,7 +256,7 @@ def apply_capture_batch(
                     cur_kp = list(payload.get("key_properties") or [])
                     last_schema_seq = seq
                 else:  # AV: purge older-version rows already in the table
-                    v_new = int(payload)
+                    v_new = int(payload["version"])
                     v_cur = state.activations.get(stream)
                     if v_cur is not None and v_new <= v_cur:
                         # a late-listed older AV is subsumed by the
@@ -306,22 +265,18 @@ def apply_capture_batch(
                         continue
                     state.activations[stream] = v_new
                     _purge_older_versions(spark, table, v_new)
-            flush_segment(lo, None)
-            if cur_schema is not None:
-                # registry adoption is sequence-guarded (same rule as
-                # the bookmark): an out-of-order older file's SCHEMA
-                # governs ITS OWN batch's segments above but cannot
-                # regress what later batches parse with
-                prev_seq = state.schema_seq.get(stream)
-                if last_schema_seq is None:
-                    # carry-in only — re-persisting the same registry
-                    # entry (no SCHEMA line in this batch)
-                    state.schemas[stream] = cur_schema
-                    state.key_properties[stream] = cur_kp
-                elif prev_seq is None or last_schema_seq >= prev_seq:
-                    state.schemas[stream] = cur_schema
-                    state.key_properties[stream] = cur_kp
-                    state.schema_seq[stream] = last_schema_seq
+            flush_segment(len(bounds), lo, None)
+            # registry adoption is sequence-guarded (same rule as the
+            # bookmark): an out-of-order older file's SCHEMA governs ITS
+            # OWN batch's segments above but cannot regress what later
+            # batches parse with (no SCHEMA line: the registry stands)
+            prev_seq = state.schema_seq.get(stream)
+            if last_schema_seq is not None and (
+                prev_seq is None or last_schema_seq >= prev_seq
+            ):
+                state.schemas[stream] = cur_schema
+                state.key_properties[stream] = cur_kp
+                state.schema_seq[stream] = last_schema_seq
 
         # flushed_state at micro-batch granularity: everything in this
         # batch landed above, so the batch's max-sequence STATE is safe

@@ -54,3 +54,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def started_jobs(spark):
+    """A callable returning how many Spark jobs this session's scheduler
+    has started so far. It reads the DAG scheduler's job-id counter, which
+    a job takes synchronously on submission, so a difference of two reads
+    counts the jobs between them exactly: no listener lag to wait out and
+    no sentinel job to flush it."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    return lambda: int(dag.nextJobId())

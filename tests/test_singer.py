@@ -1079,3 +1079,25 @@ def test_capture_status(spark, tmp_path, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out)
     assert out["streams"]["t1"]["records"] == 3
+
+
+def test_load_capture_refuses_records_without_any_schema(spark, tmp_path):
+    """A stream whose RECORDs have no SCHEMA anywhere in the capture is
+    refused, not silently dropped; records before a LATER SCHEMA of
+    their stream still load (the bulk face is order-insensitive)."""
+    cap = _write(tmp_path, [
+        _schema(), _rec(1, "a", 1.0), _rec(1, "x", 9.0, stream="t2"),
+    ])
+    with pytest.raises(
+        ValueError,
+        match="RECORD for stream 't2' before its SCHEMA \\(no SCHEMA",
+    ):
+        load_capture(spark, cap, str(tmp_path / "tgt"))
+    late = _write(tmp_path, [
+        _rec(1, "x", 9.0, stream="t2"), _schema(), _schema(stream="t2"),
+        _rec(1, "a", 1.0),
+    ], name="late.ndjson")
+    out = load_capture(spark, late, str(tmp_path / "tgt2"))
+    assert [
+        tuple(r) for r in out["t2"].read(spark).select("id", "name").collect()
+    ] == [(1, "x")]

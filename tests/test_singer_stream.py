@@ -705,3 +705,131 @@ def test_compact_every_requires_mor(spark, tmp_path):
             spark, str(tmp_path / "cap"), str(tmp_path / "t"),
             str(tmp_path / "ck"), compact_every=2,
         )
+
+
+# test_stream_equals_bulk_load's three files plus one that opens two
+# more streams beside t1
+_FOUR_FILES = [
+    ("cap-000001.ndjson", [_schema(), _rec(1, "a", 1.0), _rec(2, "b", 2.0)]),
+    ("cap-000002.ndjson", [
+        _rec(3, "c", 3.0), _rec(1, "a2", 10.0), _state({"t1": {"pos": 1}}),
+    ]),
+    ("cap-000003.ndjson", [
+        _rec(2, "b2", 20.0), _rec(4, "d", 4.0), _state({"t1": {"pos": 2}}),
+    ]),
+    ("cap-000004.ndjson", [
+        _schema("t2"), _rec(1, "x", 1.0, stream="t2"),
+        _schema("t3"), _rec(1, "y", 2.0, stream="t3"),
+        _rec(5, "e", 5.0),
+    ]),
+]
+
+
+def test_stream_batch_jobs_do_not_grow_with_streams(
+    spark, tmp_path, monkeypatch, started_jobs
+):
+    """Outside its segment writes a micro-batch starts at most 3 Spark
+    jobs (numbering and caching the batch, the control-line collect, the
+    grouped aggregate), the same number for three streams as for one:
+    the RECORD-before-SCHEMA check and empty-segment skips are decided
+    on the driver, not probed per stream or segment."""
+    from pipelinewise_spark.streaming import singer as tail
+
+    inside = []
+    real = tail._write_segment
+
+    def counting(*args, **kwargs):
+        before = started_jobs()
+        real(*args, **kwargs)
+        inside.append(started_jobs() - before)
+
+    monkeypatch.setattr(tail, "_write_segment", counting)
+    capdir = _capdir(tmp_path, _FOUR_FILES)
+    tgt = str(tmp_path / "tgt")
+    state = CaptureStreamState()
+    outside = []
+    for name, _ in _FOUR_FILES:
+        inside.clear()
+        before = started_jobs()
+        state = apply_capture_batch(
+            spark, _append_batch(spark, f"{capdir}/{name}"), tgt, state
+        )
+        outside.append(started_jobs() - before - sum(inside))
+    assert outside[0] <= 3
+    assert outside == [outside[0]] * len(_FOUR_FILES)
+    assert _rows(spark, tgt) == {
+        1: ("a2", 10.0), 2: ("b2", 20.0), 3: ("c", 3.0), 4: ("d", 4.0),
+        5: ("e", 5.0),
+    }
+    assert _rows(spark, tgt, "t2") == {1: ("x", 1.0)}
+    assert _rows(spark, tgt, "t3") == {1: ("y", 2.0)}
+
+
+def test_stream_control_line_cap(spark, tmp_path):
+    """``max_control_lines`` caps a micro-batch's control-line collect:
+    one line over the cap refuses the batch before anything lands; at
+    the cap the batch applies."""
+    capdir = _capdir(tmp_path, [("cap-000001.ndjson", [
+        _schema(), _rec(1, "a", 1.0),
+        _state({"t1": {"pos": 1}}), _state({"t1": {"pos": 2}}),
+    ])])
+    batch = _append_batch(spark, f"{capdir}/cap-000001.ndjson")
+    tgt = str(tmp_path / "tgt")
+    with pytest.raises(ValueError, match="micro-batch has more than 2 "):
+        apply_capture_batch(
+            spark, batch, tgt, CaptureStreamState(), max_control_lines=2
+        )
+    assert not ParquetTable(f"{tgt}/t1").exists()
+    st = apply_capture_batch(
+        spark, batch, tgt, CaptureStreamState(), max_control_lines=3
+    )
+    assert _rows(spark, tgt) == {1: ("a", 1.0)}
+    assert st.bookmark == {"bookmarks": {"t1": {"pos": 2}}}
+
+
+@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+def test_stream_segment_predating_activation_lands_nothing(
+    spark, tmp_path, target_format
+):
+    """A segment whose records all predate the ACTIVATE_VERSION in force
+    is skipped exactly: no write, so a missing table is not created and
+    a MOR table gains no version; a newer record still lands."""
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+    def _av(stream, version):
+        return json.dumps({"type": "ACTIVATE_VERSION", "stream": stream,
+                           "version": version})
+
+    capdir = _capdir(tmp_path, [
+        ("cap-000001.ndjson", [
+            _schema(), _rec(1, "a", 1.0, version=2), _av("t1", 2),
+            _schema("t2"), _av("t2", 2),
+        ]),
+        ("cap-000002.ndjson", [
+            _rec(2, "b", 2.0, version=1),
+            _rec(1, "x", 9.0, stream="t2", version=1),
+        ]),
+        ("cap-000003.ndjson", [_rec(3, "c", 3.0, version=2)]),
+    ])
+    tgt = str(tmp_path / "tgt")
+    table_cls = ManifestTable if target_format == "mor" else ParquetTable
+    t1, t2 = table_cls(f"{tgt}/t1"), table_cls(f"{tgt}/t2")
+
+    def apply(name, state):
+        return apply_capture_batch(
+            spark, _append_batch(spark, f"{capdir}/{name}"), tgt, state,
+            target_format=target_format,
+        )
+
+    def rows():
+        return {r["id"]: r["name"] for r in t1.read(spark).collect()}
+
+    state = apply("cap-000001.ndjson", CaptureStreamState())
+    versions = t1.versions() if target_format == "mor" else None
+    state = apply("cap-000002.ndjson", state)
+    assert rows() == {1: "a"}
+    assert not t2.exists()
+    if target_format == "mor":
+        assert t1.versions() == versions
+    apply("cap-000003.ndjson", state)
+    assert rows() == {1: "a", 3: "c"}
