@@ -59,7 +59,8 @@ def _cmd_run(args: argparse.Namespace) -> int:
                 {
                     "stream": r.tap_stream_id,
                     "method": r.method,
-                    "rows_loaded": r.rows_loaded,
+                    "rows_in": r.rows_in,
+                    "target_rows": r.target_rows,
                     "bookmark": r.bookmark,
                 },
                 default=str,

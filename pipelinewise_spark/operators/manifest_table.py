@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.fsio import MetaFS
+from pipelinewise_spark.operators.table import _as_nullable
 from pipelinewise_spark.session import scoped_conf
 
 _VERSION_FILE = "_VERSION"
@@ -507,6 +508,7 @@ class ManifestTable:
         """
         import datetime
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         def enc(v: Any) -> Any:
@@ -538,11 +540,16 @@ class ManifestTable:
                 name = col.path_in_schema
                 if name in dropped:
                     continue
-                mn, mx = (
-                    (enc(st.min), enc(st.max))
-                    if st is not None and st.has_min_max and "." not in name
-                    else (None, None)
-                )
+                try:
+                    mn, mx = (
+                        (enc(st.min), enc(st.max))
+                        if st is not None and st.has_min_max and "." not in name
+                        else (None, None)
+                    )
+                except pa.ArrowNotImplementedError:
+                    # pyarrow cannot decode some logical types' bounds
+                    # (an INT64-backed decimal): unrepresentable, so omitted
+                    mn = mx = None
                 if mn is None or mx is None:
                     dropped.add(name)
                     mins.pop(name, None)
@@ -596,6 +603,12 @@ class ManifestTable:
         if fields:
             writer = writer.partitionBy(*[f_.key for f_ in fields])
         writer.parquet(self.mfs.uri(base_rel))
+        if not fields:
+            # the read schema of an unpartitioned base is the written one,
+            # widened as inference widens it (ParquetTable.overwrite's
+            # rule); a partitioned base keeps inference, since its
+            # partition columns' read types come from directory names
+            self._schema_by_base[base_rel] = _as_nullable(df.schema)
 
         entries: list[dict[str, Any]] = []
         rels = [

@@ -22,6 +22,7 @@ one PK-hash shuffle. Nothing here loops over rows on the driver.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,8 +67,13 @@ def full_table_sync(
     state: BookmarkStore | None = None,
     extracted_at=None,
     batched_at=None,
-) -> DataFrame:
-    """FULL_TABLE: rebuild the target atomically (temp-table + SWAP shape)."""
+    on_batch: Callable[[DataFrame], None] | None = None,
+) -> int:
+    """FULL_TABLE: rebuild the target atomically (temp-table + SWAP shape).
+
+    Returns the rows loaded: the new snapshot holds exactly the batch, so
+    its footer count is the batch's (no Spark job). ``on_batch`` gets the
+    loaded rows, read back from that snapshot (never a second source scan)."""
     batch = prepare_batch(df=source_df, spec=spec, extracted_at=extracted_at,
                           batched_at=batched_at)
     table.overwrite(batch)
@@ -75,7 +81,9 @@ def full_table_sync(
         # version bookmark ≈ ACTIVATE_VERSION table version
         state.update(spec.tap_stream_id, {"version": table.current_snapshot()})
         state.save()
-    return table.read(spark)
+    if on_batch is not None:
+        on_batch(table.read(spark))
+    return table.count_rows()
 
 
 def incremental_sync(
@@ -86,11 +94,16 @@ def incremental_sync(
     state: BookmarkStore,
     extracted_at=None,
     batched_at=None,
-) -> DataFrame:
+    on_batch: Callable[[DataFrame], None] | None = None,
+) -> int:
     """INCREMENTAL: read rows with key >= bookmark, MERGE, advance bookmark.
 
     The reference uses ``>=`` (not ``>``) so the boundary row is re-read and
     re-upserted — idempotent by PK (tap-postgres incremental.py).
+
+    Returns the rows of the batch this run loaded, counted by the same
+    aggregate that finds the new bookmark. ``on_batch`` gets that pinned
+    batch after the bookmark is saved and before the pin is released.
     """
     key = spec.replication_key
     if not key:
@@ -104,27 +117,34 @@ def incremental_sync(
     # written, not a second source scan (rows inserted between the two scans
     # would advance the bookmark past data never loaded).
     batch = batch.persist()
+    try:
+        if not table.exists():
+            table.overwrite(batch)
+        elif spec.primary_keys:
+            # a manifest/partitioned target merges only the partitions the
+            # batch touches — a 0.1 % batch must NOT rewrite 100 % of a
+            # 100 TB table; a ParquetTable rewrites itself copy-on-write
+            table.merge(
+                spark, batch, spec.primary_keys, hard_delete=spec.hard_delete
+            )
+        else:
+            table.append(batch)
 
-    if not table.exists():
-        table.overwrite(batch)
-    elif spec.primary_keys:
-        # a manifest/partitioned target merges only the partitions the
-        # batch touches — a 0.1 % batch must NOT rewrite 100 % of a 100 TB
-        # table; a ParquetTable rewrites itself copy-on-write
-        table.merge(spark, batch, spec.primary_keys, hard_delete=spec.hard_delete)
-    else:
-        table.overwrite(append_only(table.read(spark), batch))
-
-    # Served from the cache populated by the overwrite job above.
-    new_max = batch.agg(F.max(F.col(key)).alias("m")).collect()[0]["m"]
-    batch.unpersist()
-    if new_max is not None:
-        state.update(
-            spec.tap_stream_id,
-            {"replication_key": key, "replication_key_value": new_max},
-        )
-        state.save()
-    return table.read(spark)
+        # Served from the cache populated by the write job above.
+        rows_in, new_max = batch.agg(
+            F.count(F.lit(1)), F.max(F.col(key))
+        ).collect()[0]
+        if new_max is not None:
+            state.update(
+                spec.tap_stream_id,
+                {"replication_key": key, "replication_key_value": new_max},
+            )
+            state.save()
+        if on_batch is not None:
+            on_batch(batch)
+    finally:
+        batch.unpersist()
+    return rows_in
 
 
 def partial_sync(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pipelinewise_spark.operators.merge import merge_upsert
+from pipelinewise_spark.operators.merge import append_only, merge_upsert
 
 _VERSION_FILE = "_VERSION"
 
@@ -114,6 +114,22 @@ class ParquetTable:
     def schema(self, spark: SparkSession) -> T.StructType | None:
         return self.read(spark).schema if self.exists() else None
 
+    def count_rows(self) -> int:
+        """Live row count from the snapshot's parquet footers, read on the
+        driver: no data pages and no Spark job (``ManifestTable.count_rows``'s
+        contract). Hive-partitioned snapshots are walked recursively."""
+        import pyarrow.parquet as pq
+
+        snap = self.current_snapshot()
+        if snap is None:
+            raise FileNotFoundError(f"table has no published snapshot: {self.root}")
+        return sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for d, _, files in os.walk(snap)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         """Full-refresh publish (ACTIVATE_VERSION / atomic swap semantics).
 
@@ -156,6 +172,13 @@ class ParquetTable:
             hard_delete=hard_delete, guard_col=guard_col,
         )
         self.overwrite(merged.repartition(*[F.col(c) for c in primary_keys]))
+
+    def append(self, df: DataFrame) -> str:
+        """No-PK append (``ManifestTable.append``'s contract): the live rows
+        and the batch are unioned by name and republished copy-on-write."""
+        if not self.exists():
+            return self.overwrite(df)
+        return self.overwrite(append_only(self.read(df.sparkSession), df))
 
     def vacuum(self, keep: int = 2) -> None:
         """Drop all but the newest ``keep`` snapshots (old readers beware)."""

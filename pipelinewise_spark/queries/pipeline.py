@@ -48,7 +48,7 @@ def full_table_sync_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = tempfile.mkdtemp(prefix="pws_full_")
     table = ParquetTable(f"{tmp}/lineitem")
-    return full_table_sync(
+    full_table_sync(
         spark,
         read_table(spark, sf_dir, "lineitem"),
         spec,
@@ -56,6 +56,7 @@ def full_table_sync_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         extracted_at=T0,
         batched_at=T0,
     )
+    return table.read(spark)
 
 
 # -------------------------------------------------------------- INCREMENTAL
@@ -113,9 +114,10 @@ def incremental_sync_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     state.save()
 
     # incremental run: new/changed rows merged in at T1
-    return incremental_sync(
+    incremental_sync(
         spark, src, spec, table, state, extracted_at=T1, batched_at=T1
-    ).select(
+    )
+    return table.read(spark).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
         "o_orderpriority", "_sdc_extracted_at", "_sdc_batched_at", "_sdc_deleted_at",
     )

@@ -20,6 +20,7 @@ not a process Pool, does the fan-out.
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass, field
 
@@ -51,9 +52,17 @@ def estimated_input_mb(df: DataFrame) -> float | None:
 
 @dataclass
 class StreamResult:
+    """What one stream's run did, from what the write already knows: no
+    Spark job beyond the write and the bookmark aggregate.
+
+    ``rows_in`` counts the prepared batch this run loaded (for FULL_TABLE
+    the whole new snapshot); ``target_rows`` counts the live target rows
+    after the commit, from footer metadata."""
+
     tap_stream_id: str
     method: str
-    rows_loaded: int
+    rows_in: int
+    target_rows: int
     bookmark: dict = field(default_factory=dict)
 
 
@@ -160,88 +169,96 @@ class PipelineRunner:
                     f"allowed_resync_max_size_mb={max_mb}; pass force_resync "
                     "to run the full load anyway"
                 )
+        archive = (
+            functools.partial(self._archive_batch, stream)
+            if self._opt(stream, "archive_load_files")
+            else None
+        )
         if stream.replication_method is ReplicationMethod.FULL_TABLE:
-            out = full_table_sync(
+            rows_in = target_rows = full_table_sync(
                 self.spark, source_df, stream, table, self.state,
                 extracted_at=extracted_at, batched_at=batched_at,
+                on_batch=archive,
             )
         elif stream.replication_method is ReplicationMethod.INCREMENTAL:
-            out = incremental_sync(
+            rows_in = incremental_sync(
                 self.spark, source_df, stream, table, self.state,
                 extracted_at=extracted_at, batched_at=batched_at,
+                on_batch=archive,
             )
+            target_rows = table.count_rows()
         else:
             raise ValueError(
                 f"{stream.tap_stream_id}: LOG_BASED streams run via "
                 "streaming.cdc.run_cdc_stream with a change-event source"
             )
-        self._post_load_hooks(stream, out)
+        self._apply_grants(stream)
         return StreamResult(
             tap_stream_id=stream.tap_stream_id,
             method=stream.replication_method.value,
-            rows_loaded=out.count(),
+            rows_in=rows_in,
+            target_rows=target_rows,
             bookmark=self.state.get_bookmark(stream.tap_stream_id),
         )
 
     def _opt(self, stream: StreamSpec, key: str, default=None):
         return stream.options.get(key, self.spec.options.get(key, default))
 
-    def _post_load_hooks(self, stream: StreamSpec, out: DataFrame) -> None:
-        """The reference's post-load tail, config-driven:
-
-        - ``archive_load_files`` (target_snowflake/__init__.py:119-121,
-          178-191, 478-508): keep a copy of every load batch under an
-          archive prefix with min/max replication-key metadata — encrypted
-          client-side when ``client_side_encryption_master_key`` is set
-          (fastsync/commons/target_snowflake.py:109-152 applies the same
-          key to staged uploads).
-        - grants (db_sync.py:609-637): USAGE/SELECT for configured roles,
-          resolved with the reference's config precedence.
-        """
+    def _archive_batch(self, stream: StreamSpec, batch: DataFrame) -> None:
+        """``archive_load_files`` (target_snowflake/__init__.py:119-121,
+        178-191, 478-508): keep a copy of every load batch under an archive
+        prefix with min/max replication-key metadata — encrypted client-side
+        when ``client_side_encryption_master_key`` is set
+        (fastsync/commons/target_snowflake.py:109-152 applies the same key
+        to staged uploads). ``batch`` is the rows this run loaded, never
+        the merged target."""
         import json as _json
 
         from pyspark.sql import functions as F
 
-        if self._opt(stream, "archive_load_files"):
-            root = os.path.join(
-                self.spec.target_path, "_sdc_archive", stream.target_table
+        root = os.path.join(
+            self.spec.target_path, "_sdc_archive", stream.target_table
+        )
+        # The reference's copy_to_archive RETAINS every load file
+        # (archive/tap/table/<unique basename>) — history accumulates
+        # across batches. Each batch therefore lands under its own
+        # subdir with mode="error" (a collision is a bug, never an
+        # overwrite), with per-batch metadata alongside.
+        os.makedirs(root, exist_ok=True)
+        existing = [
+            d for d in os.listdir(root)
+            if d.startswith("batch_") and d[6:].isdigit()
+        ]
+        nxt = 1 + max((int(d[6:]) for d in existing), default=-1)
+        adir = os.path.join(root, f"batch_{nxt:06d}")
+        mk = self._opt(stream, "client_side_encryption_master_key")
+        if mk:
+            from pipelinewise_spark.operators.encryption import (
+                write_encrypted_staged,
             )
-            # The reference's copy_to_archive RETAINS every load file
-            # (archive/tap/table/<unique basename>) — history accumulates
-            # across batches. Each batch therefore lands under its own
-            # subdir with mode="error" (a collision is a bug, never an
-            # overwrite), with per-batch metadata alongside.
-            os.makedirs(root, exist_ok=True)
-            existing = [
-                d for d in os.listdir(root)
-                if d.startswith("batch_") and d[6:].isdigit()
-            ]
-            nxt = 1 + max((int(d[6:]) for d in existing), default=-1)
-            adir = os.path.join(root, f"batch_{nxt:06d}")
-            mk = self._opt(stream, "client_side_encryption_master_key")
-            if mk:
-                from pipelinewise_spark.operators.encryption import (
-                    write_encrypted_staged,
-                )
 
-                key = bytes.fromhex(mk) if isinstance(mk, str) else mk
-                write_encrypted_staged(out, adir, key, mode="error")
-            else:
-                out.write.mode("error").parquet(adir)
-            meta: dict = {"stream": stream.tap_stream_id, "batch": nxt}
-            if stream.replication_key:
-                row = out.agg(
-                    F.min(stream.replication_key).cast("string"),
-                    F.max(stream.replication_key).cast("string"),
-                ).head()
-                meta["min_replication_key"] = row[0]
-                meta["max_replication_key"] = row[1]
-            from pipelinewise_spark.operators.fsio import MetaFS
+            key = bytes.fromhex(mk) if isinstance(mk, str) else mk
+            write_encrypted_staged(batch, adir, key, mode="error")
+        else:
+            batch.write.mode("error").parquet(adir)
+        meta: dict = {"stream": stream.tap_stream_id, "batch": nxt}
+        if stream.replication_key:
+            row = batch.agg(
+                F.min(stream.replication_key).cast("string"),
+                F.max(stream.replication_key).cast("string"),
+            ).head()
+            meta["min_replication_key"] = row[0]
+            meta["max_replication_key"] = row[1]
+        from pipelinewise_spark.operators.fsio import MetaFS
 
-            MetaFS(adir).write_text(
-                _json.dumps(meta, indent=1), "_archive_metadata.json",
-                atomic=True,
-            )
+        MetaFS(adir).write_text(
+            _json.dumps(meta, indent=1), "_archive_metadata.json",
+            atomic=True,
+        )
+
+    def _apply_grants(self, stream: StreamSpec) -> None:
+        """Grants (db_sync.py:609-637): USAGE/SELECT for configured roles,
+        resolved with the reference's config precedence."""
         if self._opt(stream, "default_target_schema_select_permissions") or (
             self._opt(stream, "schema_mapping")
         ):

@@ -113,12 +113,14 @@ def test_runner_clears_stale_token(spark, sf_dir, tmp_path):
     spec = compile_yaml_file(cfg)
     StopToken(spec.target_path).request("stale")
     runner = PipelineRunner(spark, spec)
+    nation = read_table(spark, sf_dir, "nation")
     res = runner.run(
-        {"public-nation": read_table(spark, sf_dir, "nation")},
+        {"public-nation": nation},
         extracted_at="2026-01-01 00:00:00",
         batched_at="2026-01-01 00:00:00",
     )
-    assert res and res[0].rows_loaded > 0
+    n = nation.count()
+    assert [(r.rows_in, r.target_rows) for r in res] == [(n, n)]
     assert not StopToken(spec.target_path).requested()
 
 

@@ -57,10 +57,12 @@ def test_edgydata_full_sync_roundtrip(spark, edgy, tmp_path):
     spec = StreamSpec(tap_stream_id="edgydata", primary_keys=["order"])
     table = ParquetTable(str(tmp_path / "edgydata"))
     state = BookmarkStore(str(tmp_path / "state.json"))
-    out = full_table_sync(
+    rows_in = full_table_sync(
         spark, edgy, spec, table, state,
         extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
     )
+    assert rows_in == len(EDGY_ROWS)
+    out = table.read(spark)
     got = {
         r["order"]: tuple(r[c] for c in EDGY_COLS)
         for r in out.select(*EDGY_COLS).collect()
@@ -151,10 +153,10 @@ def test_no_pk_append_path_with_reserved_words(spark, tmp_path):
         spec.stream("no_pk_table"), df1,
         extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
     )
-    assert r1.rows_loaded == 2
+    assert (r1.rows_in, r1.target_rows) == (2, 2)
     # FULL_TABLE re-run replaces (ACTIVATE_VERSION semantics)
     r2 = runner.run_stream(
         spec.stream("no_pk_table"), df2,
         extracted_at="2026-01-02 00:00:00", batched_at="2026-01-02 00:00:00",
     )
-    assert r2.rows_loaded == 1
+    assert (r2.rows_in, r2.target_rows) == (1, 1)

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import secrets
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -173,7 +174,7 @@ def test_runner_post_load_hooks(spark, sf_dir, tmp_path):
         spec.stream("orders"), orders,
         extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
     )
-    assert res.rows_loaded == 500
+    assert (res.rows_in, res.target_rows) == (500, 500)
 
     aroot = os.path.join(str(tmp_path), "_sdc_archive", "orders")
     # each load batch archives under its own subdir (reference
@@ -200,13 +201,31 @@ def test_runner_post_load_hooks(spark, sf_dir, tmp_path):
     assert acl["select"] == ["analyst"]
     assert acl["schema"] == "pg_to_lake"
 
-    # a SECOND load batch archives alongside the first, never over it
-    runner.run_stream(
-        spec.stream("orders"), orders.limit(100),
+    # a SECOND load batch archives alongside the first, never over it —
+    # and holds that run's batch (keys >= the first bookmark), not the
+    # merged target
+    bookmark = res.bookmark["replication_key_value"]
+    want = {
+        k for (k,) in duckdb.sql(
+            f"SELECT o_orderkey FROM '{sf_dir}/orders.parquet' "
+            f"WHERE o_orderdate >= TIMESTAMP '{bookmark}'"
+        ).fetchall()
+    }
+    assert want, "fixture must leave rows past the first bookmark"
+    res2 = runner.run_stream(
+        spec.stream("orders"), read_table(spark, sf_dir, "orders"),
         extracted_at="2026-01-02 00:00:00", batched_at="2026-01-02 00:00:00",
     )
+    assert res2.rows_in == len(want)
     adir2 = os.path.join(aroot, "batch_000001")
-    assert os.path.isdir(adir2)
+    back2 = read_encrypted_staged(
+        spark, adir2, bytes.fromhex(master),
+        orders.schema.add("_sdc_extracted_at", "timestamp")
+        .add("_sdc_batched_at", "timestamp")
+        .add("_sdc_deleted_at", "timestamp"),
+    )
+    got = [r.o_orderkey for r in back2.select("o_orderkey").collect()]
+    assert sorted(got) == sorted(want)
     # first batch still intact and still decryptable
     back1 = read_encrypted_staged(
         spark, adir, bytes.fromhex(master),
@@ -217,6 +236,7 @@ def test_runner_post_load_hooks(spark, sf_dir, tmp_path):
     assert back1.count() == 500
     am2 = json.load(open(os.path.join(adir2, "_archive_metadata.json")))
     assert am2["batch"] == 1
+    assert am2["min_replication_key"] == str(bookmark)
 
 
 def test_yaml_grants_schema_override(spark, sf_dir, tmp_path):

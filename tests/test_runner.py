@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import duckdb
 import pyspark.sql.functions as F
 
 from pipelinewise_spark.plans.yaml_config import compile_yaml
@@ -53,8 +54,18 @@ def test_yaml_pipeline_end_to_end(spark, sf_dir, tmp_path):
         {"public-nation": nation, "public-orders": early},
         extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
     )
-    assert r1[0].rows_loaded == nation.count()
-    assert r1[1].rows_loaded == early.count()
+    src = f"'{sf_dir}/orders.parquet'"
+    n_nation, n_early, n_orders, n_tail = duckdb.sql(f"""
+        SELECT (SELECT count(*) FROM '{sf_dir}/nation.parquet'),
+               (SELECT count(*) FROM {src}
+                 WHERE o_orderdate < TIMESTAMP '1997-01-01'),
+               (SELECT count(*) FROM {src}),
+               (SELECT count(*) FROM {src} WHERE o_orderdate >= (
+                  SELECT max(o_orderdate) FROM {src}
+                   WHERE o_orderdate < TIMESTAMP '1997-01-01'))
+    """).fetchone()
+    assert (r1[0].rows_in, r1[0].target_rows) == (n_nation, n_nation)
+    assert (r1[1].rows_in, r1[1].target_rows) == (n_early, n_early)
     assert r1[1].bookmark["replication_key"] == "o_orderdate"
 
     # second incremental run: full source, bookmark filters to the tail
@@ -62,7 +73,9 @@ def test_yaml_pipeline_end_to_end(spark, sf_dir, tmp_path):
         spec.stream("public-orders"), orders,
         extracted_at="2026-02-01 00:00:00", batched_at="2026-02-01 00:00:00",
     )
-    assert r2.rows_loaded == orders.count()  # merged total
+    # rows_in is the tail batch (>= re-reads the boundary rows);
+    # target_rows is the merged total
+    assert (r2.rows_in, r2.target_rows) == (n_tail, n_orders)
 
     out = runner.table_for(spec.stream("public-orders")).read(spark)
     masked = out.filter(F.col("o_orderstatus") == "F").select(
@@ -142,7 +155,7 @@ def test_primary_key_required_guard(spark, sf_dir, tmp_path):
     spec.streams[0].options["primary_key_required"] = False
     r = runner.run_stream(spec.stream("events"), events,
                           extracted_at="2026-01-01", batched_at="2026-01-01")
-    assert r.rows_loaded == events.count()
+    assert (r.rows_in, r.target_rows) == (events.count(), events.count())
 
 
 def test_table_for_rejects_unknown_table_format(spark, tmp_path):
@@ -202,9 +215,12 @@ def test_parallel_run_matches_sequential(spark, sf_dir, tmp_path):
         ],
     )
     runner = PipelineRunner(spark, spec)
-    results = {r.tap_stream_id: r.rows_loaded for r in runner.run(sources)}
+    results = {
+        r.tap_stream_id: (r.rows_in, r.target_rows)
+        for r in runner.run(sources)
+    }
     assert results == {
-        k: sources[k].count() for k in sources
+        k: (sources[k].count(), sources[k].count()) for k in sources
     }
 
 
@@ -226,7 +242,7 @@ def test_autoresync_size_guard(spark, sf_dir, tmp_path):
     # force_resync overrides the guard
     spec.options["force_resync"] = True
     out = PipelineRunner(spark, spec).run({"lineitem": src})
-    assert out[0].rows_loaded == src.count()
+    assert (out[0].rows_in, out[0].target_rows) == (src.count(), src.count())
 
 
 def test_cli_discover_catalog(capsys, sf_dir):
@@ -352,7 +368,18 @@ def test_cli_init_validate_run_status_reset(capsys, spark, sf_dir, tmp_path):
     assert out == {"valid": True, "errors": []}
 
     assert main(["run", "--config", yml, "--source-dir", sf_dir]) == 0
-    capsys.readouterr()
+    printed = {
+        r["stream"]: (r["rows_in"], r["target_rows"])
+        for r in map(_json.loads, capsys.readouterr().out.splitlines())
+    }
+    n = {
+        t: duckdb.sql(f"SELECT count(*) FROM '{sf_dir}/{t}.parquet'").fetchone()[0]
+        for t in ("orders", "customer")
+    }
+    assert printed == {
+        "public-orders": (n["orders"], n["orders"]),
+        "public-customer": (n["customer"], n["customer"]),
+    }
 
     assert main(["status", "--config", yml]) == 0
     st = _json.loads(capsys.readouterr().out)
@@ -406,3 +433,43 @@ schemas:
     assert "LOG_BASED requires primary_keys" in joined
     assert "primary keys excluded by column selection" in joined
     assert "transformation on unselected column" in joined
+
+
+def test_run_reports_from_the_write(spark, sf_dir, tmp_path, started_jobs):
+    """A run starts only its writes and the bookmark aggregate: the per-
+    stream report comes from footer counts, and a ManifestTable handle
+    reads its own unpartitioned commit without an inference job."""
+    from pipelinewise_spark.plans.spec import PipelineSpec, StreamSpec
+
+    spec = PipelineSpec(
+        pipeline_id="p", target_path=str(tmp_path),
+        streams=[
+            StreamSpec(tap_stream_id="nation", primary_keys=["n_nationkey"]),
+            StreamSpec(tap_stream_id="orders", primary_keys=["o_orderkey"],
+                       replication_method="INCREMENTAL",
+                       replication_key="o_orderdate",
+                       options={"table_format": "manifest"}),
+        ],
+    )
+    # source schema inference runs here, outside the counted run
+    sources = {t: read_table(spark, sf_dir, t) for t in ("nation", "orders")}
+    runner = PipelineRunner(spark, spec)
+
+    before = started_jobs()
+    results = runner.run(
+        sources,
+        extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
+    )
+    # nation write (1) + orders write (1) + the orders bookmark/count
+    # aggregate over the pinned batch (2: AQE runs its partial aggregate
+    # and its final aggregate as separate jobs)
+    assert started_jobs() - before == 4
+
+    n = {t: df.count() for t, df in sources.items()}
+    assert [(r.rows_in, r.target_rows) for r in results] == [
+        (n["nation"], n["nation"]), (n["orders"], n["orders"]),
+    ]
+    tables = [runner.table_for(s) for s in spec.streams]
+    before = started_jobs()
+    assert [t.count_rows() for t in tables] == [n["nation"], n["orders"]]
+    assert started_jobs() - before == 0

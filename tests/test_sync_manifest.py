@@ -10,6 +10,7 @@ import os
 import pyspark.sql.functions as F
 
 from pipelinewise_spark.operators.manifest_table import ManifestTable
+from pipelinewise_spark.operators.merge import append_only
 from pipelinewise_spark.operators.sync import incremental_sync
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
@@ -91,3 +92,34 @@ def test_cdc_apply_batch_manifest_partition_pruned(spark, tmp_path):
     assert got[60] == 600.0
     assert 70 not in got, "hard delete not applied"
     assert got[0] == 0.0 and len(got) == 99
+
+
+def test_incremental_sync_no_pk_appends_to_manifest(spark, tmp_path):
+    """A PK-less INCREMENTAL run into a ManifestTable commits only the
+    batch's new files: every prior entry carries over by path, and the
+    rows equal ``append_only`` of the prior snapshot and the batch."""
+    t = ManifestTable(os.path.join(str(tmp_path), "t"))
+    spec = StreamSpec(
+        tap_stream_id="t", replication_method="INCREMENTAL",
+        replication_key="k", add_metadata_columns=False,
+    )
+    state = BookmarkStore(os.path.join(str(tmp_path), "state.json"))
+    base = spark.createDataFrame(
+        [(i, float(i)) for i in range(20)], "k int, v double"
+    )
+    assert incremental_sync(spark, base, spec, t, state) == 20
+    v1 = t.versions()[-1]
+    paths1 = {e["path"] for e in t._load_manifest()["files"]}
+
+    new = spark.createDataFrame(
+        [(20 + i, 100.0 + i) for i in range(5)], "k int, v double"
+    )
+    # the inclusive >= filter re-reads boundary row 19 alongside the new rows
+    assert incremental_sync(spark, base.unionByName(new), spec, t, state) == 6
+    paths2 = {e["path"] for e in t._load_manifest()["files"]}
+    assert paths1 < paths2
+
+    batch = base.filter(F.col("k") == 19).unionByName(new)
+    want = append_only(t.read(spark, version=v1), batch)
+    assert sorted(t.read(spark).collect()) == sorted(want.collect())
+    assert state.get("t", "replication_key_value") == 24

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import decimal
 import io
 import os
 
@@ -98,6 +99,64 @@ def test_schema_cache_partitioned_not_cached(spark, sf_dir, tmp_path):
         t.current_snapshot()
     ).schema
     assert t.read(spark).count() == 100
+
+
+def test_parquet_count_rows_matches_read_count(spark, sf_dir, tmp_path):
+    """Footer-sum ``count_rows`` equals a scan's count after an overwrite,
+    a hard-delete merge and a partitioned overwrite."""
+    t = ParquetTable(os.path.join(str(tmp_path), "orders"))
+    with pytest.raises(FileNotFoundError):
+        t.count_rows()
+    orders = read_table(spark, sf_dir, "orders").withColumn(
+        "_sdc_deleted_at", F.lit(None).cast("timestamp")
+    )
+    t.overwrite(orders.repartition(3))
+    assert t.count_rows() == t.read(spark).count() == orders.count()
+
+    gone = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+        "_sdc_deleted_at", F.current_timestamp()
+    )
+    t.merge(spark, gone, ["o_orderkey"], hard_delete=True)
+    assert t.count_rows() == t.read(spark).count() == (
+        orders.count() - gone.count()
+    )
+
+    t.overwrite(orders, partition_by=["o_orderpriority"])
+    assert t.count_rows() == t.read(spark).count() == orders.count()
+
+
+def test_manifest_write_schema_matches_inference(spark, tmp_path, started_jobs):
+    """An unpartitioned ManifestTable remembers each write's schema, widened
+    as inference widens it: the writing handle reads its commits without an
+    inference job and gets exactly the schema a fresh handle infers."""
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("s", T.StructType([
+            T.StructField("a", T.IntegerType(), False),
+            T.StructField("b", T.StringType()),
+        ]), False),
+        T.StructField("arr", T.ArrayType(T.IntegerType(), False)),
+        T.StructField("m", T.MapType(T.StringType(), T.DoubleType(), False)),
+        T.StructField("dec", T.DecimalType(12, 3)),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ts_ntz", T.TimestampNTZType()),
+    ])
+    ts = datetime.datetime(2026, 1, 2, 3, 4, 5)
+    rows = [
+        (i, (i, "x"), [i], {"k": float(i)}, decimal.Decimal("1.250"), ts, ts)
+        for i in (1, 2, 3)
+    ]
+    t = ManifestTable(os.path.join(str(tmp_path), "t"))
+    t.overwrite(spark.createDataFrame(rows[:2], schema))
+    t.append(spark.createDataFrame(rows[2:], schema))
+
+    before = started_jobs()
+    remembered = t.read(spark).schema
+    assert started_jobs() - before == 0
+    inferred = ManifestTable(t.root).read(spark).schema
+    assert remembered == inferred
+    assert inferred["id"].nullable  # widened, as inference widens it
+    assert sorted(r.id for r in t.read(spark).collect()) == [1, 2, 3]
 
 
 # --------------------------------------------------------- merge contract
