@@ -10,7 +10,8 @@ parquet + atomic pointer replace (object-store friendly: no renames, no
 directory moves, readers pin a manifest and never see partial writes).
 
     <root>/_VERSION                 # name of the live manifest
-    <root>/manifest-00000002.json   # {"partition_by": [...], "files": [...]}
+    <root>/manifest-00000002.json   # {"partition_by": [...], "files": [...],
+                                    #  "schemas": {write dir: read schema}}
     <root>/data/<write-id>/pt=A/part-*.parquet   # immutable data files
 
 ``root`` may be a local path or any ``pyarrow.fs`` URI (s3://, hdfs://):
@@ -32,6 +33,7 @@ from typing import Any
 from pipelinewise_spark.partitioning import local_frame
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pipelinewise_spark.operators.fsio import MetaFS
 from pipelinewise_spark.operators.table import _as_nullable
@@ -195,13 +197,14 @@ class ManifestTable:
         # which pointer this handle reads/advances: main (_VERSION) or a
         # named branch ref — see branch()/create_branch()/fast_forward()
         self._ref_file = _VERSION_FILE
-        # base write-dir -> inferred read schema. Every write lands in a
-        # fresh immutable base dir whose files share one schema, so the
-        # footer-inference job only ever needs to run once per base —
-        # without this, every per-micro-batch read (MOR flushes, CDF
-        # polls) pays one 1-task inference job PER BASE per call (~0.3s
-        # of fixed cost each on the bench host).
-        self._schema_by_base: dict[str, Any] = {}
+        # base write-dir -> read schema. Every write lands in a fresh
+        # immutable base dir whose files share one schema; the write knows
+        # it (_write_files) and every commit records it in the manifest's
+        # "schemas" map (_publish), which each manifest load seeds here.
+        # A base with no recorded schema (a manifest written before the
+        # map existed, imported files) pays one footer-inference job, once
+        # per handle. Pruned to the live bases at every publish.
+        self._schema_by_base: dict[str, T.StructType] = {}
 
     # ---------------------------------------------------------- manifests
     def current_manifest_name(self) -> str | None:
@@ -218,7 +221,13 @@ class ManifestTable:
             name = self.current_manifest_name()
             if name is None:
                 raise FileNotFoundError(f"no published manifest: {self.root}")
-        return json.loads(self.mfs.read_text(name))
+        m = json.loads(self.mfs.read_text(name))
+        for base, js in m.get("schemas", {}).items():
+            if base not in self._schema_by_base:
+                self._schema_by_base[base] = T.StructType.fromJson(
+                    json.loads(js)
+                )
+        return m
 
     def versions(self) -> list[int]:
         return sorted(
@@ -328,8 +337,8 @@ class ManifestTable:
         # overwrite) until recomputed — its "version" marker names the
         # manifest it was computed against, so readers can detect
         # staleness (same lifecycle as warehouse ANALYZE stats)
-        if self.exists():
-            prior_m = self._load_manifest()
+        prior_m = self._load_manifest() if self.exists() else {}
+        if prior_m:
             if "table_stats" not in manifest:
                 prior = prior_m.get("table_stats")
                 if prior is not None:
@@ -344,6 +353,24 @@ class ManifestTable:
                 prior_r = prior_m.get("retention")
                 if prior_r:
                     manifest["retention"] = prior_r
+        # the read schema of every live write dir rides the commit, so no
+        # read of it ever infers from footers. Sources: the dict itself
+        # (clone), the prior commit, and this handle (what it wrote, what
+        # it loaded — rollback — or what it inferred); bases no longer
+        # live drop out, so the map never outgrows the file list.
+        live = {e["base"] for e in manifest["files"]}
+        recorded = {
+            **prior_m.get("schemas", {}),
+            **manifest.get("schemas", {}),
+        }
+        manifest["schemas"] = {
+            b: recorded[b] if b in recorded else self._schema_by_base[b].json()
+            for b in sorted(live)
+            if b in recorded or b in self._schema_by_base
+        }
+        self._schema_by_base = {
+            b: s for b, s in self._schema_by_base.items() if b in live
+        }
         self.mfs.mkdirs()
         # Several verbs publish a LOADED manifest dict ({**m, ...}:
         # constraints, retention, bloom, analyze, clone). Its parent /
@@ -603,12 +630,6 @@ class ManifestTable:
         if fields:
             writer = writer.partitionBy(*[f_.key for f_ in fields])
         writer.parquet(self.mfs.uri(base_rel))
-        if not fields:
-            # the read schema of an unpartitioned base is the written one,
-            # widened as inference widens it (ParquetTable.overwrite's
-            # rule); a partitioned base keeps inference, since its
-            # partition columns' read types come from directory names
-            self._schema_by_base[base_rel] = _as_nullable(df.schema)
 
         entries: list[dict[str, Any]] = []
         rels = [
@@ -634,6 +655,23 @@ class ManifestTable:
                     "bytes": n_bytes,
                 }
             )
+        # the read schema inference returns for the whole dir: the written
+        # columns, widened as inference widens them (ParquetTable.overwrite's
+        # rule), then each partition key in spec order, untyped as
+        # _read_entries reads it — string, or void when every value is NULL
+        keys = [f_.key for f_ in fields]
+        self._schema_by_base[base_rel] = T.StructType(
+            [f for f in _as_nullable(df.schema).fields if f.name not in keys]
+            + [
+                T.StructField(
+                    k,
+                    T.StringType()
+                    if any(e["partition"].get(k) is not None for e in entries)
+                    else T.NullType(),
+                )
+                for k in keys
+            ]
+        )
         return entries
 
     def overwrite(
@@ -972,6 +1010,13 @@ class ManifestTable:
         schema fidelity. Read them as strings and cast back to the types
         recorded at write time.
 
+        Each write dir is read with the schema its commit recorded
+        (``_schema_by_base``, seeded from the manifest's ``schemas`` map),
+        so planning reads no parquet footer: no inference job, on a fresh
+        handle included. A write dir with no recorded schema (a manifest
+        from before the map) infers once per handle. An empty slice takes
+        the schema of the first live file's write dir.
+
         The manifest already names every file, so planning must not pay
         for a listing job: above
         ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
@@ -1000,16 +1045,15 @@ class ManifestTable:
         with scoped_conf(spark, conf):
             if not entries:
                 # empty slice (e.g. batch introduces a new partition value):
-                # derive the schema from any one live file + its partition cols
+                # the schema of any one live file's write dir
                 if not m["files"]:
                     raise ValueError(
                         "cannot infer schema of an empty manifest table"
                     )
                 e = m["files"][0]
-                one = spark.read.option(
-                    "basePath", self.mfs.uri(e["base"])
-                ).parquet(self.mfs.uri(e["path"]))
-                out = one.limit(0)
+                out = self._scan(
+                    spark, e["base"], [self.mfs.uri(e["path"])]
+                ).limit(0)
                 if keep_pos:
                     out = out.withColumns(
                         {
@@ -1020,17 +1064,7 @@ class ManifestTable:
             else:
                 dfs = []
                 for base, files in sorted(by_base.items()):
-                    reader = spark.read.option(
-                        "basePath", self.mfs.uri(base)
-                    )
-                    known = self._schema_by_base.get(base)
-                    if known is not None:
-                        reader = reader.schema(known)
-                    d = reader.parquet(*sorted(files))
-                    if known is None:
-                        # base dirs are immutable (each write mints a new
-                        # one): remember inference's answer for the session
-                        self._schema_by_base[base] = d.schema
+                    d = self._scan(spark, base, sorted(files))
                     if with_pos:
                         # row identity = (file, position-in-file): stable
                         # across reads because parquet row order is fixed —
@@ -1087,6 +1121,25 @@ class ManifestTable:
             if c in out.columns and dt != "string":
                 out = out.withColumn(c, F.col(c).cast(dt))
         return out
+
+    def _scan(
+        self, spark: SparkSession, base: str, files: list[str]
+    ) -> DataFrame:
+        """Files of one write dir, read with its recorded schema; a base
+        with none recorded infers once and remembers the answer."""
+        reader = spark.read.option("basePath", self.mfs.uri(base))
+        known = self._schema_by_base.get(base)
+        if known is not None:
+            reader = reader.schema(known)
+        d = reader.parquet(*files)
+        # a partition key whose values are all NULL in the files read
+        # infers as void, which is the whole dir's type only if every
+        # file of it was read: not worth remembering
+        if known is None and not any(
+            isinstance(f.dataType, T.NullType) for f in d.schema
+        ):
+            self._schema_by_base[base] = d.schema
+        return d
 
     # -------------------------------------------------------------- merge
     def merge(

@@ -9,16 +9,23 @@ implement the same guarantee with snapshot directories and a version pointer:
         _VERSION            # text file: name of the live snapshot dir
         snap-00000001/      # immutable parquet snapshot
         snap-00000002/
+        _schema-snap-00000002.json  # its read schema (unpartitioned only)
 
 A writer materializes a complete new ``snap-N`` directory, then atomically
 replaces ``_VERSION`` (tmp + rename). Readers resolve ``_VERSION`` once and
 read an immutable directory — object-store friendly (no dir renames), and
 readers never observe partial data. This is exactly the lakehouse
 table-format trick (Iceberg metadata pointer) in miniature.
+
+An unpartitioned snapshot's read schema is written beside it before the
+swap, so a fresh handle reads without a footer-inference job; it sits
+outside the snapshot dir, which holds data files only.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
 import tempfile
@@ -82,6 +89,10 @@ class ParquetTable:
     def exists(self) -> bool:
         return self.current_snapshot() is not None
 
+    def _schema_path(self, snap: str) -> str:
+        # not "snap-*": _next_snapshot_dir parses a number out of those
+        return os.path.join(self.root, f"_schema-{os.path.basename(snap)}.json")
+
     def _next_snapshot_dir(self) -> str:
         os.makedirs(self.root, exist_ok=True)
         existing = [
@@ -103,11 +114,16 @@ class ParquetTable:
         if snap is None:
             raise FileNotFoundError(f"table has no published snapshot: {self.root}")
         cached = self._schema_cache.get(snap)
+        if cached is None and os.path.exists(self._schema_path(snap)):
+            with open(self._schema_path(snap), encoding="utf-8") as fh:
+                cached = T.StructType.fromJson(json.load(fh))
         if cached is not None:
+            self._schema_cache = {snap: cached}
             return spark.read.schema(cached).parquet(snap)
+        # partitioned, or written before snapshots recorded their schema:
+        # remember what inference said, so repeat reads of the SAME
+        # immutable snapshot (per-micro-batch folds) skip the footer job
         df = spark.read.parquet(snap)
-        # remember what inference said: repeat reads of the SAME immutable
-        # snapshot (per-micro-batch folds) skip the footer job
         self._schema_cache = {snap: df.schema}
         return df
 
@@ -142,14 +158,17 @@ class ParquetTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap)
-        self._publish(snap)
         if partition_by:
             # hive layout moves partition cols to the tail and their read
             # types come from directory-name inference — don't guess, let
             # the first read infer
             self._schema_cache = {}
         else:
-            self._schema_cache = {snap: _as_nullable(df.schema)}
+            schema = _as_nullable(df.schema)
+            with open(self._schema_path(snap), "w", encoding="utf-8") as fh:
+                fh.write(schema.json())
+            self._schema_cache = {snap: schema}
+        self._publish(snap)
         return snap
 
     def merge(
@@ -189,3 +208,5 @@ class ParquetTable:
         for d in snaps[:-keep]:
             if d != live:
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(self._schema_path(d))

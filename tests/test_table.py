@@ -8,6 +8,7 @@ import contextlib
 import datetime
 import decimal
 import io
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -18,6 +19,7 @@ from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.merge import merge_upsert
 from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
+from pipelinewise_spark.session import scoped_conf
 from pipelinewise_spark.streaming.cdc import apply_change_batch
 from pipelinewise_spark.sources.files import read_table
 
@@ -125,10 +127,58 @@ def test_parquet_count_rows_matches_read_count(spark, sf_dir, tmp_path):
     assert t.count_rows() == t.read(spark).count() == orders.count()
 
 
+def _live_bases(t, version=None):
+    return {e["base"] for e in t._load_manifest(version)["files"]}
+
+
+def _recorded_schemas(t):
+    """The live manifest's ``schemas`` map, parsed."""
+    with open(os.path.join(t.root, t.current_manifest_name())) as fh:
+        m = json.load(fh)
+    return {
+        b: T.StructType.fromJson(json.loads(js))
+        for b, js in m["schemas"].items()
+    }
+
+
+def _inferred_schemas(spark, t):
+    """Footer inference's answer for each live write dir, asked the way a
+    read asks it: partition values untyped."""
+    by_base = {}
+    for e in t.select_entries()[0]:
+        by_base.setdefault(e["base"], []).append(t.mfs.uri(e["path"]))
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    with scoped_conf(spark, {key: "false"}):
+        return {
+            b: spark.read.option("basePath", t.mfs.uri(b)).parquet(*fs).schema
+            for b, fs in by_base.items()
+        }
+
+
+def _strip_recorded_schemas(root):
+    """Make a table look as if written before commits recorded schemas."""
+    for name in os.listdir(root):
+        path = os.path.join(root, name)
+        if name.startswith("_schema-"):
+            os.remove(path)
+        elif name.startswith("manifest-"):
+            with open(path) as fh:
+                m = json.load(fh)
+            m.pop("schemas", None)
+            with open(path, "w") as fh:
+                json.dump(m, fh)
+
+
+def _fields(schema):
+    return [f.jsonValue() for f in schema.fields]
+
+
 def test_manifest_write_schema_matches_inference(spark, tmp_path, started_jobs):
-    """An unpartitioned ManifestTable remembers each write's schema, widened
-    as inference widens it: the writing handle reads its commits without an
-    inference job and gets exactly the schema a fresh handle infers."""
+    """Every ManifestTable write records the read schema footer inference
+    would return, field by field (order, nullability, metadata), for
+    unpartitioned and partitioned writes alike: the writing handle reads
+    its commits without an inference job and a fresh handle reads the
+    schema, rows and partition types a handle without the record infers."""
     schema = T.StructType([
         T.StructField("id", T.LongType(), False),
         T.StructField("s", T.StructType([
@@ -157,6 +207,260 @@ def test_manifest_write_schema_matches_inference(spark, tmp_path, started_jobs):
     assert remembered == inferred
     assert inferred["id"].nullable  # widened, as inference widens it
     assert sorted(r.id for r in t.read(spark).collect()) == [1, 2, 3]
+    assert {b: _fields(s) for b, s in _recorded_schemas(t).items()} == {
+        b: _fields(s) for b, s in _inferred_schemas(spark, t).items()
+    }
+
+    # partition columns of every type, a NULL partition value, hidden
+    # transforms, field metadata, and an added column in a later write dir
+    part_schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("v", T.StringType(), True, {"comment": "payload"}),
+        T.StructField("p_date", T.DateType()),
+        T.StructField("p_ts", T.TimestampType()),
+        T.StructField("p_ntz", T.TimestampNTZType()),
+        T.StructField("p_str", T.StringType()),
+        T.StructField("p_int", T.IntegerType()),
+        T.StructField("p_dec", T.DecimalType(10, 2)),
+    ])
+    day = datetime.date(2026, 3, 4)
+    part_rows = [
+        (1, "a", day, ts, ts, "x y", 7, decimal.Decimal("1.50")),
+        (2, "b", day, ts, ts, "z", -1, decimal.Decimal("-2.25")),
+        (3, "c", None, None, None, None, None, None),
+    ]
+    typed = {
+        "p_date": T.DateType(), "p_ts": T.TimestampType(),
+        "p_ntz": T.TimestampNTZType(), "p_str": T.StringType(),
+        "p_int": T.IntegerType(), "p_dec": T.DecimalType(10, 2),
+    }
+    specs = [
+        list(typed),
+        ["months(p_date)", "days(p_ts)"],
+        ["p_int", "months(p_ntz)"],
+    ]
+    for i, spec in enumerate(specs):
+        t = ManifestTable(os.path.join(str(tmp_path), f"p{i}"), spec)
+        t.overwrite(spark.createDataFrame(part_rows[:2], part_schema))
+        t.append(
+            spark.createDataFrame(part_rows[2:], part_schema)
+            .withColumn("extra", F.lit(9))
+        )
+        recorded = _recorded_schemas(t)
+        assert set(recorded) == _live_bases(t)
+        assert {b: _fields(s) for b, s in recorded.items()} == {
+            b: _fields(s) for b, s in _inferred_schemas(spark, t).items()
+        }, spec
+
+        fresh = ManifestTable(t.root)
+        before = started_jobs()
+        df = fresh.read(spark)
+        assert started_jobs() - before == 0, spec
+        got = sorted(
+            tuple(r) for r in df.select(*part_schema.names, "extra").collect()
+        )
+        for c, dt in typed.items():  # partition_types casts still apply
+            assert df.schema[c].dataType == dt, (spec, c)
+        assert df.schema["v"].metadata == {"comment": "payload"}
+        assert got == sorted(
+            (*r, None) for r in part_rows[:2]
+        ) + [(*part_rows[2], 9)]
+
+        _strip_recorded_schemas(t.root)
+        before = started_jobs()
+        legacy = ManifestTable(t.root).read(spark)
+        assert started_jobs() - before > 0  # the inference fallback ran
+        assert _fields(legacy.schema) == _fields(df.schema), spec
+        assert sorted(
+            tuple(r)
+            for r in legacy.select(*part_schema.names, "extra").collect()
+        ) == got
+
+
+#: kind -> (table factory, whether it has the ManifestTable-only verbs)
+_FRESH_READ_TABLES = {
+    "parquet": (ParquetTable, False),
+    "manifest": (ManifestTable, True),
+    "manifest_identity": (lambda root: ManifestTable(root, ["grp"]), True),
+    "manifest_months": (lambda root: ManifestTable(root, ["months(d)"]), True),
+    "manifest_days": (lambda root: ManifestTable(root, ["days(ts)"]), True),
+}
+_FRESH_SCHEMA = "id long, grp string, d date, ts timestamp, val double"
+
+
+@pytest.mark.parametrize("kind", sorted(_FRESH_READ_TABLES))
+def test_fresh_handle_reads_without_inference(spark, tmp_path, kind,
+                                               started_jobs):
+    """``read`` on a fresh handle starts no Spark job before its action
+    after every write verb: the commit recorded the read schema, so no
+    footer is inferred (a cold consumer or CLI process reading a table
+    the engine wrote)."""
+    make, manifest_verbs = _FRESH_READ_TABLES[kind]
+    root = os.path.join(str(tmp_path), "t")
+    day = datetime.date(2026, 1, 1)
+    expected = {}
+
+    def frame(rows):
+        expected.update((i, v) for i, _, _, v in rows)
+        return spark.createDataFrame(
+            [
+                (i, g, day + datetime.timedelta(days=k),
+                 datetime.datetime(2026, 1, 1) + datetime.timedelta(days=k),
+                 v)
+                for i, g, k, v in rows
+            ],
+            _FRESH_SCHEMA,
+        )
+
+    def check(verb):
+        fresh = make(root)
+        before = started_jobs()
+        df = fresh.read(spark)
+        assert started_jobs() - before == 0, verb
+        assert sorted((r.id, r.val) for r in df.collect()) == sorted(
+            expected.items()
+        ), verb
+
+    t = make(root)
+    t.overwrite(frame([(1, "a", 0, 1.0), (2, "a", 0, 2.0), (3, "b", 40, 3.0)]))
+    check("overwrite")
+    t.append(frame([(4, "b", 40, 4.0), (5, "c", 70, 5.0)]))
+    check("append")
+    make(root).merge(spark, frame([(1, "a", 0, 10.0), (6, "d", 100, 6.0)]),
+                     ["id"])
+    check("merge")
+    if not manifest_verbs:
+        return
+    make(root).merge_on_read(spark, frame([(2, "a", 0, 20.0)]), ["id"])
+    check("merge_on_read")
+    make(root).delete_where(spark, "id = 3")
+    del expected[3]
+    assert any(e.get("dv") for e in t.select_entries()[0])
+    check("delete_where")
+    assert make(root).compact(spark, min_files=2) > 0
+    check("compact")
+
+
+def test_recorded_schemas_follow_the_live_files(spark, tmp_path,
+                                                started_jobs):
+    """The manifest's schema map covers exactly the live write dirs after
+    every verb that republishes an older or copied file set: rollback
+    (from a fresh handle, so the map comes from the loaded manifest),
+    clone, compact, vacuum and snapshot expiry."""
+    root = os.path.join(str(tmp_path), "t")
+    schema = "id long, grp string, val double"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("id", "grp", "val").collect())
+
+    def fresh_read(r=root):
+        before = started_jobs()
+        df = ManifestTable(r).read(spark)
+        assert started_jobs() - before == 0
+        return rows(df)
+
+    t = ManifestTable(root, ["grp"])
+    v1 = [(1, "a", 1.0), (2, "b", 2.0)]
+    v2 = [(3, "a", 3.0)]
+    t.overwrite(spark.createDataFrame(v1, schema))
+    t.append(spark.createDataFrame(v2, schema))
+    t.overwrite(spark.createDataFrame([(9, "z", 9.0)], schema))
+    assert set(_recorded_schemas(t)) == _live_bases(t)
+    assert len(_live_bases(t)) == 1
+
+    ManifestTable(root).rollback_to(2)
+    assert set(_recorded_schemas(t)) == _live_bases(t) == _live_bases(t, 2)
+    assert fresh_read() == sorted(v1 + v2)
+
+    clone = t.clone_to(os.path.join(str(tmp_path), "clone"))
+    assert set(_recorded_schemas(clone)) == _live_bases(clone)
+    assert fresh_read(clone.root) == sorted(v1 + v2)
+
+    assert ManifestTable(root).compact(spark, min_files=2) == 1
+    assert set(_recorded_schemas(t)) == _live_bases(t)
+    t.vacuum(keep_manifests=1)
+    t.expire_snapshots(older_than="9999-12-31 00:00:00")
+    assert t.versions() == [int(t.current_manifest_name()[9:17])]
+    assert set(_recorded_schemas(t)) == _live_bases(t)
+    assert fresh_read() == sorted(v1 + v2)
+
+
+def test_tables_without_recorded_schemas_read_through_inference(
+    spark, tmp_path, started_jobs
+):
+    """A table written before commits recorded read schemas (no manifest
+    map, no schema file beside the snapshot) still reads, live and by
+    time travel, the rows and schema it reads with the record; vacuum
+    removes a snapshot's schema file with the snapshot."""
+    schema = "id long, grp string, val double"
+    base = [(1, "a", 1.0), (2, "b", 2.0)]
+    batch = [(2, "b", 20.0), (3, "c", 3.0)]
+    merged = [(1, "a", 1.0), (2, "b", 20.0), (3, "c", 3.0)]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    m = ManifestTable(os.path.join(str(tmp_path), "m"), ["grp"])
+    m.overwrite(spark.createDataFrame(base, schema))
+    m.merge(spark, spark.createDataFrame(batch, schema), ["id"])
+    p = ParquetTable(os.path.join(str(tmp_path), "p"))
+    p.overwrite(spark.createDataFrame(base, schema))
+    p.merge(spark, spark.createDataFrame(batch, schema), ["id"])
+    recorded = {
+        "m": ManifestTable(m.root).read(spark).schema,
+        "m1": ManifestTable(m.root).read(spark, version=1).schema,
+        "p": ParquetTable(p.root).read(spark).schema,
+    }
+    assert len([n for n in os.listdir(p.root) if n.startswith("_schema-")]) == 2
+
+    for root in (m.root, p.root):
+        _strip_recorded_schemas(root)
+    for key, make, got in [
+        ("m", lambda: ManifestTable(m.root).read(spark), merged),
+        ("m1", lambda: ManifestTable(m.root).read(spark, version=1), base),
+        ("p", lambda: ParquetTable(p.root).read(spark), merged),
+    ]:
+        before = started_jobs()
+        df = make()
+        assert started_jobs() - before > 0, key  # inferred
+        assert df.schema == recorded[key], key
+        assert rows(df.select("id", "grp", "val")) == got, key
+
+    p.overwrite(spark.createDataFrame(base, schema))
+    p.overwrite(spark.createDataFrame(merged, schema))
+    p.vacuum(keep=1)
+    assert sorted(
+        n for n in os.listdir(p.root) if n.startswith(("_schema-", "snap-"))
+    ) == ["_schema-snap-00000004.json", "snap-00000004"]
+    assert rows(ParquetTable(p.root).read(spark)) == merged
+
+
+def test_merge_opening_a_partition_reads_no_footer(spark, tmp_path,
+                                                   started_jobs):
+    """A partitioned merge whose batch opens a new partition value reads
+    an empty slice; its schema comes from the recorded map, not from
+    inferring one live file."""
+    schema = "id long, grp string, val double"
+    root = os.path.join(str(tmp_path), "t")
+    ManifestTable(root, ["grp"]).overwrite(
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema)
+    )
+    t = ManifestTable(root)
+    slice_jobs = []
+    read = t.read
+
+    def counted(*args, **kwargs):
+        before = started_jobs()
+        out = read(*args, **kwargs)
+        slice_jobs.append(started_jobs() - before)
+        return out
+
+    t.read = counted
+    t.merge(spark, spark.createDataFrame([(3, "new", 3.0)], schema), ["id"])
+    assert slice_jobs == [0]
+    assert sorted(tuple(r) for r in ManifestTable(root).read(spark).select(
+        "id", "grp", "val").collect()) == [
+        (1, "a", 1.0), (2, "b", 2.0), (3, "new", 3.0)]
 
 
 # --------------------------------------------------------- merge contract
@@ -338,3 +642,23 @@ def test_known_paths_conf_is_local_only(spark, tmp_path):
         LISTING_THRESHOLD: str(threshold + 1)
     }
     assert MetaFS("mock:///t").known_paths_conf(spark, 4096) == {}
+
+
+@pytest.mark.parametrize("recorded", [True, False])
+def test_null_partition_slice_keeps_the_write_dir_schema(spark, tmp_path,
+                                                         recorded):
+    """Reading only a write dir's NULL partition first must not change
+    how the handle reads the rest of that dir: inference types an
+    all-NULL partition key as void, and a handle that remembered that
+    for the dir read every other value of it as NULL."""
+    root = os.path.join(str(tmp_path), "t")
+    ManifestTable(root, ["p"]).overwrite(
+        spark.createDataFrame([(1, "x"), (2, None)], "id long, p string")
+    )
+    if not recorded:
+        _strip_recorded_schemas(root)
+    t = ManifestTable(root)
+    assert t.read(spark, partitions={"p": [None]}).collect() == [(2, None)]
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (1, "x"), (2, None)
+    ]
