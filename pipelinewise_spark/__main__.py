@@ -203,7 +203,7 @@ def _cmd_status(args: argparse.Namespace) -> int:
     """Per-stream replication status (the reference's `status` table,
     cli/pipelinewise.py): target table existence + live version + bookmark.
     Driver-side metadata only — no SparkSession, no data reads."""
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.plans.state import BookmarkStore
     from pipelinewise_spark.plans.yaml_config import compile_yaml_file
 
@@ -213,29 +213,18 @@ def _cmd_status(args: argparse.Namespace) -> int:
     )
     rows = []
     for s in spec.streams:
-        root = os.path.join(spec.target_path, s.target_table)
-        version: str | None = None
-        manifest_ptr = os.path.join(root, "_MANIFEST")
-        stats_info = None
-        if os.path.exists(manifest_ptr):
-            with open(manifest_ptr, encoding="utf-8") as fh:
-                version = fh.read().strip()
-            # surface persisted ANALYZE stats + their staleness (metadata
-            # read only — status never touches data)
-            from pipelinewise_spark.operators.manifest_table import (
-                ManifestTable,
-            )
-
-            st = ManifestTable(root).table_stats()
-            if st is not None:
-                stats_info = {
-                    "rows": st.get("rows"),
-                    "analyzed_version": st.get("version"),
-                    "stale": st.get("version") != version,
-                }
-        else:
-            snap = ParquetTable(root).current_snapshot()
-            version = os.path.basename(snap) if snap else None
+        table = ManifestTable(
+            os.path.join(spec.target_path, s.target_table)
+        )
+        version = table.current_manifest_name()
+        # surface persisted ANALYZE stats + their staleness (metadata
+        # read only — status never touches data)
+        st = table.table_stats()
+        stats_info = None if st is None else {
+            "rows": st.get("rows"),
+            "analyzed_version": st.get("version"),
+            "stale": st.get("version") != version,
+        }
         rows.append(
             {
                 "stream": s.tap_stream_id,
@@ -340,18 +329,19 @@ schemas:
 def _cmd_export(args: argparse.Namespace) -> int:
     """FastSync-style export: table → split gzip CSV chunks + manifest
     (reference fastsync/commons/split_gzip.py), written executor-parallel.
-    Source may be a plain parquet path or a ManifestTable root."""
+    Source may be a plain parquet path or a ManifestTable root (its live
+    snapshot is exported, never the files older commits left behind)."""
     from pipelinewise_spark.operators.export import export_split_gzip_csv
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.session import get_spark
 
     spark = get_spark("pipelinewise-export")
     spark.sparkContext.setLogLevel("ERROR")
-    if os.path.exists(os.path.join(args.source, "_MANIFEST")):
-        from pipelinewise_spark.operators.manifest_table import ManifestTable
-
-        df = ManifestTable(args.source).read(spark)
-    else:
-        df = spark.read.parquet(args.source)
+    table = ManifestTable(args.source)
+    df = (
+        table.read(spark) if table.exists()
+        else spark.read.parquet(args.source)
+    )
     if args.columns:
         df = df.select(
             *[c.strip() for c in args.columns.split(",") if c.strip()]
@@ -790,7 +780,7 @@ def _cmd_replay_quarantine(args: argparse.Namespace) -> int:
     Schema, re-validate, MERGE the now-valid rows into the target
     ManifestTable by PK, and keep only the still-invalid remainder
     quarantined (published atomically when the quarantine is a
-    ParquetTable root; written to ``<dir>_remaining`` for a plain
+    ManifestTable root; written to ``<dir>_remaining`` for a plain
     parquet dir). Still-invalid rows keep their ORIGINAL ``_dlq_record``
     string — never a re-serialization of this attempt's parse, which
     would null unparseable fields and drop fields outside the attempted
@@ -800,7 +790,6 @@ def _cmd_replay_quarantine(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from pipelinewise_spark.operators.manifest_table import ManifestTable
-    from pipelinewise_spark.operators.table import ParquetTable
     from pipelinewise_spark.operators.validation import (
         compile_json_schema,
         validate,
@@ -812,7 +801,7 @@ def _cmd_replay_quarantine(args: argparse.Namespace) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     with open(args.schema, encoding="utf-8") as fh:
         schema_doc = json.load(fh)
-    qtable = ParquetTable(args.quarantine)
+    qtable = ManifestTable(args.quarantine)
     versioned = qtable.exists()
     dlq = (
         qtable.read(spark) if versioned
@@ -920,7 +909,7 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
     bm = BookmarkStore(args.state) if args.state else None
     pk_required = not args.no_pk_required
     if args.tail:
-        from pipelinewise_spark.sources.singer import _table_class
+        from pipelinewise_spark.operators.manifest_table import ManifestTable
         from pipelinewise_spark.streaming.singer import sync_capture_dir
 
         if not args.checkpoint:
@@ -930,13 +919,12 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
         st = sync_capture_dir(
             spark, args.capture, args.target_root, args.checkpoint,
             primary_key_required=pk_required, bookmarks=bm,
-            target_format=args.target_format,
+            merge_strategy=args.merge_strategy,
         )
-        tbl = _table_class(args.target_format)
 
         def _count(stream: str) -> int:
             # a SCHEMA-only stream (no records yet) has no table
-            t = tbl(f"{args.target_root}/{stream}")
+            t = ManifestTable(f"{args.target_root}/{stream}")
             return t.read(spark).count() if t.exists() else 0
 
         print(json.dumps({
@@ -950,7 +938,7 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
             spark, args.capture, args.target_root,
             batch_size_rows=args.batch_size, bookmarks=bm,
             primary_key_required=pk_required,
-            target_format=args.target_format,
+            merge_strategy=args.merge_strategy,
         )
         print(json.dumps({
             "streams": {
@@ -963,7 +951,7 @@ def _cmd_import_capture(args: argparse.Namespace) -> int:
     tables = load_capture(
         spark, args.capture, args.target_root, bookmarks=bm,
         primary_key_required=pk_required,
-        target_format=args.target_format,
+        merge_strategy=args.merge_strategy,
     )
     print(json.dumps({
         "streams": {s: t.read(spark).count() for s, t in tables.items()}
@@ -976,13 +964,13 @@ def _cmd_export_capture(args: argparse.Namespace) -> int:
     write_capture) — SCHEMA + RECORD lines + optional
     ACTIVATE_VERSION/STATE, byte-reproducible, consumable by any
     Singer target. Refuses lossy exports (NULL/duplicate keys)."""
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.session import get_spark
     from pipelinewise_spark.sources.singer import write_capture
 
     spark = get_spark("pipelinewise-export-capture")
     spark.sparkContext.setLogLevel("ERROR")
-    t = ParquetTable(args.table)
+    t = ManifestTable(args.table)
     df = t.read(spark) if t.exists() else spark.read.parquet(args.table)
     if args.rotate_records:
         from pipelinewise_spark.sources.singer import write_capture_rotated
@@ -1371,7 +1359,7 @@ def main(argv: list[str] | None = None) -> int:
              "the rest stay quarantined",
     )
     rq.add_argument("quarantine",
-                    help="quarantine parquet dir or ParquetTable root "
+                    help="quarantine parquet dir or ManifestTable root "
                          "(_dlq_record + violations rows)")
     rq.add_argument("--schema", required=True,
                     help="path to the FIXED stream JSON Schema document")
@@ -1411,7 +1399,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ic.add_argument("capture", help="NDJSON capture file")
     ic.add_argument("target_root",
-                    help="directory for per-stream ParquetTables")
+                    help="directory for per-stream ManifestTables")
     ic.add_argument("--replay", action="store_true",
                     help="faithful persist_lines replay (buffered "
                          "flushes + flushed_state) instead of the bulk "
@@ -1432,14 +1420,14 @@ def main(argv: list[str] | None = None) -> int:
     ic.add_argument("--checkpoint",
                     help="checkpoint dir for --tail (stream progress + "
                          "schema-registry sidecar)")
-    ic.add_argument("--target-format", choices=["parquet", "mor"],
-                    default="parquet",
-                    help="target layout for every mode: 'parquet' "
-                         "rewrites the table per flush (simple files); "
-                         "'mor' lands each flush/load as a "
-                         "ManifestTable merge-on-read delta — "
-                         "O(batch) writes, for long captures and "
-                         "incremental loads into big tables")
+    ic.add_argument("--merge-strategy", choices=["merge_on_read"],
+                    default=None,
+                    help="how every mode lands a flush/load: by default "
+                         "the table is rewritten copy-on-write (simple "
+                         "files); 'merge_on_read' lands it as a "
+                         "merge-on-read delta — O(batch) writes, for "
+                         "long captures and incremental loads into big "
+                         "tables")
     ic.set_defaults(fn=_cmd_import_capture)
 
     ec = sub.add_parser(
@@ -1447,7 +1435,7 @@ def main(argv: list[str] | None = None) -> int:
         help="export a table as a Singer NDJSON capture (SCHEMA + "
              "RECORD lines, consumable by any Singer target)",
     )
-    ec.add_argument("table", help="ParquetTable root or parquet dir")
+    ec.add_argument("table", help="ManifestTable root or parquet dir")
     ec.add_argument("--out", required=True, help="capture file to write")
     ec.add_argument("--stream", required=True, help="Singer stream name")
     ec.add_argument("--pk", action="append", required=True,

@@ -28,10 +28,10 @@ see view versions consistent with base versions. Out-of-order protection:
 change batches are last-wins deduped on their own key before applying.
 
 Publish cost (the 100 TB concern): every step is one PK MERGE into the
-view; with a plain ParquetTable view that MERGE rewrites the whole view —
-batch-sized delta math, view-sized publish. Passing a
-``ManifestTable`` view plus ``num_buckets`` switches publishing to the
-partition-pruned MERGE: the view is hash-bucketed on the fact PK
+view; without ``num_buckets`` that MERGE rewrites the whole view
+copy-on-write — batch-sized delta math, view-sized publish. Passing
+``num_buckets`` switches publishing to the partition-pruned MERGE: the
+view is hash-bucketed on the fact PK
 (``__view_bucket = pmod(xxhash64(pk), num_buckets)``), every maintenance
 step reduces to PK-keyed upserts + PK-keyed deletes (dim-key deletes are
 resolved to fact PKs through a batch-keys-restricted fact scan), and only
@@ -51,7 +51,7 @@ from pipelinewise_spark.operators.dedupe import last_wins_dedupe
 from pipelinewise_spark.operators.sdc import SDC_DELETED_AT
 from pipelinewise_spark.streaming.cdc import OP_COL, SEQ_COL
 
-#: PK-hash partition column a ManifestTable-backed view is bucketed on.
+#: PK-hash partition column a bucketed view (``num_buckets``) is split on.
 BUCKET_COL = "__view_bucket"
 
 
@@ -81,16 +81,6 @@ class IncrementalJoinView:
         ]
         self.dim_cols = [c for c in dim_cols if c != join_key]
         self.num_buckets = num_buckets
-        if num_buckets is not None:
-            from pipelinewise_spark.operators.manifest_table import (
-                ManifestTable,
-            )
-
-            if not isinstance(view_table, ManifestTable):
-                raise ValueError(
-                    "num_buckets requires a ManifestTable view (the "
-                    "partition-pruned publish path)"
-                )
 
     @property
     def _pruned_publish(self) -> bool:

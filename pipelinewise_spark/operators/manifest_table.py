@@ -1,10 +1,11 @@
 """ManifestTable — file-manifest snapshots with partition-level MERGE.
 
-ParquetTable rewrites the whole table per publish — fine for dimensions,
-wrong for a 100 TB fact table receiving a 0.1 % batch. ManifestTable is the
-scale path: a snapshot is a JSON manifest listing immutable parquet files
-(with their hive partition values); MERGE rewrites only the partitions the
-batch touches and the new manifest re-references every untouched file.
+The engine's one table class: every target (full loads, incremental
+merges, CDC, Singer faces, SCD/MV/bar sinks) is a ManifestTable. A
+snapshot is a JSON manifest listing immutable parquet files (with their
+hive partition values); an unpartitioned MERGE rewrites the table
+copy-on-write, a partitioned one rewrites only the partitions the batch
+touches and the new manifest re-references every untouched file.
 This is the Iceberg/Delta snapshot mechanism in miniature, built on plain
 parquet + atomic pointer replace (object-store friendly: no renames, no
 directory moves, readers pin a manifest and never see partial writes).
@@ -36,11 +37,33 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pipelinewise_spark.operators.fsio import MetaFS
-from pipelinewise_spark.operators.table import _as_nullable
 from pipelinewise_spark.session import scoped_conf
 
 _VERSION_FILE = "_VERSION"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """The file-relation normal form Spark's parquet inference returns:
+    every field (recursively) nullable. Recording a written frame's schema
+    for later reads must match inference exactly, so apply the same
+    widening."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name, _as_nullable(f.dataType), True, f.metadata
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
 
 
 class ConstraintViolation(ValueError):
@@ -221,6 +244,13 @@ class ManifestTable:
             name = self.current_manifest_name()
             if name is None:
                 raise FileNotFoundError(f"no published manifest: {self.root}")
+            if name.startswith("snap-"):
+                raise ValueError(
+                    f"{self.root}: {self._ref_file} names {name!r}, a "
+                    "snapshot directory of the old snap-N table layout, "
+                    "which is no longer read — reload the stream with a "
+                    "fresh FULL_TABLE run"
+                )
         m = json.loads(self.mfs.read_text(name))
         for base, js in m.get("schemas", {}).items():
             if base not in self._schema_by_base:
@@ -238,10 +268,6 @@ class ManifestTable:
 
     def exists(self) -> bool:
         return self.current_manifest_name() is not None
-
-    def current_snapshot(self) -> str | None:
-        """ParquetTable-interface alias: the live manifest is the snapshot."""
-        return self.current_manifest_name()
 
     # ---------------------------------------------- branches (WAP pattern)
     @staticmethod
@@ -656,9 +682,9 @@ class ManifestTable:
                 }
             )
         # the read schema inference returns for the whole dir: the written
-        # columns, widened as inference widens them (ParquetTable.overwrite's
-        # rule), then each partition key in spec order, untyped as
-        # _read_entries reads it — string, or void when every value is NULL
+        # columns, widened as inference widens them (_as_nullable), then
+        # each partition key in spec order, untyped as _read_entries reads
+        # it — string, or void when every value is NULL
         keys = [f_.key for f_ in fields]
         self._schema_by_base[base_rel] = T.StructType(
             [f for f in _as_nullable(df.schema).fields if f.name not in keys]
@@ -1150,10 +1176,15 @@ class ManifestTable:
         hard_delete: bool = False,
         guard_col: str | None = None,
     ) -> None:
-        """Partition-pruned MERGE: only partitions present in the batch are
-        read, merged and rewritten; untouched files carry over by reference.
+        """PK MERGE. Unpartitioned: copy-on-write — the whole table is
+        read, merged with the batch and republished; the count-less PK
+        repartition lets AQE size the rewrite by bytes, so the table lands
+        as few right-sized files per merge instead of shuffle-partition-many
+        tiny ones that every later merge re-lists (the write-shape rule).
 
-        The affected-partition list is driver-side metadata (coarse values,
+        Partitioned: only partitions present in the batch are read, merged
+        and rewritten; untouched files carry over by reference. The
+        affected-partition list is driver-side metadata (coarse values,
         like Delta's replaceWhere) — never row data.
         """
         from pipelinewise_spark.operators.merge import merge_upsert
@@ -1167,7 +1198,9 @@ class ManifestTable:
                 self.read(spark), batch, primary_keys,
                 hard_delete=hard_delete, guard_col=guard_col,
             )
-            self.overwrite(merged, [])
+            self.overwrite(
+                merged.repartition(*[F.col(c) for c in primary_keys]), []
+            )
             return
 
         # hive partition dirs stringify values; match on the string form.

@@ -102,3 +102,17 @@ def append_only(target: DataFrame | None, source: DataFrame) -> DataFrame:
     if target is None:
         return source
     return target.unionByName(source, allowMissingColumns=True)
+
+
+def is_merge_on_read(strategy: str | None, owner: str) -> bool:
+    """Read a ``merge_strategy``, the one copy-on-write / merge-on-read
+    switch of CDC streams and the Singer faces: ``None`` is the
+    copy-on-write MERGE, ``"merge_on_read"`` lands batches as
+    merge-on-read deltas; anything else raises, naming ``owner``."""
+    if strategy not in (None, "merge_on_read"):
+        raise ValueError(
+            f"{owner}: unknown merge_strategy {strategy!r} — expected "
+            "'merge_on_read' (or no merge_strategy for the copy-on-write "
+            "default)"
+        )
+    return strategy == "merge_on_read"

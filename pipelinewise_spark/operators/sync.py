@@ -30,9 +30,9 @@ from pyspark.sql import functions as F
 
 from pipelinewise_spark.functions.masking import apply_transformations
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.merge import append_only, merge_upsert
 from pipelinewise_spark.operators.sdc import add_sdc_columns
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
 
@@ -63,7 +63,7 @@ def full_table_sync(
     spark: SparkSession,
     source_df: DataFrame,
     spec: StreamSpec,
-    table: ParquetTable,
+    table: ManifestTable,
     state: BookmarkStore | None = None,
     extracted_at=None,
     batched_at=None,
@@ -79,7 +79,9 @@ def full_table_sync(
     table.overwrite(batch)
     if state is not None:
         # version bookmark ≈ ACTIVATE_VERSION table version
-        state.update(spec.tap_stream_id, {"version": table.current_snapshot()})
+        state.update(
+            spec.tap_stream_id, {"version": table.current_manifest_name()}
+        )
         state.save()
     if on_batch is not None:
         on_batch(table.read(spark))
@@ -90,7 +92,7 @@ def incremental_sync(
     spark: SparkSession,
     source_df: DataFrame,
     spec: StreamSpec,
-    table: ParquetTable,
+    table: ManifestTable,
     state: BookmarkStore,
     extracted_at=None,
     batched_at=None,
@@ -121,9 +123,9 @@ def incremental_sync(
         if not table.exists():
             table.overwrite(batch)
         elif spec.primary_keys:
-            # a manifest/partitioned target merges only the partitions the
-            # batch touches — a 0.1 % batch must NOT rewrite 100 % of a
-            # 100 TB table; a ParquetTable rewrites itself copy-on-write
+            # a partitioned target merges only the partitions the batch
+            # touches — a 0.1 % batch must NOT rewrite 100 % of a 100 TB
+            # table; an unpartitioned one rewrites itself copy-on-write
             table.merge(
                 spark, batch, spec.primary_keys, hard_delete=spec.hard_delete
             )
@@ -151,7 +153,7 @@ def partial_sync(
     spark: SparkSession,
     source_df: DataFrame,
     spec: StreamSpec,
-    table: ParquetTable,
+    table: ManifestTable,
     start_value: Any,
     end_value: Any | None = None,
     extracted_at=None,

@@ -2721,7 +2721,7 @@ def singer_stream_sync_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECORDs parsed DISTRIBUTED via from_json, STATE → bookmarks with
     the reference's flushed_state discipline —
     target_snowflake/__init__.py:122-416 persist_lines) replays through
-    buffered flushes into a ParquetTable. The capture carries an
+    buffered flushes into a ManifestTable. The capture carries an
     initial half-load, a mid-capture STATE, then a full resync with
     every price bumped +1.0 — so cross-batch MERGE last-wins must
     leave exactly the bumped rows (the SQL oracle). Asserted in-query:
@@ -3186,8 +3186,8 @@ def singer_rotated_tail_roundtrip(
     assert n == n_rows
     assert st.last_batch >= 2, "expected a multi-micro-batch run"
     assert st.bookmark == {"bookmarks": {"customer": {"done": True}}}
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
 
-    return ParquetTable(os.path.join(tmp, "tgt", "customer")).read(
+    return ManifestTable(os.path.join(tmp, "tgt", "customer")).read(
         spark
     ).select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")

@@ -13,8 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.sync import full_table_sync, incremental_sync
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import ReplicationMethod, StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
 from pipelinewise_spark.functions.masking import apply_transformations
@@ -47,7 +47,7 @@ def full_table_sync_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         replication_method=ReplicationMethod.FULL_TABLE,
     )
     tmp = tempfile.mkdtemp(prefix="pws_full_")
-    table = ParquetTable(f"{tmp}/lineitem")
+    table = ManifestTable(f"{tmp}/lineitem")
     full_table_sync(
         spark,
         read_table(spark, sf_dir, "lineitem"),
@@ -85,8 +85,6 @@ def incremental_sync_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Target is a ManifestTable partitioned by o_orderstatus: the T1 batch
     merges partition-pruned — untouched partitions' files carry over by
     reference instead of being rewritten (the 100 TB MERGE path)."""
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     src = read_table(spark, sf_dir, "orders")
     spec = StreamSpec(
         tap_stream_id="orders",
@@ -159,7 +157,7 @@ def partial_sync_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         replication_key="o_orderdate",
     )
     tmp = tempfile.mkdtemp(prefix="pws_partial_")
-    table = ParquetTable(f"{tmp}/orders")
+    table = ManifestTable(f"{tmp}/orders")
 
     corrupted = src.withColumn(
         "o_totalprice",

@@ -151,7 +151,7 @@ def cdc_stream_scd2_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyspark.sql.types as T
 
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.queries.fixturetime import fixture_timer
     from pipelinewise_spark.streaming.scd import (
         read_closed_log,
@@ -199,7 +199,7 @@ def cdc_stream_scd2_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         tap_stream_id="customer", primary_keys=["c_custkey"],
         hard_delete=True,
     )
-    current = ParquetTable(os.path.join(tmp, "current"))
+    current = ManifestTable(os.path.join(tmp, "current"))
     closed_dir = os.path.join(tmp, "closed")
     for w in waves:
         # one delivery wave per bounded run against the SAME checkpoint

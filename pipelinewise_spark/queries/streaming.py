@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.partitioning import (
     dir_bytes,
     local_frame,
@@ -94,7 +94,7 @@ def cdc_stream_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             tap_stream_id="orders", primary_keys=["o_orderkey"],
             hard_delete=False,
         )
-        table = ParquetTable(os.path.join(tmp, "orders"))
+        table = ManifestTable(os.path.join(tmp, "orders"))
 
         # T0 full load
         orders = read_table(spark, sf_dir, "orders")
@@ -157,12 +157,12 @@ def cdc_stream_mv_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             tap_stream_id="orders", primary_keys=["o_orderkey"],
             hard_delete=False,
         )
-        table = ParquetTable(os.path.join(tmp, "orders"))
+        table = ManifestTable(os.path.join(tmp, "orders"))
         orders = read_table(spark, sf_dir, "orders")
         table.overwrite(add_sdc_columns(orders, extracted_at=T0, batched_at=T0))
 
         rollup = StreamingRollup(
-            ParquetTable(os.path.join(tmp, "orders_mv")),
+            ManifestTable(os.path.join(tmp, "orders_mv")),
             keys=["o_orderstatus"],
             sums={"total_price": "o_totalprice"},
         )
@@ -342,7 +342,7 @@ def mongo_change_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         spec = StreamSpec(
             tap_stream_id="mongo_documents", primary_keys=["_id"], hard_delete=False
         )
-        table = ParquetTable(os.path.join(tmp, "documents"))
+        table = ManifestTable(os.path.join(tmp, "documents"))
 
         # T0 full export/load: _id + serialized document
         base = normalize_documents(documents_ext_json(docs), "doc")
@@ -773,8 +773,6 @@ def cdc_stream_mor_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the base table."""
     import pyspark.sql.types as T
 
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     with fixture_timer():
         tmp = tempfile.mkdtemp(prefix="pws_mor_cdc_")
         events_dir = os.path.join(tmp, "events")
@@ -849,7 +847,6 @@ def medallion_cdc_gold_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_change_feed,
         build_aggregate,
     )
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.streaming.table_feed import TableChangeConsumer
 
     with fixture_timer():
@@ -966,7 +963,7 @@ def stream_ohlc_bars_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = os.path.join(tmp, "src")
         events.repartition(6).write.mode("overwrite").parquet(src)
 
-    bars = ParquetTable(os.path.join(tmp, "bars"))
+    bars = ManifestTable(os.path.join(tmp, "bars"))
     keys = ["event_type", "bar_date"]
 
     def fold(batch: DataFrame, _bid: int) -> None:
@@ -1959,7 +1956,7 @@ def stream_singer_capture_orders(
     )
     assert st.last_batch >= 2, "expected a multi-micro-batch run"
     assert st.bookmark == {"bookmarks": {"orders": {"pos": 2}}}
-    return ParquetTable(_os.path.join(tmp, "tgt", "orders")).read(
+    return ManifestTable(_os.path.join(tmp, "tgt", "orders")).read(
         spark
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
 
@@ -1978,23 +1975,22 @@ def stream_singer_capture_mor_orders(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Tail-follow capture consumption into MERGE-ON-READ targets
-    (streaming/singer.py:apply_capture_batch target_format='mor'):
-    the same sequence-guarded semantics as the parquet twin, but each
-    micro-batch lands as a ManifestTable MOR delta — superseded rows
-    deletion-vectored, the batch appended as new files — so per-batch
-    WRITE cost is O(batch) + an answer-sized sidecar instead of
-    O(target). This is the shape a months-long ``tap | engine`` pipe
-    needs at fact-table scale: the table must not be rewritten per
-    trickle batch (compaction is a separately scheduled lever). The
-    oracle is the final merged state; asserted in-query: the run was
-    multi-micro-batch AND the update batch deletion-vectored rather
-    than rewrote batch-1 files (a DV-carrying manifest entry
+    (streaming/singer.py:apply_capture_batch with
+    merge_strategy='merge_on_read'): the same sequence-guarded semantics
+    as the copy-on-write twin, but each micro-batch lands as a MOR delta
+    — superseded rows deletion-vectored, the batch appended as new
+    files — so per-batch WRITE cost is O(batch) + an answer-sized
+    sidecar instead of O(target). This is the shape a months-long
+    ``tap | engine`` pipe needs at fact-table scale: the table must not
+    be rewritten per trickle batch (compaction is a separately scheduled
+    lever). The oracle is the final merged state; asserted in-query: the
+    run was multi-micro-batch AND the update batch deletion-vectored
+    rather than rewrote batch-1 files (a DV-carrying manifest entry
     survives)."""
     import json as _json
     import os as _os
     import tempfile as _tempfile
 
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.streaming.singer import sync_capture_dir
 
     base = (
@@ -2042,7 +2038,7 @@ def stream_singer_capture_mor_orders(
     st = sync_capture_dir(
         spark, capdir, _os.path.join(tmp, "tgt"),
         _os.path.join(tmp, "ckpt"), max_files_per_trigger=1,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     assert st.last_batch >= 1, "expected a multi-micro-batch run"
     assert st.bookmark == {"bookmarks": {"orders": {"pos": 2}}}

@@ -26,8 +26,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.sync import full_table_sync, incremental_sync
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import PipelineSpec, ReplicationMethod, StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
 
@@ -80,25 +80,21 @@ class PipelineRunner:
         # notified on a failed run; unknown types fail at construction
         self.alerts = AlertSender(self.spec.options.get("alert_handlers"))
 
-    def table_for(self, stream: StreamSpec):
-        """Target table handle. ``table_format: manifest`` (stream- or
-        pipeline-level) selects the snapshot-manifest table whose MERGE
-        rewrites only touched partitions — the default for INCREMENTAL /
-        LOG_BASED streams at scale; ``partition_by`` names its partition
-        columns."""
+    def table_for(self, stream: StreamSpec) -> ManifestTable:
+        """Target table handle: a ManifestTable whose ``partition_by``
+        (stream- or pipeline-level) names its partition columns. The
+        ``table_format`` option survives only as ``manifest``, a no-op;
+        any other value raises."""
         root = os.path.join(self.spec.target_path, stream.target_table)
         fmt = stream.options.get(
-            "table_format", self.spec.options.get("table_format", "parquet")
+            "table_format", self.spec.options.get("table_format", "manifest")
         )
-        if fmt == "parquet":
-            return ParquetTable(root)
         if fmt != "manifest":
             raise ValueError(
                 f"{stream.tap_stream_id}: unknown table_format {fmt!r} — "
-                "expected 'parquet' or 'manifest'"
+                "every target is a ManifestTable; 'manifest' is the only "
+                "accepted value"
             )
-        from pipelinewise_spark.operators.manifest_table import ManifestTable
-
         partition_by = list(
             stream.options.get("partition_by")
             or self.spec.options.get("partition_by")

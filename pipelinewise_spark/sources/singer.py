@@ -72,6 +72,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pipelinewise_spark.operators.manifest_table import ManifestTable
+from pipelinewise_spark.operators.merge import is_merge_on_read
+
 SDC_EXTRACTED_AT = "_sdc_extracted_at"
 SDC_TABLE_VERSION = "_sdc_table_version"
 
@@ -390,30 +393,6 @@ def _mor_aligned(spark, table, batch: DataFrame) -> DataFrame | None:
     return batch.select(*[f.name for f in live])
 
 
-def _table_class(target_format: str) -> type:
-    """The table class a Singer face writes for ``target_format``:
-    ``"parquet"`` → ParquetTable (copy-on-write flushes), ``"mor"`` →
-    ManifestTable (merge-on-read flushes, see :func:`_write_segment`)."""
-    if target_format == "parquet":
-        from pipelinewise_spark.operators.table import ParquetTable
-
-        return ParquetTable
-    if target_format == "mor":
-        from pipelinewise_spark.operators.manifest_table import ManifestTable
-
-        return ManifestTable
-    raise ValueError(
-        f"unknown target_format {target_format!r} — "
-        "expected 'parquet' or 'mor'"
-    )
-
-
-def _is_mor(table) -> bool:
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
-    return isinstance(table, ManifestTable)
-
-
 def _write_segment(
     spark,
     table,
@@ -422,6 +401,7 @@ def _write_segment(
     version_suffix: str | None = None,
     guard_col: str | None = None,
     activate: int | None = None,
+    merge_on_read: bool = False,
 ) -> None:
     """Land one segment — the single write path of every Singer face,
     the reference's ``load_file`` (MERGE with ``key_properties``, COPY
@@ -429,7 +409,7 @@ def _write_segment(
     PK-deduped when ``pks`` is set.
 
     - A missing table is created from the batch.
-    - On a MOR table whose live schema the batch matches: a
+    - With ``merge_on_read``, when the batch matches the live schema: a
       merge-on-read delta with PKs; without, an append of the rows whose
       ``guard_col`` is not in the table yet (a window-pruned anti-join;
       nothing new, no commit). Then the ``activate`` purge.
@@ -444,7 +424,7 @@ def _write_segment(
     if not table.exists():
         table.overwrite(batch)
         return
-    aligned = _mor_aligned(spark, table, batch) if _is_mor(table) else None
+    aligned = _mor_aligned(spark, table, batch) if merge_on_read else None
     if aligned is not None:
         if pks:
             table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
@@ -463,7 +443,7 @@ def _write_segment(
             if fresh.limit(1).count() > 0:
                 table.append(fresh)
         if activate is not None:
-            _purge_older_versions(spark, table, activate)
+            _purge_older_versions(spark, table, activate, merge_on_read)
         return
     target = _evolved_target(spark, table, batch, pks, version_suffix)
     if pks:
@@ -479,13 +459,15 @@ def _write_segment(
     table.overwrite(merged)
 
 
-def _purge_older_versions(spark, table, version: int) -> None:
+def _purge_older_versions(
+    spark, table, version: int, merge_on_read: bool
+) -> None:
     """ACTIVATE_VERSION on a landed table: rows of older versions leave
-    it — an answer-sized ``delete_where`` on a MOR table, a copy-on-write
-    rewrite otherwise."""
+    it — an answer-sized ``delete_where`` under ``merge_on_read``, a
+    copy-on-write rewrite otherwise."""
     if not table.exists():
         return
-    if _is_mor(table):
+    if merge_on_read:
         v = F.col(SDC_TABLE_VERSION)
         table.delete_where(spark, v.isNotNull() & (v < version))
     else:
@@ -512,9 +494,9 @@ def load_capture(
     float_compat: bool = False,
     primary_key_required: bool = True,
     version_suffix: str | None = None,
-    target_format: str = "parquet",
-) -> dict[str, Any]:
-    """BULK one-pass load of a capture into ParquetTables under
+    merge_strategy: str | None = None,
+) -> dict[str, ManifestTable]:
+    """BULK one-pass load of a capture into ManifestTables under
     ``target_root/<stream>``: per stream, records parse distributed,
     the last ACTIVATE_VERSION filters older versions, PK last-wins by
     capture position, and the result MERGEs into (or creates) the
@@ -522,7 +504,7 @@ def load_capture(
     capture is read and numbered once: one cached lines frame feeds the
     control-plane scan and every stream, and is released on every exit.
 
-    Returns {stream: ParquetTable}. Captures with a mid-stream schema
+    Returns {stream: ManifestTable}. Captures with a mid-stream schema
     change load under the LAST schema (merge_upsert aligns columns);
     use :func:`replay_capture` when per-epoch schema fidelity matters.
     A PRE-EXISTING table whose column type the capture's schema changed
@@ -531,17 +513,18 @@ def load_capture(
     added — db_sync.py:849-870); ``version_suffix`` pins the rename
     suffix (default: the UTC load time, the reference's behavior).
 
-    ``target_format="mor"`` targets ManifestTables: an incremental
-    load into a PRE-EXISTING table lands as a merge-on-read delta
-    (superseded rows deletion-vectored, the batch appended as new
-    files — O(batch) writes into a large table) and the AV purge is an
-    answer-sized ``delete_where``; schema drift falls back to one
-    copy-on-write evolution rewrite, exactly like the replay and
-    tail-follow faces.
+    ``merge_strategy`` is CDC's copy-on-write / merge-on-read switch:
+    the default (``None``) rewrites the table copy-on-write; with
+    ``"merge_on_read"`` an incremental load into a PRE-EXISTING table
+    lands as a merge-on-read delta (superseded rows deletion-vectored,
+    the batch appended as new files — O(batch) writes into a large
+    table) and the AV purge is an answer-sized ``delete_where``; schema
+    drift falls back to one copy-on-write evolution rewrite, exactly
+    like the replay and tail-follow faces.
     """
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    table_cls = _table_class(target_format)
+    mor = is_merge_on_read(merge_strategy, "load_capture")
     # one cached read of the capture serves the control plane and every
     # stream's records
     lines = _cached_lines(spark, path)
@@ -572,13 +555,13 @@ def load_capture(
             batch = (
                 _last_wins(recs, pks) if pks else recs
             ).drop("lineno")
-            out[stream] = table_cls(f"{target_root}/{stream}")
+            out[stream] = ManifestTable(f"{target_root}/{stream}")
             # the whole capture is one ordered, last-wins batch (no guard
             # needed); the activation also purges older-version rows the
             # table already holds from earlier captures
             _write_segment(
                 spark, out[stream], batch, pks, version_suffix,
-                activate=activations.get(stream),
+                activate=activations.get(stream), merge_on_read=mor,
             )
     finally:
         lines.unpersist()
@@ -588,7 +571,7 @@ def load_capture(
 
 @dataclass
 class ReplayResult:
-    tables: dict[str, Any]
+    tables: dict[str, ManifestTable]
     state: dict | None                 # the final flushed_state
     emitted_states: list[dict | None]  # one per emit, in order
     n_flushes: int
@@ -755,7 +738,7 @@ def replay_capture(
     max_records: int | None = 5_000_000,
     version_suffix: str | None = None,
     chunk_lines: int = 2_000_000,
-    target_format: str = "parquet",
+    merge_strategy: str | None = None,
 ) -> ReplayResult:
     """Faithful ``persist_lines`` replay (reference
     target_snowflake/__init__.py:122-416):
@@ -807,21 +790,24 @@ def replay_capture(
     slow — use :func:`load_capture` for those, or pass
     ``max_records=None`` to lift the refusal (memory stays bounded by
     the chunking either way).
+
+    ``merge_strategy`` chooses how each flush lands, as in
+    :func:`load_capture`.
     """
     from pyspark import StorageLevel
 
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    table_cls = _table_class(target_format)
+    mor = is_merge_on_read(merge_strategy, "replay_capture")
 
-    def _table(stream: str):
+    def _table(stream: str) -> ManifestTable:
         if stream not in tables:
-            tables[stream] = table_cls(f"{target_root}/{stream}")
+            tables[stream] = ManifestTable(f"{target_root}/{stream}")
         return tables[stream]
 
     structs: dict[str, T.StructType] = {}
     seen_schema: dict[str, dict] = {}
-    tables: dict[str, Any] = {}
+    tables: dict[str, ManifestTable] = {}
     buffers: dict[str, dict[str, int]] = {}   # stream -> {pk: lineno}
     lo: dict[str, int] = {}                    # stream -> range start
     state: dict | None = None
@@ -869,7 +855,7 @@ def replay_capture(
         # replay is ordered, so an unguarded MOR supersede IS last-wins
         _write_segment(
             spark, _table(stream), batch, plan.key_properties[stream],
-            version_suffix,
+            version_suffix, merge_on_read=mor,
         )
         buffers[stream] = {}
         n_flushes += 1
@@ -949,7 +935,7 @@ def replay_capture(
                 if buffers.get(stream):
                     flush(stream, max(buffers[stream].values()))
                 _purge_older_versions(
-                    spark, _table(stream), int(payload["version"])
+                    spark, _table(stream), int(payload["version"]), mor
                 )
         # EOF: flush every stream with pending rows, then adopt the
         # candidate state wholesale (__init__.py:330-337, 411-413)

@@ -19,11 +19,11 @@ struct with the smallest (ts, id) key, regardless of arrival order), so:
 
 Scale: each micro-batch shuffles BATCH rows into at most |touched bars|
 partials, then joins answer-sized partials against answer-sized state.
-The state table here rewrites per batch via atomic snapshot swap
-(ParquetTable) — bar tables are answer-sized ((keys × periods), not
-event-scale); for bar cardinalities where a full rewrite hurts, the
-ManifestTable pruned MERGE (operators/manifest_table.py:merge) is the
-drop-in upgrade, exactly as the IVM family does.
+The state table here is an unpartitioned ManifestTable rewritten per
+batch copy-on-write — bar tables are answer-sized ((keys × periods), not
+event-scale); for bar cardinalities where a full rewrite hurts, a
+partitioned table's pruned MERGE (operators/manifest_table.py:merge) is
+the drop-in upgrade, exactly as the IVM family does.
 """
 
 from __future__ import annotations

@@ -29,12 +29,12 @@ from pyspark.sql import types as T
 
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
 from pipelinewise_spark.operators.manifest_table import ManifestTable
+from pipelinewise_spark.operators.merge import is_merge_on_read
 from pipelinewise_spark.operators.sdc import (
     SDC_BATCHED_AT,
     SDC_DELETED_AT,
     SDC_EXTRACTED_AT,
 )
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
 
 #: change-event envelope columns (payload columns ride alongside)
@@ -91,7 +91,7 @@ def prepare_change_batch(
 
 
 def apply_change_batch(
-    table: ParquetTable | ManifestTable,
+    table: ManifestTable,
     batch: DataFrame,
     spec: StreamSpec,
     prededuped: bool = False,
@@ -99,24 +99,14 @@ def apply_change_batch(
     """Merge one micro-batch of change events into the target table.
 
     ``spec.options["merge_strategy"] == "merge_on_read"`` lands the batch
-    as a merge-on-read delta (ManifestTable only); without the option the
-    table's copy-on-write ``merge`` runs, guarded on the persisted
-    sequence. Any other ``merge_strategy`` raises."""
+    as a merge-on-read delta; without the option the table's
+    copy-on-write ``merge`` runs, guarded on the persisted sequence. Any
+    other ``merge_strategy`` raises."""
     spark = batch.sparkSession
+    mor = is_merge_on_read(
+        spec.options.get("merge_strategy"), spec.tap_stream_id
+    )
     prepared = prepare_change_batch(batch, spec, prededuped=prededuped)
-    strategy = spec.options.get("merge_strategy")
-    if strategy not in (None, "merge_on_read"):
-        raise ValueError(
-            f"{spec.tap_stream_id}: unknown merge_strategy {strategy!r} — "
-            "expected 'merge_on_read' (or no merge_strategy for the "
-            "copy-on-write default)"
-        )
-    mor = strategy == "merge_on_read"
-    if mor and not isinstance(table, ManifestTable):
-        raise ValueError(
-            f"{spec.tap_stream_id}: merge_strategy 'merge_on_read' needs a "
-            f"ManifestTable target, got {type(table).__name__}"
-        )
     if not table.exists():
         created = (
             prepared.filter(F.col(SDC_DELETED_AT).isNull())
@@ -156,7 +146,7 @@ def run_cdc_stream(
     events_path: str,
     payload_schema: T.StructType,
     spec: StreamSpec,
-    table: ParquetTable | ManifestTable,
+    table: ManifestTable,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     state=None,
@@ -208,7 +198,10 @@ def run_cdc_stream(
             # state.json never becomes the hot path on a busy stream
             state.update(
                 spec.tap_stream_id,
-                {"last_batch_id": epoch, "version": table.current_snapshot()},
+                {
+                    "last_batch_id": epoch,
+                    "version": table.current_manifest_name(),
+                },
             )
             state.save_throttled()
 
@@ -236,7 +229,7 @@ def run_cdc_stream(
             {
                 "checkpoint": checkpoint_dir,
                 "last_batch_id": progress.get("batchId"),
-                "version": table.current_snapshot(),
+                "version": table.current_manifest_name(),
             },
         )
         state.save()

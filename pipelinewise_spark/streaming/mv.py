@@ -39,9 +39,8 @@ class StreamingRollup:
     """A maintained aggregate over the LIVE rows of a CDC-replicated table.
 
     ``sums`` maps output column -> source column (additive measures; count
-    is always maintained as ``count_col``). The rollup itself lives in any
-    table object with ``exists()/read(spark)/overwrite(df)`` (ParquetTable /
-    ManifestTable) and is published atomically per micro-batch, so readers
+    is always maintained as ``count_col``). The rollup itself lives in a
+    ManifestTable and is published atomically per micro-batch, so readers
     see rollup versions that correspond to target versions.
     """
 
@@ -108,7 +107,7 @@ class StreamingRollup:
             json.dump(
                 {
                     "epoch": epoch,
-                    "mv_version": self.mv_table.current_snapshot(),
+                    "mv_version": self.mv_table.current_manifest_name(),
                 },
                 fh,
             )
@@ -120,7 +119,7 @@ class StreamingRollup:
             return False
         if epoch <= st["epoch"]:
             return True
-        cur = self.mv_table.current_snapshot()
+        cur = self.mv_table.current_manifest_name()
         if st.get("mv_version") is not None and cur != st["mv_version"]:
             # a rollup publish landed without its sidecar update — the
             # crash hit between the two writes, so that publish WAS this

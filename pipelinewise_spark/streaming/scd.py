@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pipelinewise_spark.operators.fsio import MetaFS
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.streaming.bounded import await_bounded
 from pipelinewise_spark.operators.scd import (
     IS_CURRENT,
@@ -39,7 +40,6 @@ from pipelinewise_spark.operators.scd import (
     scd2_init,
 )
 from pipelinewise_spark.operators.sdc import SDC_EXTRACTED_AT
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.session import scoped_conf
 from pipelinewise_spark.streaming.cdc import (
@@ -49,7 +49,7 @@ from pipelinewise_spark.streaming.cdc import (
 
 
 def apply_scd2_batch(
-    current_table: ParquetTable,
+    current_table: ManifestTable,
     closed_dir: str,
     batch: DataFrame,
     spec: StreamSpec,
@@ -163,7 +163,7 @@ def run_scd2_stream(
     events_path: str,
     payload_schema: T.StructType,
     spec: StreamSpec,
-    current_table: ParquetTable,
+    current_table: ManifestTable,
     closed_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,

@@ -51,6 +51,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pipelinewise_spark.operators.manifest_table import ManifestTable
+from pipelinewise_spark.operators.merge import is_merge_on_read
 from pipelinewise_spark.streaming.bounded import await_bounded
 from pipelinewise_spark.sources.singer import (
     _adopt_bookmarks,
@@ -58,7 +60,6 @@ from pipelinewise_spark.sources.singer import (
     _check_schema_first,
     _last_wins,
     _purge_older_versions,
-    _table_class,
     _typed,
     _write_segment,
     capture_summary,
@@ -137,7 +138,7 @@ def apply_capture_batch(
     primary_key_required: bool = True,
     version_suffix: str | None = None,
     max_control_lines: int = 100_000,
-    target_format: str = "parquet",
+    merge_strategy: str | None = None,
 ) -> CaptureStreamState:
     """Apply one micro-batch of capture lines (columns ``value``,
     ``__file``, ``__block``) and return the advanced state. Idempotent:
@@ -146,26 +147,27 @@ def apply_capture_batch(
     sequence, appends anti-join on it, AV purges and sidecar writes are
     naturally re-runnable.
 
-    ``target_format``:
+    Targets are ManifestTables; ``merge_strategy`` is CDC's
+    copy-on-write / merge-on-read switch:
 
-    - ``"parquet"`` (default): each flush MERGEs copy-on-write into a
-      plain ParquetTable — simple files, but per-batch write cost is
-      O(target). Right for bounded runs and small tables.
-    - ``"mor"``: targets are ManifestTables and each flush lands as a
-      merge-on-read delta (superseded rows deletion-vectored, batch
-      appended as new files, ``_sdc_sequence`` as the staleness
-      guard) — per-batch write cost is O(batch) + an answer-sized
-      sidecar, NOT O(target). This is the long-running tail-follow
-      answer: a tap trickling micro-batches into a 100 TB table for
-      months must not rewrite the table per batch. Schema drift
-      (added column / type change) falls back to one copy-on-write
-      evolution rewrite for that segment, then resumes MOR;
-      ACTIVATE_VERSION purges via an answer-sized ``delete_where``;
-      ``compact`` (the ManifestTable lever) converts accumulated read
-      debt back into clean files on whatever cadence ops chooses."""
+    - ``None`` (default): each flush MERGEs copy-on-write — simple
+      files, but per-batch write cost is O(target). Right for bounded
+      runs and small tables.
+    - ``"merge_on_read"``: each flush lands as a merge-on-read delta
+      (superseded rows deletion-vectored, batch appended as new files,
+      ``_sdc_sequence`` as the staleness guard) — per-batch write cost
+      is O(batch) + an answer-sized sidecar, NOT O(target). This is the
+      long-running tail-follow answer: a tap trickling micro-batches
+      into a 100 TB table for months must not rewrite the table per
+      batch. Schema drift (added column / type change) falls back to
+      one copy-on-write evolution rewrite for that segment, then
+      resumes MOR; ACTIVATE_VERSION purges via an answer-sized
+      ``delete_where``; ``compact`` (the ManifestTable lever) converts
+      accumulated read debt back into clean files on whatever cadence
+      ops chooses."""
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
-    table_cls = _table_class(target_format)
+    mor = is_merge_on_read(merge_strategy, "apply_capture_batch")
     # A one-split batch (one capture file under the split size) is
     # numbered in place: one partition satisfies the per-file window
     # and the summary's grouping, so neither shuffles. A larger batch
@@ -217,7 +219,7 @@ def apply_capture_batch(
                 _check_schema_first(groups, [stream], missing="")
             cur_schema = state.schemas.get(stream)
             cur_kp = state.key_properties.get(stream, [])
-            table = table_cls(f"{target_root}/{stream}")
+            table = ManifestTable(f"{target_root}/{stream}")
 
             def flush_segment(i: int, lo: str | None, hi: str | None):
                 g = segments.get((stream, i))
@@ -239,7 +241,7 @@ def apply_capture_batch(
                     seg = _last_wins(seg, cur_kp, order_col=SDC_SEQUENCE)
                 _write_segment(
                     spark, table, seg, cur_kp, version_suffix,
-                    guard_col=SDC_SEQUENCE,
+                    guard_col=SDC_SEQUENCE, merge_on_read=mor,
                 )
 
             lo: str | None = None
@@ -264,7 +266,7 @@ def apply_capture_batch(
                         # resurrect purged versions in later segments
                         continue
                     state.activations[stream] = v_new
-                    _purge_older_versions(spark, table, v_new)
+                    _purge_older_versions(spark, table, v_new, mor)
             flush_segment(len(bounds), lo, None)
             # registry adoption is sequence-guarded (same rule as the
             # bookmark): an out-of-order older file's SCHEMA governs ITS
@@ -304,7 +306,7 @@ def start_capture_stream(
     version_suffix: str | None = None,
     max_control_lines: int = 100_000,
     bookmarks: Any | None = None,
-    target_format: str = "parquet",
+    merge_strategy: str | None = None,
     compact_every: int | None = None,
 ):
     """Start the tail-follow stream over a growing capture directory.
@@ -316,19 +318,22 @@ def start_capture_stream(
     micro-batch (and is how the equivalence tests force multi-batch
     runs). Returns the StreamingQuery.
 
-    ``compact_every=N`` (MOR targets only) runs ManifestTable.compact
-    on every touched stream after every Nth micro-batch — the
-    read-debt lever scheduled inside the tail loop instead of a
-    separate cron: MOR accumulates one small file + deletion vectors
-    per batch, and compaction folds them back into clean files
-    (healthy partitions carry over by reference, so a compaction pass
-    right after a delta batch is near-free). Safe under crash/replay:
-    compaction never changes row content, only file layout."""
+    ``compact_every=N`` (``merge_strategy="merge_on_read"`` only) runs
+    ManifestTable.compact on every touched stream after every Nth
+    micro-batch — the read-debt lever scheduled inside the tail loop
+    instead of a separate cron: MOR accumulates one small file +
+    deletion vectors per batch, and compaction folds them back into
+    clean files (healthy partitions carry over by reference, so a
+    compaction pass right after a delta batch is near-free). Safe under
+    crash/replay: compaction never changes row content, only file
+    layout."""
+    mor = is_merge_on_read(merge_strategy, "start_capture_stream")
     if compact_every is not None:
-        if target_format != "mor":
+        if not mor:
             raise ValueError(
-                "compact_every needs target_format='mor' — parquet "
-                "targets rewrite per batch and never fragment"
+                "compact_every needs merge_strategy='merge_on_read' — "
+                "copy-on-write targets rewrite per batch and never "
+                "fragment"
             )
         if compact_every < 1:
             raise ValueError(
@@ -356,17 +361,13 @@ def start_capture_stream(
             primary_key_required=primary_key_required,
             version_suffix=version_suffix,
             max_control_lines=max_control_lines,
-            target_format=target_format,
+            merge_strategy=merge_strategy,
         )
         state.last_batch = batch_id
         if (
             compact_every is not None
             and batch_id % compact_every == compact_every - 1
         ):
-            from pipelinewise_spark.operators.manifest_table import (
-                ManifestTable,
-            )
-
             for stream in state.schemas:
                 t = ManifestTable(f"{target_root}/{stream}")
                 if t.exists():

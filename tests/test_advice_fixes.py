@@ -12,7 +12,6 @@ from pipelinewise_spark.functions.masking import apply_transformations
 from pipelinewise_spark.functions.masking_sql import masked_select_list
 from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.sync import partial_sync
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.sources.files import read_table
 from pipelinewise_spark.sources.jdbc import sql_literal
@@ -89,7 +88,7 @@ def test_sql_literal_escapes_quotes():
 def test_partial_sync_without_primary_keys(spark, tmp_path):
     """PK-less streams fall back to delete-range-then-append (the range
     resync contract), instead of raising from merge_upsert."""
-    table = ParquetTable(os.path.join(str(tmp_path), "t"))
+    table = ManifestTable(os.path.join(str(tmp_path), "t"))
     spec = StreamSpec(
         tap_stream_id="s", table_name="t", replication_key="k",
         primary_keys=[], add_metadata_columns=False,

@@ -7,7 +7,7 @@ from __future__ import annotations
 import json
 
 from pipelinewise_spark.__main__ import main as cli_main
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 
 
 def test_cli_capture_loop(capsys, spark, tmp_path):
@@ -16,7 +16,7 @@ def test_cli_capture_loop(capsys, spark, tmp_path):
         "id long, name string, amount double",
     )
     src = str(tmp_path / "src")
-    ParquetTable(src).overwrite(df)
+    ManifestTable(src).overwrite(df)
     cap = str(tmp_path / "cap.ndjson")
 
     rc = cli_main([
@@ -30,7 +30,7 @@ def test_cli_capture_loop(capsys, spark, tmp_path):
     rc = cli_main(["import-capture", cap, tgt])
     out = json.loads(capsys.readouterr().out)
     assert rc == 0 and out["streams"] == {"t1": 60}
-    back = ParquetTable(f"{tgt}/t1").read(spark)
+    back = ManifestTable(f"{tgt}/t1").read(spark)
     got = sorted(
         map(tuple, back.select("id", "name", "amount").collect())
     )

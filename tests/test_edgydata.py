@@ -4,7 +4,7 @@ Mirrors /root/reference/tests/db/tap_mysql_data.sql:26-33 (and the PG
 variant tap_postgres_data.sql:16-25): reserved-word table/column names,
 unicode (Thai/CJK), embedded quotes/backslashes/NUL/tabs/newlines, JSON
 edge values, TIME values — pushed through the FULL sync path (full_table
-sync → masking → flattening → ParquetTable snapshot) and read back
+sync → masking → flattening → ManifestTable snapshot) and read back
 byte-identical, including by DuckDB (cross-engine parquet readability,
 the reference's source/target-equivalence assertion style).
 """
@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.sync import full_table_sync
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
 
@@ -55,7 +55,7 @@ def test_edgydata_full_sync_roundtrip(spark, edgy, tmp_path):
     """Reserved-word columns + every edge value survive the atomic
     full-table sync and come back exactly."""
     spec = StreamSpec(tap_stream_id="edgydata", primary_keys=["order"])
-    table = ParquetTable(str(tmp_path / "edgydata"))
+    table = ManifestTable(str(tmp_path / "edgydata"))
     state = BookmarkStore(str(tmp_path / "state.json"))
     rows_in = full_table_sync(
         spark, edgy, spec, table, state,
@@ -81,15 +81,17 @@ def test_edgydata_duckdb_cross_engine_read(spark, edgy, tmp_path):
     """The published snapshot must be readable by a different engine with
     identical values — the interop contract of a lakehouse target."""
     spec = StreamSpec(tap_stream_id="edgydata", primary_keys=["order"])
-    table = ParquetTable(str(tmp_path / "edgydata"))
+    table = ManifestTable(str(tmp_path / "edgydata"))
     full_table_sync(
         spark, edgy, spec, table,
         extracted_at="2026-01-01 00:00:00", batched_at="2026-01-01 00:00:00",
     )
-    snap = table.current_snapshot()
+    files = [
+        os.path.join(table.root, e["path"]) for e in table.select_entries()[0]
+    ]
     rows = duckdb.sql(
         f"""SELECT "order", c_varchar, "group", "case", cjson, c_time
-            FROM '{os.path.join(snap, "*.parquet")}'
+            FROM read_parquet({files!r})
             WHERE "order" IN (1, 2, 3, 7) ORDER BY "order" """
     ).fetchall()
     want = {r[0]: r for r in EDGY_ROWS}

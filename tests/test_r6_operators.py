@@ -240,7 +240,7 @@ def test_stream_curation_dedup_across_batches(spark, sf_dir):
 
 def _jv(spark, tmp_path):
     from pipelinewise_spark.operators.ivm_join import IncrementalJoinView
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
 
     fact = spark.createDataFrame(
         [(1, 10, 100.0), (2, 10, 200.0), (3, 20, 300.0), (4, 99, 400.0)],
@@ -250,7 +250,7 @@ def _jv(spark, tmp_path):
         [(10, "alice"), (20, "bob")], "k long, name string"
     )
     v = IncrementalJoinView(
-        ParquetTable(str(tmp_path / "v")),
+        ManifestTable(str(tmp_path / "v")),
         fact_pk="fk", join_key="k",
         fact_cols=["amount"], dim_cols=["name"],
     )
@@ -434,14 +434,14 @@ def test_ivm_join_fact_delta_plan_broadcasts_dim(spark, tmp_path):
     import io
 
     from pipelinewise_spark.operators.ivm_join import IncrementalJoinView
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
 
     fact = spark.range(1000).selectExpr(
         "id AS fk", "id % 50 AS k", "CAST(id AS DOUBLE) AS amount"
     )
     dim = spark.range(50).selectExpr("id AS k", "CAST(id AS STRING) AS name")
     v = IncrementalJoinView(
-        ParquetTable(str(tmp_path / "vp")), "fk", "k", ["amount"], ["name"]
+        ManifestTable(str(tmp_path / "vp")), "fk", "k", ["amount"], ["name"]
     )
     v.initialize(fact, dim)
     batch = spark.createDataFrame(
@@ -586,6 +586,33 @@ def test_export_split_gzip_roundtrip(spark, sf_dir, tmp_path, capsys):
     )
     out = _json.loads(capsys.readouterr().out)
     assert rc == 0 and out["rows"] == m["rows"] and out["chunks"] <= 2
+
+
+def test_cli_export_of_a_table_root_exports_the_live_rows(spark, tmp_path,
+                                                          capsys):
+    """``export`` on a table root reads the table: after a merge the export
+    holds exactly ``read()``'s rows, never the superseded files the merge
+    left on disk for older readers."""
+    import json as _json
+
+    from pipelinewise_spark.__main__ import main as cli_main
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
+
+    schema = "id long, val string"
+    t = ManifestTable(str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    t.merge(spark, spark.createDataFrame([(2, "B"), (3, "c")], schema),
+            ["id"])
+    dest = str(tmp_path / "exp")
+    assert cli_main(["export", t.root, dest]) == 0
+    out = _json.loads(capsys.readouterr().out)
+    back = spark.read.option("header", "true").csv(dest).select(
+        F.col("id").cast("long"), "val"
+    )
+    live = sorted(tuple(r) for r in t.read(spark).collect())
+    assert live == [(1, "a"), (2, "B"), (3, "c")]
+    assert sorted(tuple(r) for r in back.collect()) == live
+    assert out["rows"] == len(live)
 
 
 def test_contamination_coverage_hand_case(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from pipelinewise_spark.__main__ import main as cli_main
 from pipelinewise_spark.operators.manifest_table import ManifestTable
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.operators.validation import (
     compile_json_schema,
     quarantine_split,
@@ -42,7 +41,7 @@ def _seed(spark, tmp_path, versioned):
     ManifestTable(target).overwrite(valid)
     q = str(tmp_path / "dlq")
     if versioned:
-        ParquetTable(q).overwrite(dlq)
+        ManifestTable(q).overwrite(dlq)
     else:
         dlq.write.mode("overwrite").parquet(q)
     fixed = str(tmp_path / "fixed_schema.json")
@@ -64,7 +63,7 @@ def test_replay_into_versioned_quarantine(capsys, spark, tmp_path):
     assert t.count() == 81 - 1  # 0..79 landed; 150-row still out
     assert t.filter(F.col("value") > 50).count() == 29
     # the quarantine itself was atomically rewritten to the remainder
-    rem = ParquetTable(q).read(spark)
+    rem = ManifestTable(q).read(spark)
     assert rem.count() == 1
     # fully relaxed schema drains it -> exit 0
     drained = str(tmp_path / "relaxed.json")
@@ -123,7 +122,7 @@ def test_replay_preserves_original_payload_for_remainder(
         "_dlq_record string, violations array<string>",
     )
     q = str(tmp_path / "dlq")
-    ParquetTable(q).overwrite(dlq)
+    ManifestTable(q).overwrite(dlq)
     target = str(tmp_path / "tgt")
     ManifestTable(target).overwrite(
         spark.createDataFrame([], "k long, value double")
@@ -139,7 +138,7 @@ def test_replay_preserves_original_payload_for_remainder(
     ])
     capsys.readouterr()
     assert rc == 1
-    remaining = ParquetTable(q).read(spark).collect()
+    remaining = ManifestTable(q).read(spark).collect()
     assert len(remaining) == 1
     assert remaining[0]["_dlq_record"] == orig  # pristine, not degraded
     # second attempt: a genuinely right schema (max 200) drains it

@@ -8,6 +8,7 @@ import os
 import duckdb
 import pyspark.sql.functions as F
 
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.plans.yaml_config import compile_yaml
 from pipelinewise_spark.runner import PipelineRunner
 from pipelinewise_spark.schema.jsonschema import (
@@ -162,16 +163,22 @@ def test_table_for_rejects_unknown_table_format(spark, tmp_path):
     import pytest
     from pipelinewise_spark.plans.spec import PipelineSpec, StreamSpec
 
-    spec = PipelineSpec(
-        pipeline_id="p", target_path=str(tmp_path),
-        streams=[StreamSpec(tap_stream_id="nation",
-                            primary_keys=["n_nationkey"],
-                            options={"table_format": "manifests"})],
-    )
-    runner = PipelineRunner(spark, spec)
-    with pytest.raises(ValueError, match="table_format 'manifests'.*"
-                       "'parquet' or 'manifest'"):
-        runner.table_for(spec.stream("nation"))
+    def table_for(fmt):
+        spec = PipelineSpec(
+            pipeline_id="p", target_path=str(tmp_path),
+            streams=[StreamSpec(tap_stream_id="nation",
+                                primary_keys=["n_nationkey"],
+                                options={"table_format": fmt})],
+        )
+        return PipelineRunner(spark, spec).table_for(spec.stream("nation"))
+
+    # every target is a ManifestTable: 'manifest' is the one accepted
+    # spelling, and the retired 'parquet' layout is rejected like a typo
+    assert type(table_for("manifest")) is ManifestTable
+    for fmt in ("manifests", "parquet"):
+        with pytest.raises(ValueError, match=f"table_format '{fmt}'.*"
+                           "'manifest' is the only accepted value"):
+            table_for(fmt)
 
 
 def test_selected_columns_projection(spark, sf_dir, tmp_path):
@@ -386,6 +393,24 @@ def test_cli_init_validate_run_status_reset(capsys, spark, sf_dir, tmp_path):
     by = {s["stream"]: s for s in st["streams"]}
     assert by["public-orders"]["exists"] and by["public-customer"]["exists"]
     assert by["public-orders"]["bookmark"]["replication_key"] == "o_orderdate"
+    for s in by.values():
+        root = f"{tmp_path}/lake/{s['table']}"
+        assert s["version"] == ManifestTable(root).current_manifest_name()
+        assert s["table_stats"] is None
+
+    # ANALYZE output shows in status, not stale against the live version
+    orders_root = f"{tmp_path}/lake/{by['public-orders']['table']}"
+    assert main(["analyze", orders_root]) == 0
+    capsys.readouterr()
+    assert main(["status", "--config", yml]) == 0
+    st = _json.loads(capsys.readouterr().out)
+    by = {s["stream"]: s for s in st["streams"]}
+    assert by["public-orders"]["table_stats"] == {
+        "rows": n["orders"],
+        "analyzed_version": by["public-orders"]["version"],
+        "stale": False,
+    }
+    assert by["public-customer"]["table_stats"] is None
 
     state_path = f"{tmp_path}/lake/_state.json"
     assert main(["reset-state", state_path, "--stream", "public-orders"]) == 0

@@ -183,7 +183,7 @@ def test_streaming_scd2_epoch_replay_does_not_duplicate(spark, tmp_path):
     must be byte-identical, not doubled."""
     import os
 
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.plans.spec import StreamSpec
     from pipelinewise_spark.streaming.cdc import envelope_schema
     from pipelinewise_spark.streaming.scd import (
@@ -196,7 +196,7 @@ def test_streaming_scd2_epoch_replay_does_not_duplicate(spark, tmp_path):
     spec = StreamSpec(
         tap_stream_id="t", primary_keys=["k"], hard_delete=True
     )
-    current = ParquetTable(os.path.join(str(tmp_path), "cur"))
+    current = ManifestTable(os.path.join(str(tmp_path), "cur"))
     closed = os.path.join(str(tmp_path), "closed")
 
     def ev(rows, ts):
@@ -296,7 +296,7 @@ def test_closed_epoch_marker_is_engine_owned(spark, tmp_path):
     engine's own _COMMITTED file."""
     import os
 
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
     from pipelinewise_spark.plans.spec import StreamSpec
     from pipelinewise_spark.streaming.cdc import envelope_schema
     from pipelinewise_spark.streaming.scd import apply_scd2_batch
@@ -305,7 +305,7 @@ def test_closed_epoch_marker_is_engine_owned(spark, tmp_path):
     payload = T._parse_datatype_string("k long, attr string")
     spec = StreamSpec(tap_stream_id="t", primary_keys=["k"],
                       hard_delete=True)
-    current = ParquetTable(os.path.join(str(tmp_path), "cur"))
+    current = ManifestTable(os.path.join(str(tmp_path), "cur"))
     closed = os.path.join(str(tmp_path), "closed")
     ev = spark.createDataFrame(
         [("c", 1, TS0, 1, "a")], envelope_schema(payload)

@@ -13,7 +13,7 @@ import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.sdc import add_sdc_columns
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.streaming.cdc import run_cdc_stream
 from pipelinewise_spark.streaming.mv import StreamingRollup
@@ -31,7 +31,7 @@ def test_shared_dedupe_lands_expected_rows(spark, tmp_path):
     spec = StreamSpec(
         tap_stream_id="t", primary_keys=["id"], hard_delete=False
     )
-    table = ParquetTable(os.path.join(root, "t"))
+    table = ManifestTable(os.path.join(root, "t"))
     # ids 1..6: odd ids in grp a, even in grp b, val = 10 * id
     base = spark.createDataFrame(
         [(i, "a" if i % 2 else "b", float(10 * i)) for i in range(1, 7)],
@@ -43,7 +43,7 @@ def test_shared_dedupe_lands_expected_rows(spark, tmp_path):
         ).withColumn("_sdc_seq", F.lit(0).cast("long"))
     )
     rollup = StreamingRollup(
-        ParquetTable(os.path.join(root, "mv")), ["grp"], {"total": "val"}
+        ManifestTable(os.path.join(root, "mv")), ["grp"], {"total": "val"}
     )
     rollup.initialize(table.read(spark))
 

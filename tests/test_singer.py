@@ -438,9 +438,9 @@ def test_import_capture_cli_no_pk_required(spark, tmp_path):
     root = str(tmp_path / "tgt")
     rc = cli_main(["import-capture", cap, root, "--no-pk-required"])
     assert rc == 0
-    from pipelinewise_spark.operators.table import ParquetTable
+    from pipelinewise_spark.operators.manifest_table import ManifestTable
 
-    assert ParquetTable(f"{root}/t1").read(spark).count() == 2
+    assert ManifestTable(f"{root}/t1").read(spark).count() == 2
 
 
 def test_replay_type_change_versions_column(spark, tmp_path):
@@ -727,9 +727,11 @@ def test_replay_numbers_the_capture_once(spark, tmp_path, monkeypatch):
     ) == [(1, "x"), (2, "y")]
 
 
-@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+@pytest.mark.parametrize(
+    "merge_strategy", [None, "merge_on_read"], ids=["parquet", "mor"]
+)
 def test_load_capture_reads_the_capture_once(
-    spark, tmp_path, monkeypatch, target_format
+    spark, tmp_path, monkeypatch, merge_strategy
 ):
     """A bulk load reads and numbers the capture once for its control
     plane and every stream, and releases that cache."""
@@ -754,7 +756,7 @@ def test_load_capture_reads_the_capture_once(
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     out = load_capture(
-        spark, cap, str(tmp_path / "tgt"), target_format=target_format
+        spark, cap, str(tmp_path / "tgt"), merge_strategy=merge_strategy
     )
     assert calls == [cap]
     assert persistent().size() == before
@@ -822,8 +824,9 @@ def _replay_rows(res, spark, stream="t1"):
 
 
 def test_replay_mor_equals_parquet_mode(spark, tmp_path):
-    """target_format='mor' replay produces exactly the parquet-mode
-    rows on a flush-heavy capture — storage strategy, not semantics."""
+    """merge_strategy='merge_on_read' replay produces exactly the
+    copy-on-write rows on a flush-heavy capture — storage strategy, not
+    semantics."""
     lines = [_schema()]
     lines += [_rec(i, f"n{i}", float(i)) for i in range(1, 21)]
     lines += [_rec(i, f"u{i}", i + 100.0) for i in range(1, 21, 2)]
@@ -834,7 +837,7 @@ def test_replay_mor_equals_parquet_mode(spark, tmp_path):
     )
     mr = replay_capture(
         spark, cap, str(tmp_path / "mor"), batch_size_rows=6,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     assert mr.n_flushes == pq.n_flushes >= 4
     assert mr.state == pq.state == {"bookmarks": {"t1": {"pos": 9}}}
@@ -852,7 +855,7 @@ def test_replay_mor_does_not_rewrite_earlier_flushes(spark, tmp_path):
     cap = _write(tmp_path, lines)
     res = replay_capture(
         spark, cap, str(tmp_path / "mor"), batch_size_rows=30,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     t = ManifestTable(str(tmp_path / "mor" / "t1"))
     entries, _ = t.select_entries()
@@ -872,7 +875,7 @@ def test_replay_mor_activate_version_purges(spark, tmp_path):
     cap = _write(tmp_path, lines)
     res = replay_capture(
         spark, cap, str(tmp_path / "mor"), batch_size_rows=100,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     assert _replay_rows(res, spark) == {1: ("a2", 10.0)}
 
@@ -892,7 +895,7 @@ def test_replay_mor_type_drift_falls_back_to_cow(spark, tmp_path):
     cap = _write(tmp_path, lines)
     res = replay_capture(
         spark, cap, str(tmp_path / "mor"), batch_size_rows=100,
-        target_format="mor", version_suffix="20240101",
+        merge_strategy="merge_on_read", version_suffix="20240101",
     )
     rows = {
         r["id"]: (r["name"], r["amount"], r["amount_20240101"])
@@ -906,9 +909,9 @@ def test_replay_mor_type_drift_falls_back_to_cow(spark, tmp_path):
 
 def test_replay_mor_rejects_unknown_format(spark, tmp_path):
     cap = _write(tmp_path, [_schema(), _rec(1, "a", 1.0)])
-    with pytest.raises(ValueError, match="target_format"):
+    with pytest.raises(ValueError, match="unknown merge_strategy"):
         replay_capture(
-            spark, cap, str(tmp_path / "t"), target_format="iceberg"
+            spark, cap, str(tmp_path / "t"), merge_strategy="iceberg"
         )
 
 
@@ -942,9 +945,10 @@ def test_replay_microsecond_timestamp_pk_flush_accounting(spark, tmp_path):
 
 
 def test_load_capture_mor_equals_parquet(spark, tmp_path):
-    """Bulk load with target_format='mor': an incremental load into a
-    pre-existing table lands as a MOR delta with identical final rows
-    to the parquet mode — and the earlier load's files survive."""
+    """Bulk load with merge_strategy='merge_on_read': an incremental load
+    into a pre-existing table lands as a MOR delta with identical final
+    rows to the copy-on-write default — and the earlier load's files
+    survive."""
     from pipelinewise_spark.operators.manifest_table import ManifestTable
 
     cap1 = _write(tmp_path, [
@@ -953,16 +957,15 @@ def test_load_capture_mor_equals_parquet(spark, tmp_path):
     cap2 = _write(tmp_path, [
         _schema(), _rec(1, "upd", 99.0), _rec(99, "new", 9.0),
     ], name="cap2.ndjson")
-    for fmt, root in (("parquet", "pq"), ("mor", "mr")):
+    for strategy, root in ((None, "pq"), ("merge_on_read", "mr")):
         load_capture(spark, cap1, str(tmp_path / root),
-                     target_format=fmt)
+                     merge_strategy=strategy)
         load_capture(spark, cap2, str(tmp_path / root),
-                     target_format=fmt)
-    from pipelinewise_spark.operators.table import ParquetTable
+                     merge_strategy=strategy)
 
     pq = {
         r["id"]: (r["name"], r["amount"])
-        for r in ParquetTable(
+        for r in ManifestTable(
             str(tmp_path / "pq" / "t1")).read(spark).collect()
     }
     mr = {
@@ -985,8 +988,9 @@ def test_load_capture_mor_activate_version_purges(spark, tmp_path):
     cap2 = _write(tmp_path, [
         _schema(), _rec(1, "a2", 10.0, version=2), _activate(2),
     ], name="cap2.ndjson")
-    load_capture(spark, cap1, str(tmp_path / "mr"), target_format="mor")
-    load_capture(spark, cap2, str(tmp_path / "mr"), target_format="mor")
+    for cap in (cap1, cap2):
+        load_capture(spark, cap, str(tmp_path / "mr"),
+                     merge_strategy="merge_on_read")
     rows = {
         r["id"]: r["name"]
         for r in ManifestTable(
@@ -995,26 +999,25 @@ def test_load_capture_mor_activate_version_purges(spark, tmp_path):
     assert rows == {1: "a2"}
 
 
-@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+@pytest.mark.parametrize(
+    "merge_strategy", [None, "merge_on_read"], ids=["parquet", "mor"]
+)
 def test_load_capture_no_pk_day2_append_and_activate(
-    spark, tmp_path, target_format
+    spark, tmp_path, merge_strategy
 ):
     """A no-PK stream loaded into an existing table appends the day-2
     rows; a later full-resync capture's ACTIVATE_VERSION removes every
     older-version row already in the table."""
     from pipelinewise_spark.operators.manifest_table import ManifestTable
-    from pipelinewise_spark.operators.table import ParquetTable
 
     def load(name, lines):
         load_capture(
             spark, _write(tmp_path, [_schema(keys=()), *lines], name=name),
             str(tmp_path / "tgt"), primary_key_required=False,
-            target_format=target_format,
+            merge_strategy=merge_strategy,
         )
 
-    table = (ManifestTable if target_format == "mor" else ParquetTable)(
-        str(tmp_path / "tgt" / "t1")
-    )
+    table = ManifestTable(str(tmp_path / "tgt" / "t1"))
 
     def rows():
         return sorted(

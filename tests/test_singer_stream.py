@@ -14,7 +14,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.sources.singer import load_capture
 from pipelinewise_spark.streaming.singer import (
     CaptureStreamState,
@@ -60,7 +60,7 @@ def _capdir(tmp_path, files):
 def _rows(spark, root, stream="t1"):
     return {
         r["id"]: (r["name"], r["amount"])
-        for r in ParquetTable(f"{root}/{stream}").read(spark).collect()
+        for r in ManifestTable(f"{root}/{stream}").read(spark).collect()
     }
 
 
@@ -154,7 +154,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     apply_capture_batch(spark, batch, tgt, st)
     assert _rows(spark, tgt) == before == {1: ("a", 1.0), 2: ("b", 2.0)}
     # no duplicate snapshot rows under the replay
-    n = ParquetTable(f"{tgt}/t1").read(spark).count()
+    n = ManifestTable(f"{tgt}/t1").read(spark).count()
     assert n == 2
 
 
@@ -209,7 +209,7 @@ def test_stream_schema_drift_versions_column(spark, tmp_path):
         spark, capdir, str(tmp_path / "tgt"), str(tmp_path / "ckpt"),
         max_files_per_trigger=1, version_suffix="20240101_0000",
     )
-    out = ParquetTable(str(tmp_path / "tgt" / "t1")).read(spark)
+    out = ManifestTable(str(tmp_path / "tgt" / "t1")).read(spark)
     assert dict(out.dtypes)["amount"] == "string"
     got = {r["id"]: (r["amount_20240101_0000"], r["amount"])
            for r in out.collect()}
@@ -258,14 +258,14 @@ def _append_batch(spark, path):
     )
 
 
-@pytest.mark.parametrize("target_format", ["parquet", "mor"])
-def test_stream_append_only_idempotent(spark, tmp_path, target_format):
+@pytest.mark.parametrize(
+    "merge_strategy", [None, "merge_on_read"], ids=["parquet", "mor"]
+)
+def test_stream_append_only_idempotent(spark, tmp_path, merge_strategy):
     """No-PK streams append with a sequence anti-join: duplicates in
     the DATA stay (two identical records are two rows), a replayed
     batch adds nothing (and, on a MOR target, commits no version), and
     a later batch's new records append."""
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     schema = json.dumps({"type": "SCHEMA", "stream": "t1",
                          "schema": {"type": "object", "properties": PROPS},
                          "key_properties": []})
@@ -275,14 +275,12 @@ def test_stream_append_only_idempotent(spark, tmp_path, target_format):
     f2 = tmp_path / "cap-000002.ndjson"
     f2.write_text("\n".join([_rec(2, "b", 2.0), _rec(3, "c", 3.0)]) + "\n")
     tgt = str(tmp_path / "tgt")
-    table = (ManifestTable if target_format == "mor" else ParquetTable)(
-        f"{tgt}/t1"
-    )
+    table = ManifestTable(f"{tgt}/t1")
 
     def apply(path, st):
         return apply_capture_batch(
             spark, _append_batch(spark, path), tgt, st,
-            primary_key_required=False, target_format=target_format,
+            primary_key_required=False, merge_strategy=merge_strategy,
         )
 
     def rows():
@@ -292,10 +290,10 @@ def test_stream_append_only_idempotent(spark, tmp_path, target_format):
         )
 
     st = apply(f1, CaptureStreamState())
-    versions = table.versions() if target_format == "mor" else None
+    versions = table.versions()
     st = apply(f1, st)
     assert rows() == [(1, "a", 1.0), (1, "a", 1.0)]
-    if target_format == "mor":
+    if merge_strategy == "merge_on_read":
         assert table.versions() == versions
     st = apply(f2, st)
     apply(f2, st)
@@ -366,7 +364,7 @@ def test_write_capture_rotated_feeds_tail_follow(spark, tmp_path):
     assert st.bookmark == {"bookmarks": {"t1": {"pos": 10}}}
     got = {
         r["id"]: (r["name"], r["amount"])
-        for r in ParquetTable(str(tmp_path / "tgt" / "t1"))
+        for r in ManifestTable(str(tmp_path / "tgt" / "t1"))
         .read(spark).collect()
     }
     assert got == {i: (f"n{i}", float(i) + 0.25) for i in range(10)}
@@ -375,19 +373,10 @@ def test_write_capture_rotated_feeds_tail_follow(spark, tmp_path):
 # ---------------------------------------------------------------- MOR
 
 
-def _mor_rows(spark, root, stream="t1"):
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
-    return {
-        r["id"]: (r["name"], r["amount"])
-        for r in ManifestTable(f"{root}/{stream}").read(spark).collect()
-    }
-
-
 def test_stream_mor_equals_parquet_mode(spark, tmp_path):
-    """target_format='mor' produces exactly the rows the copy-on-write
-    parquet mode does on the same capture — merge-on-read is a storage
-    strategy, not a semantics change."""
+    """merge_strategy='merge_on_read' produces exactly the rows the
+    copy-on-write default does on the same capture — merge-on-read is a
+    storage strategy, not a semantics change."""
     files = [
         ("cap-000001.ndjson", [
             _schema(), _rec(1, "a", 1.0), _rec(2, "b", 2.0),
@@ -404,7 +393,7 @@ def test_stream_mor_equals_parquet_mode(spark, tmp_path):
     st = sync_capture_dir(
         spark, capdir, str(tmp_path / "mor_tgt"),
         str(tmp_path / "ckpt_mor"), max_files_per_trigger=1,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     sync_capture_dir(
         spark, capdir, str(tmp_path / "pq_tgt"),
@@ -412,7 +401,7 @@ def test_stream_mor_equals_parquet_mode(spark, tmp_path):
     )
     assert st.last_batch >= 2
     assert (
-        _mor_rows(spark, str(tmp_path / "mor_tgt"))
+        _rows(spark, str(tmp_path / "mor_tgt"))
         == _rows(spark, str(tmp_path / "pq_tgt"))
         == {1: ("a2", 10.0), 2: ("b2", 20.0), 3: ("c", 3.0),
             4: ("d", 4.0)}
@@ -423,8 +412,6 @@ def test_stream_mor_does_not_rewrite_earlier_files(spark, tmp_path):
     """The point of MOR: a later micro-batch deletion-vectors and
     appends — the data files batch 1 wrote are still live manifest
     entries afterwards (no partition rewrite)."""
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     files = [
         ("cap-000001.ndjson", [
             _schema(),
@@ -436,7 +423,7 @@ def test_stream_mor_does_not_rewrite_earlier_files(spark, tmp_path):
     sync_capture_dir(
         spark, capdir, str(tmp_path / "tgt"),
         str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     t = ManifestTable(str(tmp_path / "tgt" / "t1"))
     entries, _ = t.select_entries()
@@ -444,7 +431,7 @@ def test_stream_mor_does_not_rewrite_earlier_files(spark, tmp_path):
     # batch-1 files survive batch 2 (they carry a DV, not a rewrite)
     assert len(entries) >= 2
     assert any(e.get("dv") for e in entries), entries
-    got = _mor_rows(spark, str(tmp_path / "tgt"))
+    got = _rows(spark, str(tmp_path / "tgt"))
     assert got[1] == ("upd", 99.0) and len(got) == 49
 
 
@@ -462,7 +449,7 @@ def test_stream_mor_batch_replay_idempotent(spark, tmp_path):
     ck = str(tmp_path / "ckpt")
     sync_capture_dir(
         spark, capdir, root, ck, max_files_per_trigger=1,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
     # replay the LAST batch's lines by hand against the current state
     batch = spark.createDataFrame(
@@ -470,8 +457,9 @@ def test_stream_mor_batch_replay_idempotent(spark, tmp_path):
         "value string, __file string, __block long",
     )
     st = CaptureStreamState.load(ck)
-    apply_capture_batch(spark, batch, root, st, target_format="mor")
-    got = _mor_rows(spark, root)
+    apply_capture_batch(spark, batch, root, st,
+                        merge_strategy="merge_on_read")
+    got = _rows(spark, root)
     assert got == {1: ("a2", 10.0), 2: ("b", 2.0)}
 
 
@@ -493,9 +481,9 @@ def test_stream_mor_activate_version_purges(spark, tmp_path):
     sync_capture_dir(
         spark, capdir, str(tmp_path / "tgt"),
         str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        target_format="mor",
+        merge_strategy="merge_on_read",
     )
-    got = _mor_rows(spark, str(tmp_path / "tgt"))
+    got = _rows(spark, str(tmp_path / "tgt"))
     assert got == {1: ("a2", 10.0)}  # id=2 (v1 only) purged by the swap
 
 
@@ -521,10 +509,8 @@ def test_stream_mor_schema_drift_falls_back_then_resumes(spark, tmp_path):
     sync_capture_dir(
         spark, capdir, str(tmp_path / "tgt"),
         str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        target_format="mor", version_suffix="20240101",
+        merge_strategy="merge_on_read", version_suffix="20240101",
     )
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     rows = {
         r["id"]: (r["name"], r["amount"], r["amount_20240101"])
         for r in ManifestTable(
@@ -539,7 +525,7 @@ def test_stream_mor_schema_drift_falls_back_then_resumes(spark, tmp_path):
 
 
 def test_stream_mor_rejects_unknown_format(spark, tmp_path):
-    with pytest.raises(ValueError, match="target_format"):
+    with pytest.raises(ValueError, match="unknown merge_strategy"):
         apply_capture_batch(
             spark,
             spark.createDataFrame(
@@ -547,13 +533,13 @@ def test_stream_mor_rejects_unknown_format(spark, tmp_path):
             ),
             str(tmp_path / "t"),
             CaptureStreamState(),
-            target_format="delta",
+            merge_strategy="delta",
         )
 
 
 def test_import_capture_cli_tail_mor(spark, tmp_path, capsys):
-    """--target-format mor on the CLI tail verb: counts come from the
-    ManifestTable and resume works across invocations."""
+    """--merge-strategy merge_on_read on the CLI tail verb: counts come
+    from the ManifestTable and resume works across invocations."""
     from pipelinewise_spark.__main__ import main as cli_main
 
     capdir = _capdir(tmp_path, [
@@ -562,7 +548,7 @@ def test_import_capture_cli_tail_mor(spark, tmp_path, capsys):
     tgt, ck = str(tmp_path / "tgt"), str(tmp_path / "ckpt")
     rc = cli_main(["import-capture", capdir, tgt,
                    "--tail", "--checkpoint", ck,
-                   "--target-format", "mor"])
+                   "--merge-strategy", "merge_on_read"])
     out = json.loads(capsys.readouterr().out)
     assert rc == 0 and out["streams"] == {"t1": 1}
     _capdir(tmp_path, [
@@ -570,10 +556,10 @@ def test_import_capture_cli_tail_mor(spark, tmp_path, capsys):
     ])
     rc = cli_main(["import-capture", capdir, tgt,
                    "--tail", "--checkpoint", ck,
-                   "--target-format", "mor"])
+                   "--merge-strategy", "merge_on_read"])
     out = json.loads(capsys.readouterr().out)
     assert rc == 0 and out["streams"] == {"t1": 2}
-    assert _mor_rows(spark, tgt) == {1: ("a2", 9.0), 2: ("b", 2.0)}
+    assert _rows(spark, tgt) == {1: ("a2", 9.0), 2: ("b", 2.0)}
 
 
 def test_cli_tail_schema_only_stream_counts_zero(spark, tmp_path, capsys):
@@ -631,7 +617,7 @@ def test_stream_late_older_file_cannot_regress_registry(spark, tmp_path):
     # a subsequent record with no SCHEMA line parses under v2
     st = apply_capture_batch(
         spark, batch_of("cap-000003.ndjson", [new_line]), root, st)
-    rows = {r["id"]: r.asDict() for r in ParquetTable(
+    rows = {r["id"]: r.asDict() for r in ManifestTable(
         f"{root}/t1").read(spark).collect()}
     assert rows[7]["extra"] == "kept"
 
@@ -663,7 +649,7 @@ def test_stream_late_older_activate_version_is_subsumed(spark, tmp_path):
                  [_rec(9, "old", 9.0, version=1), av(1)]),
         root, st)
     assert st.activations["t1"] == 2
-    rows = {r["id"] for r in ParquetTable(
+    rows = {r["id"] for r in ManifestTable(
         f"{root}/t1").read(spark).collect()}
     assert rows == {1}, "version-1 stragglers must stay purged"
 
@@ -672,8 +658,6 @@ def test_stream_mor_compact_every(spark, tmp_path):
     """compact_every folds the per-batch MOR files + DVs back into
     clean files inside the tail loop — rows identical, file count
     reduced, checkpoint/resume unaffected."""
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
     files = [
         ("cap-000001.ndjson",
          [_schema()] + [_rec(i, f"n{i}", float(i)) for i in range(1, 40)]),
@@ -684,14 +668,15 @@ def test_stream_mor_compact_every(spark, tmp_path):
     capdir = _capdir(tmp_path, files)
     sync_capture_dir(
         spark, capdir, str(tmp_path / "tgt"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, target_format="mor", compact_every=2,
+        max_files_per_trigger=1, merge_strategy="merge_on_read",
+        compact_every=2,
     )
     t = ManifestTable(str(tmp_path / "tgt" / "t1"))
     entries, _ = t.select_entries()
     # 4 MOR batches would leave >=4 files + DVs; compaction folded them
     assert len(entries) <= 2, [e["path"] for e in entries]
     assert not any(e.get("dv") for e in entries), "DV debt not folded"
-    got = _mor_rows(spark, str(tmp_path / "tgt"))
+    got = _rows(spark, str(tmp_path / "tgt"))
     assert len(got) == 40
     assert got[7] == ("v", 0.25) and got[1] == ("u", 0.5)
     assert got[40] == ("new", 40.0)
@@ -779,7 +764,7 @@ def test_stream_control_line_cap(spark, tmp_path):
         apply_capture_batch(
             spark, batch, tgt, CaptureStreamState(), max_control_lines=2
         )
-    assert not ParquetTable(f"{tgt}/t1").exists()
+    assert not ManifestTable(f"{tgt}/t1").exists()
     st = apply_capture_batch(
         spark, batch, tgt, CaptureStreamState(), max_control_lines=3
     )
@@ -787,15 +772,15 @@ def test_stream_control_line_cap(spark, tmp_path):
     assert st.bookmark == {"bookmarks": {"t1": {"pos": 2}}}
 
 
-@pytest.mark.parametrize("target_format", ["parquet", "mor"])
+@pytest.mark.parametrize(
+    "merge_strategy", [None, "merge_on_read"], ids=["parquet", "mor"]
+)
 def test_stream_segment_predating_activation_lands_nothing(
-    spark, tmp_path, target_format
+    spark, tmp_path, merge_strategy
 ):
     """A segment whose records all predate the ACTIVATE_VERSION in force
     is skipped exactly: no write, so a missing table is not created and
-    a MOR table gains no version; a newer record still lands."""
-    from pipelinewise_spark.operators.manifest_table import ManifestTable
-
+    the table gains no version; a newer record still lands."""
     def _av(stream, version):
         return json.dumps({"type": "ACTIVATE_VERSION", "stream": stream,
                            "version": version})
@@ -812,24 +797,22 @@ def test_stream_segment_predating_activation_lands_nothing(
         ("cap-000003.ndjson", [_rec(3, "c", 3.0, version=2)]),
     ])
     tgt = str(tmp_path / "tgt")
-    table_cls = ManifestTable if target_format == "mor" else ParquetTable
-    t1, t2 = table_cls(f"{tgt}/t1"), table_cls(f"{tgt}/t2")
+    t1, t2 = ManifestTable(f"{tgt}/t1"), ManifestTable(f"{tgt}/t2")
 
     def apply(name, state):
         return apply_capture_batch(
             spark, _append_batch(spark, f"{capdir}/{name}"), tgt, state,
-            target_format=target_format,
+            merge_strategy=merge_strategy,
         )
 
     def rows():
         return {r["id"]: r["name"] for r in t1.read(spark).collect()}
 
     state = apply("cap-000001.ndjson", CaptureStreamState())
-    versions = t1.versions() if target_format == "mor" else None
+    versions = t1.versions()
     state = apply("cap-000002.ndjson", state)
     assert rows() == {1: "a"}
     assert not t2.exists()
-    if target_format == "mor":
-        assert t1.versions() == versions
+    assert t1.versions() == versions
     apply("cap-000003.ndjson", state)
     assert rows() == {1: "a", 3: "c"}

@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from pipelinewise_spark.operators.sdc import add_sdc_columns
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.queries.pipeline import T0, T1
 from pipelinewise_spark.sources.files import read_table
@@ -39,7 +39,7 @@ def test_cdc_hard_delete_and_checkpoint_resume(spark, tmp_path):
     tmp = str(tmp_path)
     spec = StreamSpec(tap_stream_id="t", primary_keys=["o_orderkey"],
                       hard_delete=True)
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     ckpt = os.path.join(tmp, "ckpt")
 
     events_dir = _mk_events(spark, tmp, [
@@ -70,7 +70,7 @@ def test_cdc_multi_batch_file_order(spark, tmp_path):
     """maxFilesPerTrigger=1 → one micro-batch per file, applied in order."""
     tmp = str(tmp_path)
     spec = StreamSpec(tap_stream_id="t", primary_keys=["o_orderkey"])
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     events_dir = _mk_events(spark, tmp, [("c", 1, T0, 1, 10.0)])
     import time
     time.sleep(1.1)  # distinct mtimes → deterministic file order
@@ -90,7 +90,7 @@ def test_cdc_out_of_order_across_batches(spark, tmp_path):
 
     tmp = str(tmp_path)
     spec = StreamSpec(tap_stream_id="t", primary_keys=["o_orderkey"])
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     events_dir = _mk_events(spark, tmp, [
         ("c", 1, T0, 1, 10.0),
         ("u", 5, T1, 1, 50.0),

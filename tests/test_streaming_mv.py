@@ -11,7 +11,7 @@ from decimal import Decimal
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.operators.sdc import add_sdc_columns
-from pipelinewise_spark.operators.table import ParquetTable
+from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.streaming.cdc import apply_change_batch
 from pipelinewise_spark.streaming.mv import StreamingRollup
@@ -32,7 +32,7 @@ def _mv(rollup, spark):
 def test_rollup_tracks_merge_semantics(spark):
     tmp = tempfile.mkdtemp(prefix="pws_mvtest_")
     spec = StreamSpec(tap_stream_id="t", primary_keys=["id"], hard_delete=False)
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     base = spark.createDataFrame(
         [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0)],
         "id long, grp string, val double",
@@ -42,7 +42,7 @@ def test_rollup_tracks_merge_semantics(spark):
         .withColumn("_sdc_seq", F.lit(0).cast("long"))
     )
     rollup = StreamingRollup(
-        ParquetTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
+        ManifestTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
     )
     rollup.initialize(table.read(spark))
     assert _mv(rollup, spark) == {"a": (2, 30.0), "b": (1, 30.0)}
@@ -96,7 +96,7 @@ def test_rollup_replay_is_idempotent_with_epoch(spark):
     and publish-landed-but-sidecar-lost (the non-atomic window)."""
     tmp = tempfile.mkdtemp(prefix="pws_mvreplay_")
     spec = StreamSpec(tap_stream_id="t", primary_keys=["id"], hard_delete=False)
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     base = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "id long, grp string, val double"
     )
@@ -105,7 +105,7 @@ def test_rollup_replay_is_idempotent_with_epoch(spark):
         .withColumn("_sdc_seq", F.lit(0).cast("long"))
     )
     rollup = StreamingRollup(
-        ParquetTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
+        ManifestTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
     )
     rollup.initialize(table.read(spark))
 
@@ -166,7 +166,7 @@ def test_rollup_crash_between_publish_and_merge_end_to_end(
     os.makedirs(events_dir)
     spec = StreamSpec(tap_stream_id="t", primary_keys=["id"],
                       hard_delete=False)
-    table = ParquetTable(os.path.join(tmp, "t"))
+    table = ManifestTable(os.path.join(tmp, "t"))
     base = spark.createDataFrame(
         [(i, "a" if i % 2 else "b", float(10 * i)) for i in range(1, 9)],
         "id long, grp string, val double",
@@ -177,7 +177,7 @@ def test_rollup_crash_between_publish_and_merge_end_to_end(
         .withColumn("_sdc_seq", F.lit(0).cast("long"))
     )
     rollup = StreamingRollup(
-        ParquetTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
+        ManifestTable(os.path.join(tmp, "mv")), ["grp"], {"total": "val"}
     )
     rollup.initialize(table.read(spark))
 

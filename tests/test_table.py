@@ -1,15 +1,18 @@
-"""ParquetTable: atomic publish, readers isolated from in-flight writes,
-vacuum, partition pruning; the ``merge`` contract both table classes
-share."""
+"""ManifestTable, the one table class: atomic publish, readers isolated
+from in-flight writes, vacuum, partition pruning, recorded read schemas,
+the ``merge`` contract, and a static guard that nothing in the package
+dispatches on table class again."""
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import datetime
 import decimal
 import io
 import json
 import os
+import pathlib
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -17,7 +20,6 @@ import pytest
 
 from pipelinewise_spark.operators.manifest_table import ManifestTable
 from pipelinewise_spark.operators.merge import merge_upsert
-from pipelinewise_spark.operators.table import ParquetTable
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.session import scoped_conf
 from pipelinewise_spark.streaming.cdc import apply_change_batch
@@ -25,7 +27,7 @@ from pipelinewise_spark.sources.files import read_table
 
 
 def test_atomic_publish_and_vacuum(spark, sf_dir, tmp_path):
-    t = ParquetTable(os.path.join(str(tmp_path), "nation"))
+    t = ManifestTable(os.path.join(str(tmp_path), "nation"))
     assert not t.exists()
     with pytest.raises(FileNotFoundError):
         t.read(spark)
@@ -34,23 +36,26 @@ def test_atomic_publish_and_vacuum(spark, sf_dir, tmp_path):
     t.overwrite(nation)
     assert t.read(spark).count() == nation.count()
 
-    # readers resolve the OLD snapshot while a new one is built: the version
-    # pointer only moves on publish
-    old_snap = t.current_snapshot()
+    # readers pinned to the OLD manifest keep reading it while a new one
+    # is built: the version pointer only moves on publish
+    old = t.current_manifest_name()
+    old_files = [e["path"] for e in t._load_manifest()["files"]]
     t.overwrite(nation.limit(5))
-    assert t.current_snapshot() != old_snap
+    assert t.current_manifest_name() != old
     assert t.read(spark).count() == 5
-    assert os.path.exists(old_snap)  # still readable by in-flight readers
+    assert ManifestTable(t.root).read(spark, version=1).count() == (
+        nation.count()
+    )
 
     t.overwrite(nation.limit(3))
-    t.vacuum(keep=1)
-    snaps = [d for d in os.listdir(t.root) if d.startswith("snap-")]
-    assert len(snaps) == 1
+    t.vacuum(keep_manifests=1)
+    assert t.versions() == [3]
+    assert not any(os.path.exists(os.path.join(t.root, f)) for f in old_files)
     assert t.read(spark).count() == 3
 
 
 def test_partitioned_snapshot_prunes(spark, sf_dir, tmp_path):
-    t = ParquetTable(os.path.join(str(tmp_path), "orders"))
+    t = ManifestTable(os.path.join(str(tmp_path), "orders"))
     orders = read_table(spark, sf_dir, "orders")
     t.overwrite(orders, partition_by=["o_orderstatus"])
 
@@ -66,47 +71,32 @@ def test_partitioned_snapshot_prunes(spark, sf_dir, tmp_path):
 
 
 def test_schema_cache_matches_inference(spark, sf_dir, tmp_path):
-    """r13: read() serves the cached written schema for unpartitioned
-    snapshots — it must be byte-identical to what footer inference
-    returns (nullable-widened), and a NEW snapshot must never be served
-    a stale cache entry."""
-    t = ParquetTable(os.path.join(str(tmp_path), "orders"))
+    """read() serves the written schema the commit recorded — it must be
+    identical to what footer inference returns (nullable-widened), and
+    a NEW commit must never be served a stale entry."""
+    t = ManifestTable(os.path.join(str(tmp_path), "orders"))
     orders = read_table(spark, sf_dir, "orders").limit(100)
     t.overwrite(orders)
     cached = t.read(spark).schema
-    inferred = spark.read.parquet(t.current_snapshot()).schema
-    assert cached == inferred
+    assert [cached] == list(_inferred_schemas(spark, t).values())
 
-    # second overwrite with a DIFFERENT schema: cache follows the pointer
+    # second overwrite with a DIFFERENT schema: the read follows the pointer
     t.overwrite(orders.withColumn("extra", F.lit(1)))
     assert "extra" in t.read(spark).columns
-    assert t.read(spark).schema == spark.read.parquet(
-        t.current_snapshot()
-    ).schema
+    assert [t.read(spark).schema] == list(
+        _inferred_schemas(spark, t).values()
+    )
 
-    # a FRESH instance (no cache) reads identical data and schema
-    t2 = ParquetTable(t.root)
+    # a FRESH handle (nothing remembered) reads identical data and schema
+    t2 = ManifestTable(t.root)
     assert t2.read(spark).schema == t.read(spark).schema
     assert t2.read(spark).count() == 100
 
 
-def test_schema_cache_partitioned_not_cached(spark, sf_dir, tmp_path):
-    """Partitioned snapshots re-infer (hive layout reorders partition
-    columns and types them from directory names)."""
-    t = ParquetTable(os.path.join(str(tmp_path), "orders_part"))
-    orders = read_table(spark, sf_dir, "orders").limit(100)
-    t.overwrite(orders, partition_by=["o_orderpriority"])
-    # inference puts the partition column last; cached-from-df would not
-    assert t.read(spark).schema == spark.read.parquet(
-        t.current_snapshot()
-    ).schema
-    assert t.read(spark).count() == 100
-
-
 def test_parquet_count_rows_matches_read_count(spark, sf_dir, tmp_path):
-    """Footer-sum ``count_rows`` equals a scan's count after an overwrite,
+    """Metadata ``count_rows`` equals a scan's count after an overwrite,
     a hard-delete merge and a partitioned overwrite."""
-    t = ParquetTable(os.path.join(str(tmp_path), "orders"))
+    t = ManifestTable(os.path.join(str(tmp_path), "orders"))
     with pytest.raises(FileNotFoundError):
         t.count_rows()
     orders = read_table(spark, sf_dir, "orders").withColumn(
@@ -125,6 +115,60 @@ def test_parquet_count_rows_matches_read_count(spark, sf_dir, tmp_path):
 
     t.overwrite(orders, partition_by=["o_orderpriority"])
     assert t.count_rows() == t.read(spark).count() == orders.count()
+
+
+def test_old_snapshot_layout_root_raises_a_clear_error(spark, tmp_path):
+    """A root written by the retired snap-N layout (``_VERSION`` naming a
+    ``snap-N`` directory) fails with a ValueError that says to reload,
+    not with an OSError about reading a directory."""
+    root = tmp_path / "old"
+    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(
+        str(root / "snap-00000001")
+    )
+    (root / "_VERSION").write_text("snap-00000001")
+    t = ManifestTable(str(root))
+    for verb in (lambda: t.read(spark), t.count_rows):
+        with pytest.raises(ValueError, match="snap-N table layout.*"
+                           "fresh FULL_TABLE run"):
+            verb()
+
+
+def _identifiers(node):
+    """The names a node spells: a Name, an attribute, a parameter or
+    keyword, a def/class name or an import alias."""
+    for field in ("id", "attr", "arg", "name", "asname"):
+        value = getattr(node, field, None)
+        if isinstance(value, str):
+            yield value.rsplit(".", 1)[-1]
+
+
+def test_no_dispatch_on_table_class():
+    """Every target is a ManifestTable: outside ``operators/table.py``
+    (the perfbench-facing subclass) the package names no ParquetTable,
+    never asks ``isinstance(..., ManifestTable)``, and has no
+    ``target_format`` switch."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipelinewise_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            names = set(_identifiers(node))
+            if "ParquetTable" in names and rel != "operators/table.py":
+                found.append(f"{rel}:{node.lineno} ParquetTable")
+            if "target_format" in names:
+                found.append(f"{rel}:{node.lineno} target_format")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "isinstance"
+                and len(node.args) == 2
+                and any(
+                    "ManifestTable" in _identifiers(n)
+                    for n in ast.walk(node.args[1])
+                )
+            ):
+                found.append(f"{rel}:{node.lineno} isinstance ManifestTable")
+    assert found == []
 
 
 def _live_bases(t, version=None):
@@ -159,9 +203,7 @@ def _strip_recorded_schemas(root):
     """Make a table look as if written before commits recorded schemas."""
     for name in os.listdir(root):
         path = os.path.join(root, name)
-        if name.startswith("_schema-"):
-            os.remove(path)
-        elif name.startswith("manifest-"):
+        if name.startswith("manifest-"):
             with open(path) as fh:
                 m = json.load(fh)
             m.pop("schemas", None)
@@ -277,13 +319,12 @@ def test_manifest_write_schema_matches_inference(spark, tmp_path, started_jobs):
         ) == got
 
 
-#: kind -> (table factory, whether it has the ManifestTable-only verbs)
+#: kind -> table factory
 _FRESH_READ_TABLES = {
-    "parquet": (ParquetTable, False),
-    "manifest": (ManifestTable, True),
-    "manifest_identity": (lambda root: ManifestTable(root, ["grp"]), True),
-    "manifest_months": (lambda root: ManifestTable(root, ["months(d)"]), True),
-    "manifest_days": (lambda root: ManifestTable(root, ["days(ts)"]), True),
+    "manifest": ManifestTable,
+    "manifest_identity": lambda root: ManifestTable(root, ["grp"]),
+    "manifest_months": lambda root: ManifestTable(root, ["months(d)"]),
+    "manifest_days": lambda root: ManifestTable(root, ["days(ts)"]),
 }
 _FRESH_SCHEMA = "id long, grp string, d date, ts timestamp, val double"
 
@@ -295,7 +336,7 @@ def test_fresh_handle_reads_without_inference(spark, tmp_path, kind,
     after every write verb: the commit recorded the read schema, so no
     footer is inferred (a cold consumer or CLI process reading a table
     the engine wrote)."""
-    make, manifest_verbs = _FRESH_READ_TABLES[kind]
+    make = _FRESH_READ_TABLES[kind]
     root = os.path.join(str(tmp_path), "t")
     day = datetime.date(2026, 1, 1)
     expected = {}
@@ -329,8 +370,6 @@ def test_fresh_handle_reads_without_inference(spark, tmp_path, kind,
     make(root).merge(spark, frame([(1, "a", 0, 10.0), (6, "d", 100, 6.0)]),
                      ["id"])
     check("merge")
-    if not manifest_verbs:
-        return
     make(root).merge_on_read(spark, frame([(2, "a", 0, 20.0)]), ["id"])
     check("merge_on_read")
     make(root).delete_where(spark, "id = 3")
@@ -389,9 +428,8 @@ def test_tables_without_recorded_schemas_read_through_inference(
     spark, tmp_path, started_jobs
 ):
     """A table written before commits recorded read schemas (no manifest
-    map, no schema file beside the snapshot) still reads, live and by
-    time travel, the rows and schema it reads with the record; vacuum
-    removes a snapshot's schema file with the snapshot."""
+    map) still reads, live and by time travel, the rows and schema it
+    reads with the record."""
     schema = "id long, grp string, val double"
     base = [(1, "a", 1.0), (2, "b", 2.0)]
     batch = [(2, "b", 20.0), (3, "c", 3.0)]
@@ -403,36 +441,27 @@ def test_tables_without_recorded_schemas_read_through_inference(
     m = ManifestTable(os.path.join(str(tmp_path), "m"), ["grp"])
     m.overwrite(spark.createDataFrame(base, schema))
     m.merge(spark, spark.createDataFrame(batch, schema), ["id"])
-    p = ParquetTable(os.path.join(str(tmp_path), "p"))
-    p.overwrite(spark.createDataFrame(base, schema))
-    p.merge(spark, spark.createDataFrame(batch, schema), ["id"])
+    u = ManifestTable(os.path.join(str(tmp_path), "u"))
+    u.overwrite(spark.createDataFrame(base, schema))
+    u.merge(spark, spark.createDataFrame(batch, schema), ["id"])
     recorded = {
         "m": ManifestTable(m.root).read(spark).schema,
         "m1": ManifestTable(m.root).read(spark, version=1).schema,
-        "p": ParquetTable(p.root).read(spark).schema,
+        "u": ManifestTable(u.root).read(spark).schema,
     }
-    assert len([n for n in os.listdir(p.root) if n.startswith("_schema-")]) == 2
 
-    for root in (m.root, p.root):
+    for root in (m.root, u.root):
         _strip_recorded_schemas(root)
     for key, make, got in [
         ("m", lambda: ManifestTable(m.root).read(spark), merged),
         ("m1", lambda: ManifestTable(m.root).read(spark, version=1), base),
-        ("p", lambda: ParquetTable(p.root).read(spark), merged),
+        ("u", lambda: ManifestTable(u.root).read(spark), merged),
     ]:
         before = started_jobs()
         df = make()
         assert started_jobs() - before > 0, key  # inferred
         assert df.schema == recorded[key], key
         assert rows(df.select("id", "grp", "val")) == got, key
-
-    p.overwrite(spark.createDataFrame(base, schema))
-    p.overwrite(spark.createDataFrame(merged, schema))
-    p.vacuum(keep=1)
-    assert sorted(
-        n for n in os.listdir(p.root) if n.startswith(("_schema-", "snap-"))
-    ) == ["_schema-snap-00000004.json", "snap-00000004"]
-    assert rows(ParquetTable(p.root).read(spark)) == merged
 
 
 def test_merge_opening_a_partition_reads_no_footer(spark, tmp_path,
@@ -496,7 +525,6 @@ _MERGE_CASES = {
     ),
 }
 _MERGE_TABLES = {
-    "parquet": ParquetTable,
     "manifest": ManifestTable,
     "manifest_partitioned": lambda root: ManifestTable(root, ["grp"]),
 }
@@ -510,7 +538,7 @@ def _merge_rows(df):
 @pytest.mark.parametrize("case", sorted(_MERGE_CASES))
 @pytest.mark.parametrize("kind", sorted(_MERGE_TABLES))
 def test_merge_contract_matches_merge_upsert(spark, tmp_path, kind, case):
-    """Both table classes expose one ``merge`` verb with one contract:
+    """Unpartitioned and partitioned tables share one ``merge`` contract:
     the published table equals ``merge_upsert`` over the same frames."""
     rows, kwargs, live = _MERGE_CASES[case]
     base = spark.createDataFrame(_BASE, _MERGE_SCHEMA)
@@ -521,21 +549,6 @@ def test_merge_contract_matches_merge_upsert(spark, tmp_path, kind, case):
     got = _merge_rows(t.read(spark))
     assert got == _merge_rows(merge_upsert(base, batch, ["id"], **kwargs))
     assert sorted((r[0], r[2]) for r in got if r[3] is None) == live
-
-
-def test_merge_on_read_strategy_needs_manifest_table(spark, tmp_path):
-    spec = StreamSpec(
-        tap_stream_id="t", primary_keys=["id"],
-        options={"merge_strategy": "merge_on_read"},
-    )
-    batch = spark.createDataFrame(
-        [("c", 1, "2026-01-02", 1, 1.0)],
-        "_op string, _seq long, _event_ts string, id long, val double",
-    )
-    t = ParquetTable(os.path.join(str(tmp_path), "t"))
-    with pytest.raises(ValueError, match="merge_strategy"):
-        apply_change_batch(t, batch, spec)
-    assert not t.exists()
 
 
 def test_unknown_merge_strategy_raises(spark, tmp_path):
