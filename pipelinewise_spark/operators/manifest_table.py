@@ -83,7 +83,7 @@ class CommitConflict(RuntimeError):
     retry the operation against the new snapshot. Detection is
     two-layered: manifest names are allocated with create-exclusive
     semantics (racing same-number writers can never overwrite each
-    other), and the expected-parent check re-runs inside a lock-
+    other), and the expected-parent check runs inside a lock-
     serialized critical section immediately before the pointer swap.
     On object stores the exclusive create degrades to probe + PUT; a
     true conditional PUT needs the store's CAS, which the MetaFS seam
@@ -406,23 +406,6 @@ class ManifestTable:
         # Recompute all three for every publish.
         for stale in ("parent", "committed_at", "operation"):
             manifest.pop(stale, None)
-        # parent pointer: snapshot lineage for provenance and the
-        # fast-forward ancestry check (branch heads must descend from
-        # main's current manifest to publish)
-        if expected_parent is not None:
-            live = self.current_manifest_name()
-            want = (
-                None if expected_parent == EXPECT_ABSENT else expected_parent
-            )
-            if live != want:
-                raise CommitConflict(
-                    f"snapshot moved {want} -> {live} during the "
-                    f"{op}; reload and retry"
-                )
-            if want is not None:
-                manifest["parent"] = want
-        # blind publishes get their parent under the commit lock below —
-        # reading it here could chain past a racer's in-flight commit
         # operation provenance: surfaced by meta("snapshots") — which verb
         # produced each snapshot (audit/lineage at manifest scale)
         manifest.setdefault("operation", op)
@@ -437,19 +420,20 @@ class ManifestTable:
                 .replace(tzinfo=None)
                 .isoformat(sep=" ", timespec="microseconds")
             )
-        # [re-check, allocate, write, swap] is one lock-serialized critical
-        # section: a racer committing after the entry-time expected_parent
-        # check surfaces as CommitConflict BEFORE anything lands on disk
-        # (no orphan manifest from a conflicted attempt), the parent
-        # pointer of a blind publish is read under the same lock (linear
-        # chain even for last-wins publishes), and the create-exclusive
+        # [check, allocate, write, swap] is one lock-serialized critical
+        # section: a racer that moved the table off ``expected_parent``
+        # surfaces as CommitConflict BEFORE anything lands on disk (no
+        # orphan manifest from a conflicted attempt), the parent pointer
+        # (snapshot lineage for provenance and the fast-forward ancestry
+        # check) is read under the same lock (linear chain even for
+        # last-wins publishes), and the create-exclusive
         # manifest write stays as the cross-process safety net against a
         # non-lock-abiding writer (e.g. after a broken stale lock). The
         # pointer write is the commit point — atomic rename locally,
         # atomic PUT on object stores.
         with self._commit_lock() as assert_lock_owned:
+            live = self.current_manifest_name()
             if expected_parent is not None:
-                live = self.current_manifest_name()
                 want = (
                     None
                     if expected_parent == EXPECT_ABSENT
@@ -460,8 +444,7 @@ class ManifestTable:
                         f"snapshot moved {want} -> {live} during "
                         f"the {op}; reload and retry"
                     )
-            if manifest.get("parent") is None:
-                manifest["parent"] = self.current_manifest_name()
+            manifest["parent"] = live
             name = self._next_manifest_name()
             try:
                 self.mfs.write_text_exclusive(
@@ -701,8 +684,16 @@ class ManifestTable:
         return entries
 
     def overwrite(
-        self, df: DataFrame, partition_by: Sequence[str] | None = None
+        self,
+        df: DataFrame,
+        partition_by: Sequence[str] | None = None,
+        expected_parent: str | None = None,
     ) -> str:
+        """Replace the table's contents with ``df``. Without
+        ``expected_parent`` the swap is last-wins (FULL_TABLE's SWAP). A
+        rewrite of rows read from the table passes the manifest name it
+        read, so a commit landing in between raises CommitConflict
+        instead of being dropped."""
         self._enforce(df)
         if partition_by is None:
             # a fresh handle defaults to the LIVE spec (so partition
@@ -728,6 +719,7 @@ class ManifestTable:
                 "files": entries,
             },
             op="overwrite",
+            expected_parent=expected_parent,
         )
 
     def append(self, df: DataFrame) -> str:
@@ -1059,7 +1051,9 @@ class ManifestTable:
         """
         dv_files = sorted({p for e in entries for p in e.get("dv", [])})
         with_pos = keep_pos or bool(dv_files)
-        # group by write dir so hive partition cols reconstruct per base
+        # group by write dir so hive partition cols reconstruct per base;
+        # dirs union in commit order (first appearance in the manifest),
+        # so the oldest dir's column order leads, whatever the write ids
         by_base: dict[str, list[str]] = {}
         for e in entries:
             by_base.setdefault(e["base"], []).append(self.mfs.uri(e["path"]))
@@ -1089,7 +1083,7 @@ class ManifestTable:
                     )
             else:
                 dfs = []
-                for base, files in sorted(by_base.items()):
+                for base, files in by_base.items():
                     d = self._scan(spark, base, sorted(files))
                     if with_pos:
                         # row identity = (file, position-in-file): stable
@@ -1176,32 +1170,35 @@ class ManifestTable:
         hard_delete: bool = False,
         guard_col: str | None = None,
     ) -> None:
-        """PK MERGE. Unpartitioned: copy-on-write — the whole table is
-        read, merged with the batch and republished; the count-less PK
-        repartition lets AQE size the rewrite by bytes, so the table lands
-        as few right-sized files per merge instead of shuffle-partition-many
-        tiny ones that every later merge re-lists (the write-shape rule).
+        """PK MERGE, the landing verb of every keyed batch (the
+        reference's MERGE on ``key_properties``).
 
-        Partitioned: only partitions present in the batch are read, merged
-        and rewritten; untouched files carry over by reference. The
-        affected-partition list is driver-side metadata (coarse values,
-        like Delta's replaceWhere) — never row data.
+        A missing table is created from the batch by ``append``, which
+        publishes only while the table is still absent; with
+        ``hard_delete`` the batch's tombstones are dropped first.
+
+        Otherwise only the partitions present in the batch are read,
+        merged (``merge_upsert``) and rewritten; untouched files carry
+        over by reference. The affected-partition list is driver-side
+        metadata (coarse values, like Delta's replaceWhere) — never row
+        data. An unpartitioned table is the case with no partition keys:
+        its one partition is the whole table, rewritten copy-on-write as
+        the join writes it. The rewrite publishes against the manifest it
+        read, so a commit landing in between raises CommitConflict (for
+        ``commit_with_retries``) instead of being dropped.
         """
         from pipelinewise_spark.operators.merge import merge_upsert
+        from pipelinewise_spark.operators.sdc import SDC_DELETED_AT
 
         base = self.current_manifest_name()
+        if base is None:
+            if hard_delete and SDC_DELETED_AT in batch.columns:
+                batch = batch.filter(F.col(SDC_DELETED_AT).isNull())
+            self.append(batch)
+            return
         m = self._load_manifest()
         self._enforce(batch, m.get("constraints", {}))
         partition_by = m["partition_by"]
-        if not partition_by:
-            merged = merge_upsert(
-                self.read(spark), batch, primary_keys,
-                hard_delete=hard_delete, guard_col=guard_col,
-            )
-            self.overwrite(
-                merged.repartition(*[F.col(c) for c in primary_keys]), []
-            )
-            return
 
         # hive partition dirs stringify values; match on the string form.
         # Hidden-transform fields compute their derived dir value for the
@@ -1221,12 +1218,19 @@ class ManifestTable:
                 f_.key,
                 f_.expr() if f_.hidden else F.col(f_.key).cast("string"),
             )
-        batch_parts = batch_str.select(*keys).distinct().collect()
         # exact value-TUPLE pruning: with a composite spec, per-column sets
         # would also read every cross-combination of the batch's values
         # (correct but over-wide); manifest values are decoded so logical
-        # equality holds for escaped chars and NULLs alike
-        affected_rows = [{k: r[k] for k in keys} for r in batch_parts]
+        # equality holds for escaped chars and NULLs alike. No keys: the
+        # one empty tuple, which every entry matches, with no Spark job.
+        affected_rows = (
+            [
+                {k: r[k] for k in keys}
+                for r in batch_str.select(*keys).distinct().collect()
+            ]
+            if keys
+            else [{}]
+        )
         target_slice = self.read(spark, partition_rows=affected_rows)
         for f_ in fields:
             if not f_.hidden:

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from pipelinewise_spark.functions.masking import apply_transformations
 from pipelinewise_spark.operators.dedupe import last_wins_dedupe
 from pipelinewise_spark.operators.manifest_table import ManifestTable
-from pipelinewise_spark.operators.merge import append_only, merge_upsert
 from pipelinewise_spark.operators.sdc import add_sdc_columns
 from pipelinewise_spark.plans.spec import StreamSpec
 from pipelinewise_spark.plans.state import BookmarkStore
@@ -120,12 +119,11 @@ def incremental_sync(
     # would advance the bookmark past data never loaded).
     batch = batch.persist()
     try:
-        if not table.exists():
-            table.overwrite(batch)
-        elif spec.primary_keys:
+        if spec.primary_keys:
             # a partitioned target merges only the partitions the batch
             # touches — a 0.1 % batch must NOT rewrite 100 % of a 100 TB
-            # table; an unpartitioned one rewrites itself copy-on-write
+            # table; an unpartitioned one rewrites itself copy-on-write.
+            # A missing target is created from the batch.
             table.merge(
                 spark, batch, spec.primary_keys, hard_delete=spec.hard_delete
             )
@@ -159,9 +157,16 @@ def partial_sync(
     extracted_at=None,
     batched_at=None,
 ) -> DataFrame:
-    """Range resync: MERGE rows with start <= key [<= end] into the target;
-    with ``spec.hard_delete`` also drop target rows in-range that vanished
-    from the source (reference partial-sync hard-delete-in-range)."""
+    """Range resync of rows with start <= key [<= end].
+
+    With primary keys and no ``spec.hard_delete`` the rows MERGE into the
+    target (``ManifestTable.merge``, which creates a missing one).
+    Otherwise target rows in the range disappear unless the batch
+    re-asserts them (reference partial-sync hard-delete-in-range); a
+    PK-less stream keeps the same range-resync contract, without
+    tombstone semantics. That range replace appends to a missing target
+    and otherwise rewrites the table against the manifest it read, so a
+    commit landing in between raises CommitConflict."""
     key = spec.replication_key
     if not key:
         raise ValueError(f"{spec.tap_stream_id}: partial sync needs replication_key")
@@ -172,18 +177,15 @@ def partial_sync(
     batch = prepare_batch(source_df.filter(in_range), spec,
                           extracted_at=extracted_at, batched_at=batched_at)
 
-    if not table.exists():
-        table.overwrite(batch)
-        return table.read(spark)
-
-    target = table.read(spark)
     if spec.primary_keys and not spec.hard_delete:
-        merged = merge_upsert(target, batch, spec.primary_keys)
+        table.merge(spark, batch, spec.primary_keys)
+    elif not table.exists():
+        table.append(batch)
     else:
-        # hard_delete: rows inside the range disappear unless re-asserted
-        # by the batch. A PK-less stream keeps the range-resync contract
-        # the same way — replace the range wholesale (delete-range-then-
-        # append), without tombstone semantics.
-        merged = append_only(target.filter(~in_range), batch)
-    table.overwrite(merged)
+        base = table.current_manifest_name()
+        kept = table.read(spark).filter(~in_range)
+        table.overwrite(
+            kept.unionByName(batch, allowMissingColumns=True),
+            expected_parent=base,
+        )
     return table.read(spark)

@@ -25,7 +25,7 @@ Two entry points, one contract:
 
 - :func:`load_capture` — the SCALE path: one distributed pass per
   stream (PK last-wins by capture position, version filter, MERGE or
-  overwrite). Message ORDER inside the capture only matters up to the
+  append). Message ORDER inside the capture only matters up to the
   per-PK winner, which the lineno window decides — nothing iterates
   the capture on the driver except the metadata-scale control plane
   (SCHEMA/STATE/ACTIVATE_VERSION lines).
@@ -338,29 +338,33 @@ def _apply_activate(df: DataFrame, version: int) -> DataFrame:
     return df.filter(v.isNull() | (v >= F.lit(int(version))))
 
 
-def _evolved_target(
+def _version_columns(
     spark,
     table,
     batch: DataFrame,
     pks: list[str],
     version_suffix: str | None,
-) -> DataFrame:
-    """The existing table's contents, evolved for an incompatible
-    column TYPE change in the incoming batch — the reference's
-    ``version_column`` (target_snowflake/db_sync.py:849-870): the old
-    column renames to ``<name>_<suffix>`` (data retained) and a fresh
-    NULL column of the new type takes its place, exactly what a
-    re-emitted SCHEMA from wal2json/binlog schema refresh triggers
-    (tap_postgres logical_replication.py:437-453). Add-column drift
-    needs no action here — merge_upsert's union-of-columns NULL-fill
-    already is the reference's ``add_column``. A type change on a
-    primary-key column is refused: versioning the PK would break the
-    merge identity (the reference's MERGE would equally never match)."""
+) -> None:
+    """Evolve the existing table for an incompatible column TYPE change
+    in the incoming batch — the reference's ``version_column``
+    (target_snowflake/db_sync.py:849-870): the old column renames to
+    ``<name>_<suffix>`` (data retained) and a fresh NULL column of the
+    new type takes its place, exactly what a re-emitted SCHEMA from
+    wal2json/binlog schema refresh triggers (tap_postgres
+    logical_replication.py:437-453). The evolution lands as its own
+    commit, a rewrite published against the manifest it read (a racing
+    commit raises CommitConflict); no type change, no commit. Add-column
+    drift needs no action here — the merge's union-of-columns NULL-fill
+    and the append's union-by-name read already are the reference's
+    ``add_column``. A type change on a primary-key column is refused:
+    versioning the PK would break the merge identity (the reference's
+    MERGE would equally never match)."""
     from pipelinewise_spark.operators.schema_evolution import (
         apply_evolution,
         plan_evolution,
     )
 
+    base = table.current_manifest_name()
     target = table.read(spark)
     actions = [
         a
@@ -368,7 +372,7 @@ def _evolved_target(
         if a.kind == "version_column"
     ]
     if not actions:
-        return target
+        return
     bad = [a.column for a in actions if a.column in pks]
     if bad:
         raise ValueError(
@@ -376,15 +380,17 @@ def _evolved_target(
             "a PK cannot be versioned (the merge identity would break); "
             "resync the stream into a fresh table instead"
         )
-    return apply_evolution(target, batch.schema, actions)
+    table.overwrite(
+        apply_evolution(target, batch.schema, actions), expected_parent=base
+    )
 
 
 def _mor_aligned(spark, table, batch: DataFrame) -> DataFrame | None:
     """merge_on_read appends the batch VERBATIM, so the fast path needs
     the live schema (name→type). Returns the batch with columns
     reordered to the live layout, or None on any drift — callers fall
-    back to the copy-on-write evolution rewrite, after which the
-    schemas match again."""
+    back to the copy-on-write ``merge``, after which the schemas match
+    again."""
     live = table.read(spark).schema
     if {f.name: f.dataType for f in live} != {
         f.name: f.dataType for f in batch.schema.fields
@@ -406,72 +412,55 @@ def _write_segment(
     """Land one segment — the single write path of every Singer face,
     the reference's ``load_file`` (MERGE with ``key_properties``, COPY
     without; target_snowflake/db_sync.py:449-547). ``batch`` is already
-    PK-deduped when ``pks`` is set.
+    PK-deduped when ``pks`` is set. One flow for both strategies:
 
-    - A missing table is created from the batch.
-    - With ``merge_on_read``, when the batch matches the live schema: a
-      merge-on-read delta with PKs; without, an append of the rows whose
-      ``guard_col`` is not in the table yet (a window-pruned anti-join;
-      nothing new, no commit). Then the ``activate`` purge.
-    - Otherwise one copy-on-write rewrite of the ``version_column``-
-      evolved target: MERGE (PKs) or append of the unseen rows, the
-      ``activate`` filter folded in, a single overwrite.
+    - A ``version_column`` type change lands first, as its own commit.
+    - With PKs: a merge-on-read delta when ``merge_on_read`` is set and
+      the batch matches the live schema, the table's copy-on-write
+      ``merge`` otherwise (which also creates a missing table).
+    - Without PKs: an append of the rows whose ``guard_col`` is not in
+      the table yet (a window-pruned anti-join; nothing new, no commit).
+    - Then the ``activate`` purge, a deletion-vector ``delete_where``.
 
     ``guard_col`` is the replay guard of every path: the MERGE's
     staleness guard, the append's anti-join key."""
-    from pipelinewise_spark.operators.merge import append_only, merge_upsert
-
-    if not table.exists():
-        table.overwrite(batch)
-        return
-    aligned = _mor_aligned(spark, table, batch) if merge_on_read else None
-    if aligned is not None:
-        if pks:
-            table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
-        elif guard_col is None:
-            table.append(aligned)
-        else:
-            # footer stats prune the scan to files overlapping the
-            # batch's own guard window
-            lo, hi = aligned.agg(F.min(guard_col), F.max(guard_col)).first()
-            seen = (
-                table.read(spark)
-                .select(guard_col)
-                .filter(F.col(guard_col).between(lo, hi))
-            )
-            fresh = aligned.join(seen, guard_col, "left_anti")
-            if fresh.limit(1).count() > 0:
-                table.append(fresh)
-        if activate is not None:
-            _purge_older_versions(spark, table, activate, merge_on_read)
-        return
-    target = _evolved_target(spark, table, batch, pks, version_suffix)
+    exists = table.exists()
+    if exists:
+        _version_columns(spark, table, batch, pks, version_suffix)
     if pks:
-        merged = merge_upsert(target, batch, pks, guard_col=guard_col)
+        aligned = (
+            _mor_aligned(spark, table, batch)
+            if merge_on_read and exists
+            else None
+        )
+        if aligned is not None:
+            table.merge_on_read(spark, aligned, pks, guard_col=guard_col)
+        else:
+            table.merge(spark, batch, pks, guard_col=guard_col)
+    elif not exists or guard_col is None:
+        table.append(batch)
     else:
-        if guard_col is not None:
-            batch = batch.join(
-                target.select(guard_col), guard_col, "left_anti"
-            )
-        merged = append_only(target, batch)
+        # footer stats prune the scan to files overlapping the batch's
+        # own guard window
+        lo, hi = batch.agg(F.min(guard_col), F.max(guard_col)).first()
+        seen = (
+            table.read(spark)
+            .select(guard_col)
+            .filter(F.col(guard_col).between(lo, hi))
+        )
+        fresh = batch.join(seen, guard_col, "left_anti")
+        if fresh.limit(1).count() > 0:
+            table.append(fresh)
     if activate is not None:
-        merged = _apply_activate(merged, activate)
-    table.overwrite(merged)
+        _purge_older_versions(spark, table, activate)
 
 
-def _purge_older_versions(
-    spark, table, version: int, merge_on_read: bool
-) -> None:
+def _purge_older_versions(spark, table, version: int) -> None:
     """ACTIVATE_VERSION on a landed table: rows of older versions leave
-    it — an answer-sized ``delete_where`` under ``merge_on_read``, a
-    copy-on-write rewrite otherwise."""
-    if not table.exists():
-        return
-    if merge_on_read:
+    it through an answer-sized ``delete_where``."""
+    if table.exists():
         v = F.col(SDC_TABLE_VERSION)
         table.delete_where(spark, v.isNotNull() & (v < version))
-    else:
-        table.overwrite(_apply_activate(table.read(spark), version))
 
 
 def _adopt_bookmarks(
@@ -514,13 +503,14 @@ def load_capture(
     suffix (default: the UTC load time, the reference's behavior).
 
     ``merge_strategy`` is CDC's copy-on-write / merge-on-read switch:
-    the default (``None``) rewrites the table copy-on-write; with
+    the default (``None``) MERGEs copy-on-write; with
     ``"merge_on_read"`` an incremental load into a PRE-EXISTING table
     lands as a merge-on-read delta (superseded rows deletion-vectored,
     the batch appended as new files — O(batch) writes into a large
-    table) and the AV purge is an answer-sized ``delete_where``; schema
-    drift falls back to one copy-on-write evolution rewrite, exactly
-    like the replay and tail-follow faces.
+    table), and schema drift falls back to the copy-on-write MERGE,
+    exactly like the replay and tail-follow faces. Either way PK-less
+    streams append and the AV purge is an answer-sized
+    ``delete_where``.
     """
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
@@ -935,7 +925,7 @@ def replay_capture(
                 if buffers.get(stream):
                     flush(stream, max(buffers[stream].values()))
                 _purge_older_versions(
-                    spark, _table(stream), int(payload["version"]), mor
+                    spark, _table(stream), int(payload["version"])
                 )
         # EOF: flush every stream with pending rows, then adopt the
         # candidate state wholesale (__init__.py:330-337, 411-413)

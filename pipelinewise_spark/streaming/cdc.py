@@ -99,27 +99,17 @@ def apply_change_batch(
     """Merge one micro-batch of change events into the target table.
 
     ``spec.options["merge_strategy"] == "merge_on_read"`` lands the batch
-    as a merge-on-read delta; without the option the table's
-    copy-on-write ``merge`` runs, guarded on the persisted sequence. Any
-    other ``merge_strategy`` raises."""
+    into an existing table as a merge-on-read delta; otherwise, and for
+    the batch that creates the table, the table's ``merge`` runs, guarded
+    on the persisted sequence (a missing table is created from the batch,
+    tombstones dropped under ``hard_delete``). Any other
+    ``merge_strategy`` raises."""
     spark = batch.sparkSession
     mor = is_merge_on_read(
         spec.options.get("merge_strategy"), spec.tap_stream_id
     )
     prepared = prepare_change_batch(batch, spec, prededuped=prededuped)
-    if not table.exists():
-        created = (
-            prepared.filter(F.col(SDC_DELETED_AT).isNull())
-            if spec.hard_delete
-            else prepared
-        )
-        # count-less PK repartition: AQE sizes the shuffle by bytes, so the
-        # PK-sized state lands as few right-sized files instead of
-        # shuffle-partition-many tiny ones (write-shape rule; scd.py twin)
-        table.overwrite(
-            created.repartition(*[F.col(c) for c in spec.primary_keys])
-        )
-    elif mor:
+    if mor and table.exists():
         # Iceberg-v2 path: the micro-batch appends as new files and
         # supersedes old rows by position-delete sidecar — O(batch) write
         # cost even when the batch's keys touch every partition (the

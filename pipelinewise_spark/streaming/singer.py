@@ -160,11 +160,13 @@ def apply_capture_batch(
       long-running tail-follow answer: a tap trickling micro-batches
       into a 100 TB table for months must not rewrite the table per
       batch. Schema drift (added column / type change) falls back to
-      one copy-on-write evolution rewrite for that segment, then
-      resumes MOR; ACTIVATE_VERSION purges via an answer-sized
-      ``delete_where``; ``compact`` (the ManifestTable lever) converts
-      accumulated read debt back into clean files on whatever cadence
-      ops chooses."""
+      the copy-on-write MERGE for that segment, then resumes MOR.
+
+    Under either strategy PK-less streams append, a column type change
+    lands first as its own evolution commit, and ACTIVATE_VERSION purges
+    via an answer-sized ``delete_where``. ``compact`` (the ManifestTable
+    lever) converts accumulated read debt back into clean files on
+    whatever cadence ops chooses."""
     from pipelinewise_spark.schema.jsonschema import json_schema_to_struct
 
     mor = is_merge_on_read(merge_strategy, "apply_capture_batch")
@@ -266,7 +268,7 @@ def apply_capture_batch(
                         # resurrect purged versions in later segments
                         continue
                     state.activations[stream] = v_new
-                    _purge_older_versions(spark, table, v_new, mor)
+                    _purge_older_versions(spark, table, v_new)
             flush_segment(len(bounds), lo, None)
             # registry adoption is sequence-guarded (same rule as the
             # bookmark): an out-of-order older file's SCHEMA governs ITS
@@ -332,8 +334,7 @@ def start_capture_stream(
         if not mor:
             raise ValueError(
                 "compact_every needs merge_strategy='merge_on_read' — "
-                "copy-on-write targets rewrite per batch and never "
-                "fragment"
+                "copy-on-write merges rewrite the table per batch"
             )
         if compact_every < 1:
             raise ValueError(

@@ -1,7 +1,8 @@
 """ManifestTable, the one table class: atomic publish, readers isolated
 from in-flight writes, vacuum, partition pruning, recorded read schemas,
-the ``merge`` contract, and a static guard that nothing in the package
-dispatches on table class again."""
+the ``merge`` contract, and static guards that nothing in the package
+dispatches on table class again and that the replication paths land
+batches only through the table's verbs."""
 
 from __future__ import annotations
 
@@ -169,6 +170,63 @@ def test_no_dispatch_on_table_class():
             ):
                 found.append(f"{rel}:{node.lineno} isinstance ManifestTable")
     assert found == []
+
+
+def test_landing_paths_go_through_table_verbs():
+    """The replication paths land batches only through the table's verbs:
+    ``operators/sync.py``, ``sources/singer.py`` and ``streaming/cdc.py``
+    call neither ``merge_upsert`` nor ``append_only``, and every
+    ``.overwrite(`` in them except FULL_TABLE's last-wins swap passes the
+    ``expected_parent`` it read."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pipelinewise_spark"
+    found = []
+    for rel in ("operators/sync.py", "sources/singer.py", "streaming/cdc.py"):
+        tree = ast.parse((pkg / rel).read_text(), rel)
+        for top in tree.body:
+            owner = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = (
+                    set(_identifiers(node.func))
+                    if isinstance(node.func, (ast.Name, ast.Attribute))
+                    else set()
+                )
+                for banned in sorted({"merge_upsert", "append_only"} & name):
+                    found.append(f"{rel}:{node.lineno} {banned}")
+                if (
+                    "overwrite" in name
+                    and owner != "full_table_sync"
+                    and "expected_parent" not in {k.arg for k in node.keywords}
+                ):
+                    found.append(f"{rel}:{node.lineno} blind overwrite")
+    assert found == []
+
+
+def test_read_unions_write_dirs_in_commit_order(spark, tmp_path, monkeypatch):
+    """Write dirs union in the order the manifest lists them (commit
+    order), not by their random ids: with ids patched so the appended
+    dir sorts first, the first dir's columns still lead."""
+    import itertools
+    import types
+
+    from pipelinewise_spark.operators import manifest_table
+
+    countdown = itertools.count(0xFFF, -1)
+    monkeypatch.setattr(manifest_table, "uuid", types.SimpleNamespace(
+        uuid4=lambda: types.SimpleNamespace(
+            hex=f"{next(countdown):012x}" + "0" * 20
+        )
+    ))
+    root = os.path.join(str(tmp_path), "t")
+    t = ManifestTable(root)
+    t.overwrite(spark.createDataFrame([(1, "x")], "a long, b string"))
+    t.append(spark.createDataFrame([("y", 2)], "c string, a long"))
+    bases = list(dict.fromkeys(
+        e["base"] for e in t._load_manifest()["files"]
+    ))
+    assert sorted(bases) == bases[::-1]
+    assert ManifestTable(root).read(spark).columns == ["a", "b", "c"]
 
 
 def _live_bases(t, version=None):
