@@ -19,6 +19,17 @@ directory moves, readers pin a manifest and never see partial writes).
 manifest/pointer metadata goes through the MetaFS seam (operators/fsio.py),
 data files through Spark's own Hadoop IO — no local-filesystem assumption
 anywhere in the table machinery.
+
+The commit rule, one for every verb (Iceberg/Delta optimistic commit):
+a verb reads its snapshot ONCE (``_snapshot``: the pointer's manifest
+name and the manifest that name holds) and builds its commit as that
+manifest plus its change, so constraints, retention, ANALYZE stats and
+the recorded schemas are the ones its checks ran against. ``_publish``
+reads nothing but the pointer under the commit lock: the commit lands
+only if the pointer still names the manifest the verb read (or is still
+absent, for a first commit), else it raises :class:`CommitConflict`.
+The one exception is FULL_TABLE's ``overwrite``, a last-wins swap that
+still carries the metadata of the snapshot it enforced against.
 """
 
 from __future__ import annotations
@@ -207,6 +218,23 @@ def parse_partition_spec(partition_by: Sequence[str]) -> list[PartitionField]:
     return fields
 
 
+def _partition_types(
+    schema: T.StructType, partition_by: Sequence[str]
+) -> dict[str, str]:
+    """The logical type of each raw partition column, cast back to on
+    read (derived columns of hidden transforms never surface)."""
+    return {
+        f_.key: schema[f_.source].dataType.simpleString()
+        for f_ in parse_partition_spec(partition_by)
+        if not f_.hidden
+    }
+
+
+def _version_of(name: str) -> int:
+    """Snapshot version number of a ``manifest-NNNNNNNN.json`` name."""
+    return int(name.split("-")[1].split(".")[0])
+
+
 class ManifestTable:
     def __init__(self, root: str, partition_by: Sequence[str] | None = None):
         """``partition_by`` is the default partition spec for writes made
@@ -235,15 +263,20 @@ class ManifestTable:
             return None
         return self.mfs.read_text(self._ref_file).strip() or None
 
-    def _load_manifest(self, version: int | None = None) -> dict[str, Any]:
-        if version is not None:
+    def _load_manifest(
+        self, version: int | str | None = None
+    ) -> dict[str, Any]:
+        """The manifest of snapshot ``version`` — a version number, or a
+        manifest name already read from the pointer — or, with None, of
+        the one the pointer names now."""
+        if version is None:
+            return self._snapshot()[1]
+        if isinstance(version, int):
             name = f"manifest-{version:08d}.json"
             if not self.mfs.exists(name):
                 raise FileNotFoundError(f"no such snapshot version: {version}")
         else:
-            name = self.current_manifest_name()
-            if name is None:
-                raise FileNotFoundError(f"no published manifest: {self.root}")
+            name = version
             if name.startswith("snap-"):
                 raise ValueError(
                     f"{self.root}: {self._ref_file} names {name!r}, a "
@@ -259,9 +292,29 @@ class ManifestTable:
                 )
         return m
 
+    def _snapshot(
+        self, missing_ok: bool = False
+    ) -> tuple[str | None, dict[str, Any]]:
+        """The snapshot a verb builds its commit on, read once: the
+        manifest name the pointer holds and the manifest of that name.
+        A missing table is ``None`` and an empty manifest under this
+        handle's partition spec (``missing_ok``), else FileNotFoundError.
+        The verb publishes against that name (``EXPECT_ABSENT`` for
+        None)."""
+        name = self.current_manifest_name()
+        if name is not None:
+            return name, self._load_manifest(name)
+        if not missing_ok:
+            raise FileNotFoundError(f"no published manifest: {self.root}")
+        return None, {
+            "partition_by": list(self.partition_by),
+            "partition_types": {},
+            "files": [],
+        }
+
     def versions(self) -> list[int]:
         return sorted(
-            int(f.split("-")[1].split(".")[0])
+            _version_of(f)
             for f in self.mfs.listdir()
             if f.startswith("manifest-") and f.endswith(".json")
         )
@@ -356,39 +409,22 @@ class ManifestTable:
     def _publish(
         self,
         manifest: dict[str, Any],
-        op: str = "commit",
+        op: str,
         expected_parent: str | None = None,
     ) -> str:
-        # ANALYZE output persists across data commits (merge/compact/
-        # overwrite) until recomputed — its "version" marker names the
-        # manifest it was computed against, so readers can detect
-        # staleness (same lifecycle as warehouse ANALYZE stats)
-        prior_m = self._load_manifest() if self.exists() else {}
-        if prior_m:
-            if "table_stats" not in manifest:
-                prior = prior_m.get("table_stats")
-                if prior is not None:
-                    manifest["table_stats"] = prior
-            # CHECK constraints and the retention policy are table
-            # metadata: they ride every publish until explicitly changed
-            if "constraints" not in manifest:
-                prior_c = prior_m.get("constraints")
-                if prior_c:
-                    manifest["constraints"] = prior_c
-            if "retention" not in manifest:
-                prior_r = prior_m.get("retention")
-                if prior_r:
-                    manifest["retention"] = prior_r
+        """Commit ``manifest`` — the verb's snapshot plus its change, so
+        table metadata (constraints, retention, ANALYZE stats) rides it
+        as read — if the pointer still names ``expected_parent``."""
+        import datetime
+
         # the read schema of every live write dir rides the commit, so no
         # read of it ever infers from footers. Sources: the dict itself
-        # (clone), the prior commit, and this handle (what it wrote, what
-        # it loaded — rollback — or what it inferred); bases no longer
-        # live drop out, so the map never outgrows the file list.
+        # (the snapshot it was built on, or a clone's source) and this
+        # handle (what it wrote, what it loaded — rollback — or what it
+        # inferred); bases no longer live drop out, so the map never
+        # outgrows the file list.
         live = {e["base"] for e in manifest["files"]}
-        recorded = {
-            **prior_m.get("schemas", {}),
-            **manifest.get("schemas", {}),
-        }
+        recorded = manifest.get("schemas", {})
         manifest["schemas"] = {
             b: recorded[b] if b in recorded else self._schema_by_base[b].json()
             for b in sorted(live)
@@ -398,28 +434,19 @@ class ManifestTable:
             b: s for b, s in self._schema_by_base.items() if b in live
         }
         self.mfs.mkdirs()
-        # Several verbs publish a LOADED manifest dict ({**m, ...}:
-        # constraints, retention, bloom, analyze, clone). Its parent /
-        # committed_at / operation describe the PRIOR commit — keeping
-        # them would corrupt the parent chain (CDF walks, ancestor
-        # checks) and stamp the new commit with the old time/op.
-        # Recompute all three for every publish.
-        for stale in ("parent", "committed_at", "operation"):
-            manifest.pop(stale, None)
-        # operation provenance: surfaced by meta("snapshots") — which verb
-        # produced each snapshot (audit/lineage at manifest scale)
-        manifest.setdefault("operation", op)
-        if "committed_at" not in manifest:
-            import datetime
-
-            # microsecond precision so AS OF TIMESTAMP (version_as_of)
-            # distinguishes rapid successive commits; every consumer
-            # compares stamps lexicographically, which stays correct
-            manifest["committed_at"] = (
-                datetime.datetime.now(datetime.timezone.utc)
-                .replace(tzinfo=None)
-                .isoformat(sep=" ", timespec="microseconds")
-            )
+        # operation / committed_at (and parent, set under the lock) of a
+        # snapshot-built dict describe the PRIOR commit — keeping them
+        # would corrupt the parent chain (CDF walks, ancestor checks) and
+        # stamp the new commit with the old time/op. The operation is
+        # surfaced by meta("snapshots"); the microsecond stamp lets AS OF
+        # TIMESTAMP (version_as_of) tell rapid commits apart, and every
+        # consumer compares stamps lexicographically.
+        manifest["operation"] = op
+        manifest["committed_at"] = (
+            datetime.datetime.now(datetime.timezone.utc)
+            .replace(tzinfo=None)
+            .isoformat(sep=" ", timespec="microseconds")
+        )
         # [check, allocate, write, swap] is one lock-serialized critical
         # section: a racer that moved the table off ``expected_parent``
         # surfaces as CommitConflict BEFORE anything lands on disk (no
@@ -622,6 +649,48 @@ class ManifestTable:
         with ThreadPoolExecutor(max_workers=min(16, len(rels))) as pool:
             return dict(pool.map(one, rels))
 
+    def _file_entries(
+        self, base_rel: str, split_key: str | None = None
+    ) -> list[tuple[Any, dict[str, Any]]]:
+        """Manifest entries for the parquet files under ``base_rel``, in
+        walk order, each paired with the decoded value of its
+        ``split_key`` dir level (None without one). That level is left
+        out of the entry's partition dict, and the entry's basePath is
+        anchored below it so read-time hive discovery never surfaces it
+        as a table column."""
+        rels = [
+            rel
+            for rel in self.mfs.walk_files(base_rel)
+            if rel.endswith(".parquet")
+        ]
+        stats_by_rel = self._stats_for(rels)
+        out = []
+        for rel in rels:
+            partition: dict[str, Any] = {}
+            split_val: Any = None
+            entry_base = base_rel
+            for seg in posixpath.relpath(
+                posixpath.dirname(rel), base_rel
+            ).split("/"):
+                if "=" not in seg:
+                    continue
+                k, v = seg.split("=", 1)
+                if k == split_key:
+                    split_val = _decode_hive_value(v)
+                    entry_base = posixpath.join(base_rel, seg)
+                else:
+                    partition[k] = _decode_hive_value(v)
+            stats, num_rows, n_bytes = stats_by_rel[rel]
+            out.append((split_val, {
+                "path": rel,
+                "base": entry_base,
+                "partition": partition,
+                "stats": stats,
+                "rows": num_rows,
+                "bytes": n_bytes,
+            }))
+        return out
+
     def _write_files(
         self, df: DataFrame, partition_by: Sequence[str]
     ) -> list[dict[str, Any]]:
@@ -639,31 +708,7 @@ class ManifestTable:
         if fields:
             writer = writer.partitionBy(*[f_.key for f_ in fields])
         writer.parquet(self.mfs.uri(base_rel))
-
-        entries: list[dict[str, Any]] = []
-        rels = [
-            rel
-            for rel in self.mfs.walk_files(base_rel)
-            if rel.endswith(".parquet")
-        ]
-        stats_by_rel = self._stats_for(rels)
-        for rel in rels:
-            partition = {}
-            for seg in posixpath.relpath(posixpath.dirname(rel), base_rel).split("/"):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    partition[k] = _decode_hive_value(v)
-            stats, num_rows, n_bytes = stats_by_rel[rel]
-            entries.append(
-                {
-                    "path": rel,
-                    "base": base_rel,
-                    "partition": partition,
-                    "stats": stats,
-                    "rows": num_rows,
-                    "bytes": n_bytes,
-                }
-            )
+        entries = [e for _, e in self._file_entries(base_rel)]
         # the read schema inference returns for the whole dir: the written
         # columns, widened as inference widens them (_as_nullable), then
         # each partition key in spec order, untyped as _read_entries reads
@@ -689,33 +734,32 @@ class ManifestTable:
         partition_by: Sequence[str] | None = None,
         expected_parent: str | None = None,
     ) -> str:
-        """Replace the table's contents with ``df``. Without
-        ``expected_parent`` the swap is last-wins (FULL_TABLE's SWAP). A
-        rewrite of rows read from the table passes the manifest name it
-        read, so a commit landing in between raises CommitConflict
-        instead of being dropped."""
-        self._enforce(df)
-        if partition_by is None:
-            # a fresh handle defaults to the LIVE spec (so partition
-            # evolution sticks across table objects); constructor arg and
-            # explicit parameter both override
-            if self.partition_by:
-                partition_by = self.partition_by
-            elif self.exists():
-                partition_by = self._load_manifest().get("partition_by", [])
-            else:
-                partition_by = []
-        partition_by = list(partition_by)
-        ptypes = {
-            f_.key: df.schema[f_.source].dataType.simpleString()
-            for f_ in parse_partition_spec(partition_by)
-            if not f_.hidden  # derived cols never surface on read
-        }
+        """Replace the table's contents with ``df``, keeping the table's
+        metadata (constraints, retention, ANALYZE stats) as this call read
+        it. Without ``expected_parent`` the swap is last-wins (FULL_TABLE's
+        SWAP): the rows were checked against the constraints read at the
+        start, and those are the constraints the commit carries, so a
+        constraint added while the rows were written is dropped with the
+        snapshot it was added to — no live row ever violates a live
+        constraint. A rewrite of rows read from the table passes the
+        manifest name it read, so a commit landing in between raises
+        CommitConflict instead of being dropped."""
+        _, m = self._snapshot(missing_ok=True)
+        self._enforce(df, m.get("constraints", {}))
+        # a fresh handle defaults to the LIVE spec (so partition evolution
+        # sticks across table objects); constructor arg and explicit
+        # parameter both override
+        partition_by = list(
+            partition_by
+            if partition_by is not None
+            else self.partition_by or m["partition_by"]
+        )
         entries = self._write_files(df, partition_by)
         return self._publish(
             {
+                **m,
                 "partition_by": partition_by,
-                "partition_types": ptypes,
+                "partition_types": _partition_types(df.schema, partition_by),
                 "files": entries,
             },
             op="overwrite",
@@ -730,28 +774,28 @@ class ManifestTable:
         reference. Cost is O(batch) + one publish — no table scan, no
         deletion vectors, the cheapest possible commit. Constraints still
         gate the incoming rows; conflicts retry via expected_parent."""
-        base = self.current_manifest_name()
-        m = (
-            self._load_manifest()
-            if self.exists()
-            else {"partition_by": list(self.partition_by), "files": []}
-        )
+        return self._append(df, *self._snapshot(missing_ok=True))
+
+    def _append(
+        self, df: DataFrame, base: str | None, m: dict[str, Any]
+    ) -> str:
+        """``append`` on the snapshot ``(base, m)`` already read — also
+        ``merge``'s create path, so a table created after the merge read
+        it absent raises CommitConflict instead of taking the batch
+        unmerged."""
         self._enforce(df, m.get("constraints", {}))
         partition_by = m.get("partition_by", [])
-        ptypes = m.get("partition_types") or {
-            f_.key: df.schema[f_.source].dataType.simpleString()
-            for f_ in parse_partition_spec(partition_by)
-            if not f_.hidden
-        }
         entries = self._write_files(df, partition_by)
         return self._publish(
             {
+                **m,
                 "partition_by": partition_by,
-                "partition_types": ptypes,
+                "partition_types": m.get("partition_types")
+                or _partition_types(df.schema, partition_by),
                 "files": m["files"] + entries,
             },
             op="append",
-            expected_parent=base if base is not None else EXPECT_ABSENT,
+            expected_parent=base or EXPECT_ABSENT,
         )
 
     def import_files(
@@ -768,42 +812,8 @@ class ManifestTable:
         manifest names. Reference behavior modeled: archive-to-table
         backfill of FastSync-exported files without a second copy."""
         groups: dict[Any, list[dict[str, Any]]] = {}
-        import_rels = [
-            rel
-            for rel in self.mfs.walk_files(base_rel)
-            if rel.endswith(".parquet")
-        ]
-        import_stats = self._stats_for(import_rels)
-        for rel in import_rels:
-            partition: dict[str, Any] = {}
-            split_val: Any = None
-            entry_base = base_rel
-            for seg in posixpath.relpath(
-                posixpath.dirname(rel), base_rel
-            ).split("/"):
-                if "=" not in seg:
-                    continue
-                kk, vv = seg.split("=", 1)
-                if kk == split_key:
-                    split_val = _decode_hive_value(vv)
-                    # anchor the entry's basePath BELOW the split dir so
-                    # the read-time hive discovery never surfaces the
-                    # split level as a table column
-                    entry_base = posixpath.join(base_rel, seg)
-                else:
-                    partition[kk] = _decode_hive_value(vv)
-            stats, num_rows, n_bytes = import_stats[rel]
-            groups.setdefault(split_val, []).append(
-                {
-                    "path": rel,
-                    "base": entry_base,
-                    "partition": partition,
-                    "stats": stats,
-                    "rows": num_rows,
-                    "bytes": n_bytes,
-                }
-            )
-        published = []
+        for split_val, e in self._file_entries(base_rel, split_key):
+            groups.setdefault(split_val, []).append(e)
 
         def _split_order(v):
             # numeric split values sort numerically ("10" after "9"), so
@@ -816,28 +826,14 @@ class ManifestTable:
             except (TypeError, ValueError):
                 return (1, 0, str(v))
 
+        published = []
         for sv in sorted(groups, key=_split_order):
-            base = self.current_manifest_name()
-            m = (
-                self._load_manifest()
-                if self.exists()
-                else {
-                    "partition_by": list(self.partition_by),
-                    "partition_types": {},
-                    "files": [],
-                }
-            )
+            base, m = self._snapshot(missing_ok=True)
             published.append(
                 self._publish(
-                    {
-                        "partition_by": m.get("partition_by", []),
-                        "partition_types": m.get("partition_types", {}),
-                        "files": m["files"] + groups[sv],
-                    },
+                    {**m, "files": m["files"] + groups[sv]},
                     op="import",
-                    expected_parent=(
-                        base if base is not None else EXPECT_ABSENT
-                    ),
+                    expected_parent=base or EXPECT_ABSENT,
                 )
             )
         return published
@@ -865,6 +861,18 @@ class ManifestTable:
         tighter than ``partitions``' independent per-column sets, which
         would also keep every cross-combination of the listed values."""
         m = self._load_manifest(version)
+        return self._prune(m, partitions, ranges, points, partition_rows), m
+
+    def _prune(
+        self,
+        m: dict[str, Any],
+        partitions: dict[str, list[str]] | None = None,
+        ranges: dict[str, tuple[Any, Any]] | None = None,
+        points: dict[str, Any] | None = None,
+        partition_rows: list[dict[str, Any]] | None = None,
+    ) -> list[dict[str, Any]]:
+        """The entries of manifest ``m`` that survive
+        :meth:`select_entries`' pruning."""
         entries = m["files"]
         if partition_rows is not None:
             keys = sorted({k for r in partition_rows for k in r})
@@ -953,7 +961,7 @@ class ManifestTable:
                 return True
 
             entries = [e for e in entries if bloom_keeps(e)]
-        return entries, m
+        return entries
 
     def version_as_of(self, timestamp: str) -> int:
         """Resolve ``AS OF TIMESTAMP`` to a snapshot version: the newest
@@ -1190,13 +1198,12 @@ class ManifestTable:
         from pipelinewise_spark.operators.merge import merge_upsert
         from pipelinewise_spark.operators.sdc import SDC_DELETED_AT
 
-        base = self.current_manifest_name()
+        base, m = self._snapshot(missing_ok=True)
         if base is None:
             if hard_delete and SDC_DELETED_AT in batch.columns:
                 batch = batch.filter(F.col(SDC_DELETED_AT).isNull())
-            self.append(batch)
+            self._append(batch, base, m)
             return
-        m = self._load_manifest()
         self._enforce(batch, m.get("constraints", {}))
         partition_by = m["partition_by"]
 
@@ -1231,7 +1238,9 @@ class ManifestTable:
             if keys
             else [{}]
         )
-        target_slice = self.read(spark, partition_rows=affected_rows)
+        target_slice = self._read_entries(
+            spark, self._prune(m, partition_rows=affected_rows), m
+        )
         for f_ in fields:
             if not f_.hidden:
                 target_slice = target_slice.withColumn(
@@ -1259,23 +1268,17 @@ class ManifestTable:
             and tuple(e["partition"][k] for k in keys)
             not in affected_tuples
         ]
+        # merged data was written with stringified partition cols, but dir
+        # encodings are identical — the snapshot's logical types still hold
         self._publish(
-            {
-                "partition_by": partition_by,
-                # merged data was written with stringified partition cols, but
-                # dir encodings are identical — keep the original logical types
-                "partition_types": m.get("partition_types", {}),
-                "files": kept + new_entries,
-            },
+            {**m, "files": kept + new_entries},
             op="merge",
             expected_parent=base,
         )
 
     # -------------------------------------------------- CHECK constraints
     def constraints(self) -> dict[str, str]:
-        if not self.exists():
-            return {}
-        return dict(self._load_manifest().get("constraints", {}))
+        return dict(self._snapshot(missing_ok=True)[1].get("constraints", {}))
 
     def add_constraint(
         self, spark: SparkSession, name: str, predicate: str
@@ -1287,27 +1290,24 @@ class ManifestTable:
         (overwrite / merge / merge_on_read) validates incoming rows
         against it, raising :class:`ConstraintViolation` with an example
         row before anything is published."""
-        base = self.current_manifest_name()
-        m = self._load_manifest()
-        self._enforce(self.read(spark), {name: predicate})
-        cons = dict(m.get("constraints", {}))
-        cons[name] = predicate
+        base, m = self._snapshot()
+        self._enforce(
+            self._read_entries(spark, m["files"], m), {name: predicate}
+        )
+        cons = {**m.get("constraints", {}), name: predicate}
         return self._publish(
             {**m, "constraints": cons}, op="constraint", expected_parent=base
         )
 
     def drop_constraint(self, name: str) -> str:
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         cons = dict(m.get("constraints", {}))
         cons.pop(name, None)
         return self._publish(
-            {**m, "constraints": cons}, expected_parent=base
+            {**m, "constraints": cons}, op="constraint", expected_parent=base
         )
 
-    def _enforce(
-        self, df: DataFrame, cons: dict[str, str] | None = None
-    ) -> None:
+    def _enforce(self, df: DataFrame, cons: dict[str, str]) -> None:
         """Raise on the first row violating any CHECK constraint. An
         early-exit scan per constraint (limit 1) over the frame about to
         be written — the same validation pass Delta runs, with the same
@@ -1315,12 +1315,6 @@ class ManifestTable:
         FALSE; NULL passes (a CDC tombstone's NULLed columns must not
         trip a value constraint — record-level strictness belongs to
         operators/validation.py's quarantine routing)."""
-        if cons is None:
-            cons = (
-                self._load_manifest().get("constraints", {})
-                if self.exists()
-                else {}
-            )
         for name, pred in cons.items():
             bad = df.filter(
                 ~F.coalesce(F.expr(pred), F.lit(True))
@@ -1351,8 +1345,7 @@ class ManifestTable:
         Reference behavior modeled: hard-delete semantics
         (target_snowflake/db_sync.py DELETE path) at fact-table scale.
         """
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         if not m["files"]:
             return 0
         if isinstance(condition, str):
@@ -1363,11 +1356,7 @@ class ManifestTable:
             # nothing matched: no publish, orphan dv dir is vacuum's to take
             return 0
         self._publish(
-            {
-                "partition_by": m["partition_by"],
-                "partition_types": m.get("partition_types", {}),
-                "files": self._attach_dv(m["files"], dv_files, counts),
-            },
+            {**m, "files": self._attach_dv(m["files"], dv_files, counts)},
             op="delete",
             expected_parent=base,
         )
@@ -1400,8 +1389,7 @@ class ManifestTable:
         semantics (transform_field family) applied in place to an
         already-loaded target table.
         """
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         if not m["files"]:
             return 0
         if isinstance(condition, str):
@@ -1438,11 +1426,7 @@ class ManifestTable:
         self._enforce(updated, m.get("constraints", {}))
         new_entries = self._write_files(updated, m["partition_by"])
         self._publish(
-            {
-                "partition_by": m["partition_by"],
-                "partition_types": m.get("partition_types", {}),
-                "files": kept + new_entries,
-            },
+            {**m, "files": kept + new_entries},
             op="update",
             expected_parent=base,
         )
@@ -1570,8 +1554,7 @@ class ManifestTable:
         unset columns).
         """
         from pipelinewise_spark.operators.sdc import SDC_DELETED_AT
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         self._enforce(batch, m.get("constraints", {}))
         pk = list(primary_keys)
         # a CDC micro-batch arrives as an unmaterialized source plan (JSON
@@ -1604,8 +1587,8 @@ class ManifestTable:
                 ).first()
                 spark.sparkContext.setJobDescription(None)
                 if isinstance(b["lo"], (int, float, str)):
-                    entries, _ = self.select_entries(
-                        ranges={pk[0]: (b["lo"], b["hi"])}
+                    entries = self._prune(
+                        m, ranges={pk[0]: (b["lo"], b["hi"])}
                     )
             superseded = 0
             dv_files: list[str] = []
@@ -1689,8 +1672,7 @@ class ManifestTable:
             spark.sparkContext.setJobDescription(None)
             self._publish(
                 {
-                    "partition_by": partition_by,
-                    "partition_types": m.get("partition_types", {}),
+                    **m,
                     "files": self._attach_dv(m["files"], dv_files, counts)
                     + new_entries,
                 },
@@ -1713,15 +1695,12 @@ class ManifestTable:
         policy is table metadata — it rides every publish like
         constraints do; deletes use deletion vectors, so the purge is
         answer-sized until compaction materializes it."""
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         m["retention"] = {"column": column, "keep_days": int(keep_days)}
         return self._publish(m, op="set-retention", expected_parent=base)
 
     def retention(self) -> dict[str, Any] | None:
-        if not self.exists():
-            return None
-        return self._load_manifest().get("retention")
+        return self._snapshot(missing_ok=True)[1].get("retention")
 
     def apply_retention(
         self, spark: SparkSession, as_of: str | None = None
@@ -1757,27 +1736,24 @@ class ManifestTable:
         keys), and the first MERGE that touches the table migrates legacy
         files into the new layout. New writes partition by the new spec
         immediately."""
-        m = self._load_manifest()
+        base, m = self._snapshot()
         partition_by = list(partition_by)
-        df = self.read(spark).limit(0)
+        df = self._read_entries(spark, m["files"], m).limit(0)
         fields = parse_partition_spec(partition_by)
         missing = [f_.source for f_ in fields if f_.source not in df.columns]
         if missing:
             raise ValueError(f"partition columns not in table: {missing}")
-        ptypes = {
-            f_.key: df.schema[f_.source].dataType.simpleString()
-            for f_ in fields
-            if not f_.hidden
-        }
-        self.partition_by = partition_by
-        return self._publish(
+        name = self._publish(
             {
+                **m,
                 "partition_by": partition_by,
-                "partition_types": ptypes,
-                "files": m["files"],
+                "partition_types": _partition_types(df.schema, partition_by),
             },
             op="set-partition-spec",
+            expected_parent=base,
         )
+        self.partition_by = partition_by
+        return name
 
     # -------------------------------------------------------------- bloom
     @staticmethod
@@ -1813,8 +1789,7 @@ class ManifestTable:
         round-trip); the positions land in ``entry["bloom"][col]`` as a
         sorted int list with the (m, k) parameters.
         """
-        base_snap = self.current_manifest_name()
-        mfest = self._load_manifest()
+        base, mfest = self._snapshot()
         entries = mfest["files"]
         # key entries by base-relative path, NOT basename: one task writing
         # several hive partitions emits the same part-NNNNN-<uuid> basename
@@ -1884,7 +1859,7 @@ class ManifestTable:
         # a long build over a stale file list must not silently revert a
         # merge/delete that landed mid-build (metadata verbs conflict-check
         # like data verbs; wrap in commit_with_retries to auto-rebuild)
-        self._publish(mfest, expected_parent=base_snap)
+        self._publish(mfest, op="bloom", expected_parent=base)
 
     @staticmethod
     def _bloom_maybe_contains(bloom: dict[str, Any], value: Any) -> bool:
@@ -1933,8 +1908,7 @@ class ManifestTable:
         are candidates — maintenance of a 100 TB table runs per
         day/tenant slice instead of all-or-nothing, and everything out
         of scope carries by reference untouched."""
-        base = self.current_manifest_name()
-        m = self._load_manifest()
+        base, m = self._snapshot()
         partition_by = m["partition_by"]
         groups: dict[tuple, list[dict[str, Any]]] = {}
         for e in m["files"]:
@@ -2047,11 +2021,7 @@ class ManifestTable:
         new_entries = self._write_files(df, partition_by)
         kept = [e for k, es in groups.items() if k not in frag for e in es]
         self._publish(
-            {
-                "partition_by": partition_by,
-                "partition_types": m.get("partition_types", {}),
-                "files": kept + new_entries,
-            },
+            {**m, "files": kept + new_entries},
             op="compact",
             expected_parent=base,
         )
@@ -2085,9 +2055,7 @@ class ManifestTable:
         # entries — copy each once)
         for dv in sorted({p for e in m["files"] for p in e.get("dv", [])}):
             self.mfs.copy_file(dv, dest.mfs, dv)
-        dest._publish(
-            {k: v for k, v in m.items()}
-        )
+        dest._publish(dict(m), op="clone")
         return dest
 
     def rollback_to(self, version: int) -> str:
@@ -2100,7 +2068,7 @@ class ManifestTable:
         stats) stays current — config is not data, matching Delta
         RESTORE. Raises if the target's files have already been vacuumed
         (rollback is only valid within the vacuum/expire horizon)."""
-        base = self.current_manifest_name()
+        base, cur = self._snapshot()
         try:
             m = self._load_manifest(version=version)
         except FileNotFoundError:
@@ -2118,6 +2086,7 @@ class ManifestTable:
             )
         return self._publish(
             {
+                **cur,
                 "partition_by": m["partition_by"],
                 "partition_types": m.get("partition_types", {}),
                 "files": m["files"],
@@ -2165,7 +2134,7 @@ class ManifestTable:
         chain: list[tuple[int, dict[str, Any]]] = []
         name = to_name
         while name and name != from_name:
-            v = int(name.split("-")[1].split(".")[0])
+            v = _version_of(name)
             m = self._load_manifest(version=v)
             chain.append((v, m))
             name = m.get("parent")
@@ -2310,7 +2279,7 @@ class ManifestTable:
             self.branch(b).current_manifest_name() for b in self.branches()
         ]:
             if name:
-                protected.add(int(name.split("-")[1].split(".")[0]))
+                protected.add(_version_of(name))
         expired = []
         for v in versions:
             if v in protected:
@@ -2392,13 +2361,13 @@ class ManifestTable:
         keep = set(versions[-keep_manifests:]) if keep_manifests else set()
         live_name = self.current_manifest_name()
         if live_name:
-            keep.add(int(live_name.split("-")[1].split(".")[0]))
+            keep.add(_version_of(live_name))
         # every branch head stays referenced until its ref is dropped —
         # vacuum must never collect a snapshot someone can still publish
         for b in self.branches():
             head = self.branch(b).current_manifest_name()
             if head:
-                keep.add(int(head.split("-")[1].split(".")[0]))
+                keep.add(_version_of(head))
         referenced: set[str] = set()
         referenced_dv: set[str] = set()
         for v in keep:
@@ -2433,8 +2402,10 @@ class ManifestTable:
         of rescanning. The analog of Delta/Iceberg ANALYZE + Iceberg's
         NDV puffin stats; per-FILE [min,max] skipping stats are collected
         separately at write time (`_file_stats`)."""
-        base = self.current_manifest_name()
-        df = self.read(spark)
+        base, m = self._snapshot()
+        # time travel to the snapshot: the stats describe exactly the
+        # files the commit carries
+        df = self.read(spark, version=_version_of(base))
         cols = [c for c in (cols or df.columns) if c in df.columns]
         dtypes = dict(df.dtypes)
         aggs: list[Any] = [F.count(F.lit(1)).alias("__rows")]
@@ -2468,23 +2439,21 @@ class ManifestTable:
                 for c in cols
             },
         }
-        mfest = self._load_manifest()
         # stamp with the manifest name THIS publish will create: the stats
         # describe the same data files that manifest references (a
         # stats-only publish advances the pointer without changing data),
         # so they are fresh for it — stamping the pre-publish name made a
         # brand-new ANALYZE read as stale in `status` (r6 ADVICE)
         stats["version"] = self._next_manifest_name()
-        mfest["table_stats"] = stats
         # conflict-check like the data verbs: the ANALYZE job can be long,
         # and publishing a stale file list would revert a concurrent commit
-        self._publish(mfest, expected_parent=base)
+        self._publish(
+            {**m, "table_stats": stats}, op="analyze", expected_parent=base
+        )
         return stats
 
     def table_stats(self) -> dict[str, Any] | None:
         """Last persisted ANALYZE output (None before the first analyze).
         ``stats["version"]`` names the manifest that was analyzed — a
         staleness check for readers when the table has advanced since."""
-        if not self.exists():
-            return None
-        return self._load_manifest().get("table_stats")
+        return self._snapshot(missing_ok=True)[1].get("table_stats")

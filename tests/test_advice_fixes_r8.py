@@ -179,7 +179,7 @@ def test_manifest_allocation_is_create_exclusive(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(ManifestTable, "_next_manifest_name", lambda self: name)
     t.mfs.write_text('{"files": []}', name)
     with pytest.raises(CommitConflict, match="racing writer"):
-        t._publish({"partition_by": [], "files": []})
+        t._publish({"partition_by": [], "files": []}, op="commit")
     assert t.mfs.read_text(name) == '{"files": []}', "racer's manifest clobbered"
 
 

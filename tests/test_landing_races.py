@@ -2,7 +2,9 @@
 read. Each test lets a second handle append row 9 between the first
 handle's read and its publish — as the first handle's write job starts,
 which is when Spark actually reads the rows being rewritten — and
-expects ``CommitConflict`` with row 9 still live, never a silent loss."""
+expects ``CommitConflict`` with row 9 still live, never a silent loss.
+The last-wins ``overwrite`` is the one verb that does not conflict; it
+commits only the constraints its rows were checked against."""
 
 from __future__ import annotations
 
@@ -21,19 +23,20 @@ from pipelinewise_spark.sources.singer import _write_segment
 _SCHEMA = "id long, v string"
 
 
-def _race(monkeypatch, table, racer) -> None:
-    """Run ``racer()`` once, just before ``table`` writes its first data
-    dir (between the rewrite's read and its publish)."""
-    real = ManifestTable._write_files
+def _race(monkeypatch, table, racer, method="_write_files") -> None:
+    """Run ``racer()`` once, just before ``table`` first calls ``method``
+    — by default as it writes its first data dir (between the rewrite's
+    read and its publish)."""
+    real = getattr(ManifestTable, method)
     raced = []
 
-    def write_after_race(self, df, partition_by):
+    def call_after_race(self, *args, **kwargs):
         if self is table and not raced:
             raced.append(True)
             racer()
-        return real(self, df, partition_by)
+        return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(ManifestTable, "_write_files", write_after_race)
+    monkeypatch.setattr(ManifestTable, method, call_after_race)
 
 
 def _ids(spark, root) -> list[int]:
@@ -126,3 +129,31 @@ def test_partial_sync_conflicts_on_a_racing_commit(
             start_value=2, end_value=2,
         )
     assert _ids(spark, root) == [1, 2, 9]
+
+
+def test_set_partition_spec_conflicts_on_a_racing_commit(
+    spark, root, monkeypatch
+):
+    t = ManifestTable(root)
+    _race(monkeypatch, t, _append_row_9(spark, root), method="_read_entries")
+    with pytest.raises(CommitConflict):
+        t.set_partition_spec(spark, ["v"])
+    assert _ids(spark, root) == [1, 2, 9]
+    assert ManifestTable(root)._load_manifest()["partition_by"] == []
+    assert t.partition_by == []
+
+
+def test_last_wins_overwrite_keeps_only_constraints_it_checked(
+    spark, root, monkeypatch
+):
+    t = ManifestTable(root)
+    _race(monkeypatch, t, lambda: ManifestTable(root).add_constraint(
+        spark, "no_bad", "v <> 'bad'"
+    ))
+    t.overwrite(spark.createDataFrame([(2, "bad")], _SCHEMA))
+    live = ManifestTable(root)
+    rows = live.read(spark)
+    for name, pred in live.constraints().items():
+        assert rows.filter(f"NOT ({pred})").count() == 0, name
+    assert live.constraints() == {}
+    assert sorted(tuple(r) for r in rows.collect()) == [(2, "bad")]

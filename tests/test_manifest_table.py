@@ -117,7 +117,7 @@ def test_compact_bounds_file_count_after_merges(spark, tmp_path):
     t.overwrite(d1)
     m1 = t._load_manifest()
     e2 = t._write_files(d2, ["pt"])
-    t._publish({**m1, "files": m1["files"] + e2})
+    t._publish({**m1, "files": m1["files"] + e2}, op="append")
     m = t._load_manifest()
     per_part = {}
     for e in m["files"]:

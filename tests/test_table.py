@@ -482,6 +482,45 @@ def test_recorded_schemas_follow_the_live_files(spark, tmp_path,
     assert fresh_read() == sorted(v1 + v2)
 
 
+def test_each_verb_reads_its_snapshot_once(spark, tmp_path, monkeypatch):
+    """A verb reads the pointer and the manifest it names once, and
+    ``_publish`` reads only the pointer, under the commit lock."""
+    schema = "id long, grp string, val double"
+    root = os.path.join(str(tmp_path), "t")
+    ManifestTable(root, ["grp"]).overwrite(
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema)
+    )
+    t = ManifestTable(root)
+    reads: list[str] = []
+    real = t.mfs.read_text
+
+    def counted(*rel):
+        reads.append(rel[-1])
+        return real(*rel)
+
+    monkeypatch.setattr(t.mfs, "read_text", counted)
+    batch = spark.createDataFrame([(2, "b", 20.0), (3, "c", 3.0)], schema)
+    verbs = {
+        "merge": lambda: t.merge(spark, batch, ["id"]),
+        "append": lambda: t.append(
+            spark.createDataFrame([(4, "a", 4.0)], schema)
+        ),
+        "delete_where": lambda: t.delete_where(spark, "id = 1"),
+        "merge_on_read": lambda: t.merge_on_read(spark, batch, ["id"]),
+        "overwrite": lambda: t.overwrite(batch),
+    }
+    for verb, run in verbs.items():
+        reads.clear()
+        run()
+        manifests = [r for r in reads if r.startswith("manifest-")]
+        pointers = [r for r in reads if r == "_VERSION"]
+        assert len(manifests) == 1, (verb, reads)
+        assert len(pointers) <= 2, (verb, reads)
+    assert sorted(
+        tuple(r) for r in t.read(spark).select("id", "grp", "val").collect()
+    ) == [(2, "b", 20.0), (3, "c", 3.0)]
+
+
 def test_tables_without_recorded_schemas_read_through_inference(
     spark, tmp_path, started_jobs
 ):
@@ -534,7 +573,7 @@ def test_merge_opening_a_partition_reads_no_footer(spark, tmp_path,
     )
     t = ManifestTable(root)
     slice_jobs = []
-    read = t.read
+    read = t._read_entries
 
     def counted(*args, **kwargs):
         before = started_jobs()
@@ -542,7 +581,7 @@ def test_merge_opening_a_partition_reads_no_footer(spark, tmp_path,
         slice_jobs.append(started_jobs() - before)
         return out
 
-    t.read = counted
+    t._read_entries = counted
     t.merge(spark, spark.createDataFrame([(3, "new", 3.0)], schema), ["id"])
     assert slice_jobs == [0]
     assert sorted(tuple(r) for r in ManifestTable(root).read(spark).select(

@@ -424,17 +424,22 @@ def test_update_where_on_hidden_transform_partitions(spark, tmp_path):
 
 # ----------------------- r7 code-review regressions (parent chain / CDF)
 def test_metadata_commits_keep_parent_chain_intact(spark, table):
-    """Constraint/retention/analyze publishes reuse the loaded manifest
-    dict; _publish must recompute parent/committed_at/operation or the
-    CDF walk wedges and commits inherit the prior commit's stamp."""
+    """Constraint/retention/bloom/analyze publishes reuse the loaded
+    manifest dict; _publish must recompute parent/committed_at/operation
+    or the CDF walk wedges and commits inherit the prior commit's stamp.
+    Each names its own operation."""
     table.merge(spark, _df(spark, 2).withColumn("v", F.lit(5.0)), ["k"])
     table.add_constraint(spark, "k_nn", "k IS NOT NULL")
     table.set_retention("v", keep_days=3650)
+    table.drop_constraint("k_nn")
+    table.add_bloom_filters(spark, ["k"])
+    table.analyze(spark)
     chain = {
         v: table._load_manifest(version=v) for v in table.versions()
     }
     assert [chain[v].get("operation") for v in sorted(chain)] == [
         "overwrite", "merge", "constraint", "set-retention",
+        "constraint", "bloom", "analyze",
     ]
     for v in sorted(chain)[1:]:
         assert chain[v]["parent"] == f"manifest-{v - 1:08d}.json"
